@@ -10,9 +10,11 @@ catalog jar, so the same contract is implemented on parquet directories:
   the pipeline after a crash redoes only uncommitted stages;
 - every commit appends per-partition rows to ``<workdir>/lineage/``:
   (run_id, stage, partition_id, rows, wall_ms, snapshot) — the audit
-  trail the north_rule requires; per-partition counts are computed
-  declaratively via ``spark_partition_id`` (one extra cheap aggregation,
-  no collect of data).
+  trail the north_rule requires. ``rows`` comes from the committed
+  files' parquet footers (metadata only, as Iceberg reads per-file
+  counts from its manifests) and ``partition_id`` is the partition of
+  the task that wrote the file, so a commit costs exactly one Spark job:
+  the stage write itself.
 
 Stage outputs are deterministic (engine rule: deterministic xxhash64 ids,
 no monotonically_increasing_id / Date.now in plans), so kill+resume yields
@@ -22,13 +24,36 @@ a bit-identical triple set — asserted in tests/test_resume.py.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import time
 import uuid
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from .schemas import LINEAGE
+
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
+
+
+def _footer_rows(path: str) -> dict[int, int]:
+    """Rows per writing task of a committed parquet directory, from the
+    file footers alone (no Spark job). Spark names each data file
+    ``part-<task partition>-...``; a task that rolled over into several
+    files contributes their sum."""
+    rows: dict[int, int] = {}
+    for name in sorted(os.listdir(path)):
+        m = _PART_FILE.match(name)
+        if m:
+            pid = int(m.group(1))
+            n = pq.read_metadata(os.path.join(path, name)).num_rows
+            rows[pid] = rows.get(pid, 0) + n
+    return rows
 
 
 class StageRunner:
@@ -115,25 +140,38 @@ class StageRunner:
         if os.path.exists(out):
             shutil.rmtree(out)
         os.rename(tmp, out)
+        self._append_lineage(stage, out, wall_ms)
+        # the built frame's schema is the written one: passing it skips
+        # the schema-inference job a bare read would run
+        return self.spark.read.schema(df.schema).parquet(out)
 
-        committed = self.spark.read.parquet(out)
-        lineage = (
-            committed.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").cast("long").alias("rows"))
-            .select(
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.col("partition_id"),
-                "rows",
-                F.lit(wall_ms).cast("long").alias("wall_ms"),
-                F.lit(os.path.basename(out)).alias("snapshot"),
-            )
+    def _append_lineage(self, stage: str, out: str, wall_ms: int) -> None:
+        """One small parquet file of per-partition rows for this commit,
+        written beside the data without Spark. It lands under a dot name
+        (Spark skips those) and is renamed into place, so a crash never
+        leaves a partial file that ``lineage()`` would read."""
+        rows = _footer_rows(out)
+        n = len(rows)
+        table = pa.Table.from_pydict(
+            {
+                "run_id": [self.run_id] * n,
+                "stage": [stage] * n,
+                "partition_id": list(rows),
+                "rows": list(rows.values()),
+                "wall_ms": [wall_ms] * n,
+                "snapshot": [os.path.basename(out)] * n,
+            },
+            schema=to_arrow_schema(LINEAGE),
         )
-        lineage.write.mode("append").parquet(self._lineage_dir())
-        return self.spark.read.parquet(out)
+        lin = self._lineage_dir()
+        os.makedirs(lin, exist_ok=True)
+        name = f"{self.run_id}-{stage}-{uuid.uuid4().hex[:8]}.parquet"
+        tmp = os.path.join(lin, "." + name)
+        pq.write_table(table, tmp)
+        os.rename(tmp, os.path.join(lin, name))
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(self._lineage_dir())
+        return self.spark.read.schema(LINEAGE).parquet(self._lineage_dir())
 
     def metrics(self) -> DataFrame:
         """Stage-level rollup: rows, partitions, wall time, rows/sec."""

@@ -34,7 +34,9 @@ def connected_components(
     max_iter: int = 25,
 ) -> DataFrame:
     """Label propagation CC. Input: undirected edge list (any orientation).
-    Output: (node, component) with component = min node id reachable."""
+    Output: (node, component) with component = min node id reachable.
+    Raises RuntimeError when labels still change after ``max_iter``
+    iterations, instead of returning unconverged components."""
     # The oriented edge list is materialized ONCE and the symmetrized
     # view is a lazy union over the checkpoint: written as
     # union(select(src,dst), select(dst,src)) over the raw `edges`, the
@@ -113,6 +115,11 @@ def connected_components(
                 ).alias("component"),
             )
         ).transform(stable_checkpoint)
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within max_iter={max_iter}"
+            " iterations; raise max_iter"
+        )
     return labels
 
 

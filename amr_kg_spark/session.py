@@ -66,12 +66,6 @@ def get_spark(
     return b.getOrCreate()
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-
-
 def _parse_byte_string(raw: str, default: int = 134217728) -> int:
     """Parse Spark size confs like ``128m`` / ``1g`` / ``134217728`` /
     ``64kb`` into bytes (Spark's JavaUtils.byteStringAsBytes semantics:

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from amr_kg_spark.operators.canonicalize import (
@@ -152,3 +153,11 @@ def test_cc_iterations_logarithmic_in_diameter(spark, monkeypatch):
     iters = (calls["n"] - 2 + 1) // 2
     bound = math.ceil(math.log2(n)) + 4  # doubling + convergence-confirm slack
     assert iters <= bound, f"{iters} iterations for diameter {n} (bound {bound})"
+
+
+def test_cc_raises_when_not_converged(spark):
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edges, max_iter=1)

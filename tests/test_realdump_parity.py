@@ -12,11 +12,21 @@ Pathogen/Skill nodes and their six edge types (436 dump edges)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from amr_kg_spark.realdata import (
     BASE_EDGE_TYPES,
+    REF_DATA,
     build_base_graph,
     fix_mojibake,
     load_dump_base_triples,
+)
+
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(REF_DATA),
+    reason=f"reference checkout not present ({REF_DATA})",
 )
 
 

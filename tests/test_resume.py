@@ -4,6 +4,7 @@ resume, identical triple set; lineage rows recorded per partition."""
 from __future__ import annotations
 
 import tempfile
+import uuid
 
 from amr_kg_spark.fixtures import synth_transcripts
 from amr_kg_spark.lineage import StageRunner
@@ -54,19 +55,140 @@ def test_resume_after_partial_run_yields_identical_triples(spark):
         assert by_stage["triples"] == {"resumed"}
 
 
+STAGES = (
+    "mentions", "mentions_flat", "pairs", "resolved", "nodes", "edges",
+    "triples", "nodes_canonical", "edges_canonical",
+)
+
+
 def test_lineage_partition_counts_sum_to_rows(spark):
     t = synth_transcripts(spark, n_turns=1000, n_convs=20)
     with tempfile.TemporaryDirectory() as w:
-        d = run_pipeline(spark, t, w, run_id="r1")
+        d = run_pipeline(spark, t, w, run_id="r1", canonicalize=True)
         lin = d["lineage"]
         got = {
             r.stage: r.total
             for r in lin.groupBy("stage").sum("rows").withColumnRenamed("sum(rows)", "total").collect()
         }
+        assert set(got) == set(STAGES)
+        for stage in STAGES:
+            stored = spark.read.parquet(f"{w}/stages/{stage}").count()
+            assert got[stage] == stored, stage
         assert got["triples"] == d["triples"].count()
-        assert got["nodes"] == d["nodes"].count()
+        assert got["nodes_canonical"] == d["nodes"].count()
         m = {r.stage: r.rows_per_sec for r in d["metrics"].collect()}
         assert all(v is not None for v in m.values())
+
+
+def test_stage_read_back_schema_equals_inferred(spark):
+    """The committed frame is read back under the built frame's schema
+    (no inference job); it must be exactly what inference would give."""
+    returned = {}
+
+    class Recording(StageRunner):
+        def run(self, stage, build):
+            returned[stage] = super().run(stage, build)
+            return returned[stage]
+
+    t = synth_transcripts(spark, n_turns=400, n_convs=10)
+    with tempfile.TemporaryDirectory() as w:
+        run_pipeline(
+            spark, t, runner=Recording(spark, w, "r1"), canonicalize=True
+        )
+        assert set(returned) == set(STAGES)
+        for stage, df in returned.items():
+            inferred = spark.read.parquet(f"{w}/stages/{stage}")
+            assert df.schema == inferred.schema, stage
+
+
+def test_empty_stage_commits_and_reads_back(spark):
+    with tempfile.TemporaryDirectory() as w:
+        runner = StageRunner(spark, w, run_id="e")
+        out = runner.run(
+            "empty", lambda: spark.range(0, 10).selectExpr("id", "'x' AS tag").limit(0)
+        )
+        assert runner.is_committed("empty")
+        assert out.count() == 0
+        assert out.schema == spark.read.parquet(f"{w}/stages/empty").schema
+        rows = [r.rows for r in runner.lineage().filter("stage = 'empty'").collect()]
+        assert sum(rows) == 0
+
+
+def test_lineage_reads_old_and_footer_files_under_schema(spark):
+    """A lineage dir written by the earlier Spark-aggregate commit path
+    and by the footer-derived path reads as one frame under LINEAGE."""
+    from pyspark.sql import functions as F
+
+    from amr_kg_spark.schemas import LINEAGE
+
+    with tempfile.TemporaryDirectory() as w:
+        runner = StageRunner(spark, w, run_id="new")
+        spark.range(0, 30, numPartitions=3).groupBy(
+            F.spark_partition_id().alias("partition_id")
+        ).agg(F.count("*").cast("long").alias("rows")).select(
+            F.lit("old").alias("run_id"),
+            F.lit("legacy").alias("stage"),
+            "partition_id",
+            "rows",
+            F.lit(5).cast("long").alias("wall_ms"),
+            F.lit("legacy").alias("snapshot"),
+        ).write.mode("append").parquet(f"{w}/lineage")
+        runner.run("ids", lambda: spark.range(0, 20, numPartitions=2))
+
+        lin = runner.lineage()
+        assert [(f.name, f.dataType) for f in lin.schema] == [
+            (f.name, f.dataType) for f in LINEAGE
+        ]
+        got = {
+            (r.run_id, r.stage): r.rows
+            for r in lin.groupBy("run_id", "stage").sum("rows")
+            .withColumnRenamed("sum(rows)", "rows").collect()
+        }
+        assert got == {("old", "legacy"): 30, ("new", "ids"): 20}
+        parts = {r.partition_id for r in lin.filter("stage = 'ids'").collect()}
+        assert parts == {0, 1}, "partition_id is the writing task's partition"
+        m = {r.stage: r.partitions for r in runner.metrics().collect()}
+        assert m == {"legacy": 3, "ids": 2}
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_stage_commit_is_one_spark_job(spark):
+    """Commit = the stage write only: footer-derived lineage and the
+    schema-known read-back add no Spark job."""
+    with tempfile.TemporaryDirectory() as w:
+        runner = StageRunner(spark, w, run_id="jobs")
+        jobs = _jobs_in_group(
+            spark,
+            f"commit-{uuid.uuid4().hex}",
+            lambda: runner.run("ids", lambda: spark.range(0, 1000, numPartitions=4)),
+        )
+        assert len(jobs) == 1, jobs
+
+
+# jobs a 500-turn run_pipeline(canonicalize=False) took with one-job
+# commits: the stage writes plus the shuffle stages adaptive execution
+# submits as jobs of their own. The earlier commit path took 39.
+PIPELINE_JOBS_500 = 9
+
+
+def test_pipeline_job_count_guard(spark):
+    t = synth_transcripts(spark, n_turns=500, n_convs=20)
+    with tempfile.TemporaryDirectory() as w:
+        jobs = _jobs_in_group(
+            spark,
+            f"pipeline-{uuid.uuid4().hex}",
+            lambda: run_pipeline(spark, t, w, run_id="jobs"),
+        )
+        assert len(jobs) <= PIPELINE_JOBS_500, len(jobs)
 
 
 def test_pipeline_with_canonicalization_stage(spark):
