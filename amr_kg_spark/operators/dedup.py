@@ -21,6 +21,8 @@ oracle SQL.
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -99,13 +101,40 @@ def exact_dedup(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame
     )
 
 
-def _prefix_len(sz: F.Column, t: float) -> F.Column:
-    """Prefix length ``sz - ceil(t*sz) + 1``. The ceil must be the
-    MATHEMATICAL ceiling: fp noise (t*sz = 7.000000000000001 for
-    exact-integer products) would shorten the prefix by one slot and break
-    the recall-1 theorem — round to 9dp before ceiling (epsilon-robust for
-    any realistic t, sz)."""
-    return sz - F.ceil(F.round(sz * F.lit(t), 9)) + 1
+def _ratio(t: float) -> tuple[str, str]:
+    """``t`` as the exact rational p/q of its decimal repr (``0.8`` ->
+    4/5, ``1/3`` -> 3333333333333333/10**16), as Spark SQL integer
+    literals: bigint while every product with a set size fits 64 bits,
+    decimal beyond. The threshold bounds below are integer arithmetic on
+    p and q, so no float rounding can move a bound by one slot."""
+    r = Fraction(str(t))
+    sfx = "L" if max(r.numerator, r.denominator) < 1 << 31 else "BD"
+    return f"{r.numerator}{sfx}", f"{r.denominator}{sfx}"
+
+
+def _prefix_len(sz: str, t: float) -> F.Column:
+    """Prefix length ``sz - ceil(t*sz) + 1`` for the SQL int expression
+    ``sz``, with the exact ceiling ``(p*sz + q - 1) div q``: a prefix one
+    slot short would break the recall-1 theorem."""
+    p, q = _ratio(t)
+    return F.expr(f"{sz} - ({p} * {sz} + {q} - 1) div {q} + 1")
+
+
+def _length_ok(t: float) -> F.Column:
+    """Length filter ``min(sz_a, sz_b) >= t * max(sz_a, sz_b)`` (a
+    Jaccard necessary condition) as ``q*min >= p*max``: a true pair at
+    exactly Jaccard = t passes."""
+    p, q = _ratio(t)
+    return F.expr(f"{q} * least(sz_a, sz_b) >= {p} * greatest(sz_a, sz_b)")
+
+
+def _overlap_bound(t: float) -> F.Column:
+    """Least overlap of a pair with Jaccard >= t:
+    ``ceil(t/(1+t) * (sz_a + sz_b))`` = ``ceil(p*(sz_a+sz_b) / (p+q))``."""
+    p, q = _ratio(t)
+    return F.expr(
+        f"({p} * sz_a + {p} * sz_b + {p} + {q} - 1) div ({p} + {q})"
+    )
 
 
 def ngram_jaccard_pairs(
@@ -188,7 +217,7 @@ def ngram_jaccard_pairs(
         prefix = base.select(
             "id",
             sz.alias("sz"),
-            F.posexplode(F.slice("hs", 1, _prefix_len(sz, t))).alias(
+            F.posexplode(F.slice("hs", 1, _prefix_len("size(hs)", t))).alias(
                 "pos", "sh"
             ),
         )
@@ -214,7 +243,7 @@ def ngram_jaccard_pairs(
             F.count("*").over(wall).cast("int").alias("sz"),
         )
         prefix = pos.filter(
-            F.col("pos") <= _prefix_len(F.col("sz"), t)
+            F.col("pos") <= _prefix_len("sz", t)
         ).select("id", "sz", (F.col("pos") - 1).alias("pos"), "sh")
         if hot_shingle_cap is not None:
             # capped universe: rebuild per-doc sets from filtered postings
@@ -242,20 +271,10 @@ def ngram_jaccard_pairs(
     # the old dropDuplicates already paid (measured 878k -> far fewer
     # reranked pairs at t=0.2, sf0.1; the filter is exact, no false
     # negatives, so the output is unchanged).
-    alpha = F.ceil(
-        F.round(
-            (F.col("sz_a") + F.col("sz_b")) * F.lit(t / (1.0 + t)), 9
-        )
-    )
     cands = (
         a.join(b, "sh")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            # epsilon slack: a true pair at exactly Jaccard = t satisfies
-            # min >= t*max mathematically; keep it under fp rounding too
-            F.least("sz_a", "sz_b").cast("double")
-            >= F.lit(t) * F.greatest("sz_a", "sz_b") - F.lit(1e-9)
-        )
+        .filter(_length_ok(t))
         .groupBy("id_a", "id_b", "sz_a", "sz_b")
         .agg(
             F.count("*").alias("__c"),
@@ -268,7 +287,7 @@ def ngram_jaccard_pairs(
                 F.col("sz_a") - F.col("__pa") - 1,
                 F.col("sz_b") - F.col("__pb") - 1,
             )
-            >= alpha
+            >= _overlap_bound(t)
         )
         .select("id_a", "id_b", "__c", "__pa", "__pb")
     )

@@ -33,7 +33,7 @@ encoding.
 Scale shape: training is a driver-side pass over a bounded sample
 (deterministic: lowest ids), like fitting any other small model (IVF's
 KMeans fits on a sample the same way). Counting is embarrassingly
-parallel: the merge table broadcasts once per executor, batches arrive
+parallel: the merge table ships in the UDF closure, batches arrive
 via Arrow, and the count is a projection — no exchange, no state. At
 100 TB you'd train the merge table once, persist it as JSON next to the
 corpus, and pass it to every job; ``merges_to_json``/``merges_from_json``
@@ -45,6 +45,7 @@ beyond-reference surface like the rest of the datapipe family).
 
 from __future__ import annotations
 
+import heapq
 import json
 import re
 from collections import Counter
@@ -89,7 +90,14 @@ def train_bpe(
     adjacent symbol pair across the (pre-tokenized, weighted) chunk
     vocabulary. Deterministic: ties break lexicographically, so the same
     sample always yields the same table. Returns the ordered merge list
-    (rank = position)."""
+    (rank = position).
+
+    Pair counts are maintained incrementally instead of rescanning the
+    vocabulary per merge: ``where`` maps each pair to the chunks that
+    may contain it, and a heap keyed ``(-count, pair)`` (the same order
+    as the tie-break above) holds every count ever set — an entry whose
+    count no longer matches ``counts`` is stale and skipped. A merge
+    re-counts only the chunks that contain the merged pair."""
     vocab: Counter[tuple[str, ...]] = Counter()
     for t in texts:
         if not t:
@@ -99,22 +107,29 @@ def train_bpe(
             if syms:
                 vocab[syms] += 1
 
+    words = [list(syms) for syms in vocab]
+    freq = list(vocab.values())
+    counts: Counter[tuple[str, str]] = Counter()
+    where: dict[tuple[str, str], set[int]] = {}
+    for w, syms in enumerate(words):
+        for pair in zip(syms, syms[1:]):
+            counts[pair] += freq[w]
+            where.setdefault(pair, set()).add(w)
+    heap = [(-c, pair) for pair, c in counts.items()]
+    heapq.heapify(heap)
+
     merges: list[tuple[str, str]] = []
-    for _ in range(num_merges):
-        pairs: Counter[tuple[str, str]] = Counter()
-        for syms, cnt in vocab.items():
-            for a, b in zip(syms, syms[1:]):
-                pairs[(a, b)] += cnt
-        if not pairs:
+    while len(merges) < num_merges and heap:
+        neg, best = heapq.heappop(heap)
+        if counts.get(best) != -neg:
+            continue
+        if -neg < min_pair_count:
             break
-        # most frequent; lexicographic tie-break for determinism
-        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        if best[1] < min_pair_count:
-            break
-        a, b = best[0]
+        a, b = best
         merged = a + b
-        new_vocab: Counter[tuple[str, ...]] = Counter()
-        for syms, cnt in vocab.items():
+        delta: Counter[tuple[str, str]] = Counter()
+        for w in where.pop(best):
+            syms = words[w]
             out = []
             i = 0
             while i < len(syms):
@@ -124,20 +139,34 @@ def train_bpe(
                 else:
                     out.append(syms[i])
                     i += 1
-            new_vocab[tuple(out)] += cnt
-        vocab = new_vocab
-        merges.append((a, b))
+            for pair in zip(syms, syms[1:]):
+                delta[pair] -= freq[w]
+            for pair in zip(out, out[1:]):
+                delta[pair] += freq[w]
+                where.setdefault(pair, set()).add(w)
+            words[w] = out
+        for pair, d in delta.items():
+            if d:
+                counts[pair] += d
+                if counts[pair]:
+                    heapq.heappush(heap, (-counts[pair], pair))
+                else:
+                    del counts[pair]
+        merges.append(best)
     return merges
 
 
-# Per-worker chunk-encoding memo cap. Encoding is a pure function of
+# Chunk-encoding memo cap. The memo lives in the UDF closure, which
+# PySpark unpickles afresh for every TASK, so it starts empty per task
+# (not per worker process) and reuse spans one task's partition stream —
+# fewer, larger tasks reuse more. Encoding is a pure function of
 # (chunk, ranks); natural text is Zipf-distributed, so frequent pretokens
 # dominate every batch — memoizing chunk->tokens turns the merge loop
 # into a dict hit for the bulk of the stream (measured 20.9x on the
 # sf0.1 corpus — its 61-chunk synthetic vocabulary flatters the ratio,
 # but Zipf reuse makes a large constant factor generic; adversarial
 # ALL-unique streams pay a measured +24% insert overhead, the honest
-# floor — BENCH/BASELINE.md round-8). The cap bounds worker memory;
+# floor — BENCH/BASELINE.md round-8). The cap bounds task memory;
 # clearing (not LRU) keeps the hit path a plain dict lookup.
 _CHUNK_CACHE_CAP = 1 << 20
 
@@ -153,9 +182,9 @@ def bpe_encode(
     in rank order — the property the tests check against.
 
     ``cache`` (optional) memoizes chunk -> encoded tokens across calls —
-    pass a per-worker dict owned by the SAME merge table; the UDFs below
-    hold one in their closure. Semantics-preserving by purity (asserted
-    against the uncached path in tests)."""
+    pass a dict owned by the SAME merge table; the UDFs below hold one in
+    their closure (a fresh copy per task). Semantics-preserving by purity
+    (asserted against the uncached path in tests)."""
     out: list[str] = []
     for chunk in _pretokenize(text):
         if cache is not None:
@@ -276,9 +305,10 @@ def bpe_token_ids(
     token-id sequence via ONE batched Arrow ``pandas_udf`` stage (same
     shipping model as :func:`bpe_token_count`: merge table + vocab ride
     the closure — ``num_merges`` pairs and ``|vocab|`` strings, both
-    tiny). NULL text encodes to NULL. A per-worker chunk memo rides the
-    closure too (Zipf reuse across the whole partition stream, not just
-    one Arrow batch — see ``_CHUNK_CACHE_CAP``)."""
+    tiny). NULL text encodes to NULL. A chunk memo rides the closure too:
+    unpickled with it once per task, it reuses encodings across the
+    task's whole partition stream, not just one Arrow batch (see
+    ``_CHUNK_CACHE_CAP``)."""
     from pyspark.sql.functions import pandas_udf
 
     ranks = merge_ranks(merges)

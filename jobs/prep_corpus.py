@@ -738,15 +738,21 @@ def main() -> None:
             write_training_shards(packed, dest, seqs_per_file=args.shard_size)
         else:
             packed.write.mode("overwrite").parquet(dest)
-        out = spark.read.parquet(dest)
         suffix = "_" + name if name else ""
-        counts["rows_out" + suffix] = out.count()
-        counts["n_sequences" + suffix] = (
-            out.select("seq_id").distinct().count()
+        # one aggregation over one scan of the export. countDistinct skips
+        # NULL values but a struct of a NULL field is not NULL, so a NULL
+        # seq_id still counts as one sequence
+        audit = (
+            spark.read.parquet(dest)
+            .agg(
+                F.count("*").alias("rows_out"),
+                F.countDistinct(F.struct("seq_id")).alias("n_sequences"),
+                F.sum("n_tokens").alias("total_tokens"),
+            )
+            .collect()[0]
         )
-        counts["total_tokens" + suffix] = (
-            out.agg(F.sum("n_tokens")).collect()[0][0]
-        )
+        for k, v in audit.asDict().items():
+            counts[k + suffix] = v
         if args.shard_size is not None:
             # the per-file index a training loader strides instead of
             # listing parquet footers, derived FROM the export itself and

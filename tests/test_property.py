@@ -367,3 +367,48 @@ def test_span_dedup_matches_reference_on_degenerate_corpora(
         for r in remove_duplicate_spans(frame, k=k).collect()
     }
     assert got == _ref_span_dedup(texts, k)
+
+
+_THRESHOLD = st.one_of(
+    # awkward values: fp products like 0.07*100 = 7.000000000000001 and
+    # non-terminating ratios such as 1/3
+    st.sampled_from([0.07, 0.1, 0.2, 0.3, 1.0 / 3.0, 0.5, 0.7, 0.8, 0.9, 1.0]),
+    st.floats(min_value=0.01, max_value=1.0),
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    t=_THRESHOLD,
+    sizes=st.lists(
+        st.tuples(st.integers(1, 10 ** 6), st.integers(1, 10 ** 6)),
+        min_size=1, max_size=30,
+    ),
+)
+def test_jaccard_join_bounds_are_exact(spark, t, sizes):
+    """The prefix length, the length filter and the positional overlap
+    bound of ngram_jaccard_pairs equal their exact values for the
+    rational t = Fraction(str(t)), for any threshold and set sizes."""
+    import math
+    from fractions import Fraction
+
+    from amr_kg_spark.operators.dedup import (
+        _length_ok, _overlap_bound, _prefix_len,
+    )
+
+    r = Fraction(str(t))
+    rows = (
+        spark.createDataFrame(sizes, "sz_a int, sz_b int")
+        .select(
+            "sz_a", "sz_b",
+            _prefix_len("sz_a", t).alias("prefix"),
+            _length_ok(t).alias("length_ok"),
+            _overlap_bound(t).alias("alpha"),
+        )
+        .collect()
+    )
+    for x in rows:
+        a, b = x.sz_a, x.sz_b
+        assert x.prefix == a - math.ceil(r * a) + 1, (t, a)
+        assert x.length_ok == (min(a, b) >= r * max(a, b)), (t, a, b)
+        assert x.alpha == math.ceil(r / (1 + r) * (a + b)), (t, a, b)

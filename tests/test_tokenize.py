@@ -6,6 +6,7 @@ threading into pack/mix/stats."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from hypothesis import given, settings, strategies as st
 
 from amr_kg_spark.operators.tokenize import (
     END_OF_WORD,
@@ -348,3 +349,121 @@ def test_build_vocab_specials_reserved():
     )
     with pytest.raises(ValueError):
         build_vocab(merges, specials=("<eod>",))  # unk must be id 0
+
+
+def _rescan_train_bpe(texts, num_merges, min_pair_count):
+    """Independent oracle for train_bpe: recount every adjacent pair of
+    the whole chunk vocabulary before each merge, take the most frequent
+    (lexicographic tie-break), merge it left to right without overlap."""
+    from collections import Counter
+
+    vocab = Counter(
+        _chunk_symbols(c) for t in texts if t for c in _pretokenize(t)
+    )
+    merges = []
+    for _ in range(num_merges):
+        pairs = Counter()
+        for syms, cnt in vocab.items():
+            for p in zip(syms, syms[1:]):
+                pairs[p] += cnt
+        if not pairs:
+            break
+        best, n = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        if n < min_pair_count:
+            break
+        a, b = best
+        nxt = Counter()
+        for syms, cnt in vocab.items():
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and (syms[i], syms[i + 1]) == best:
+                    out.append(a + b)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            nxt[tuple(out)] += cnt
+        vocab = nxt
+        merges.append(best)
+    return merges
+
+
+_BPE_TEXT = st.one_of(
+    st.text(alphabet="ab c.", max_size=16),
+    # runs ("aaaa"): overlapping pair occurrences, merged non-overlapping
+    st.builds(lambda ch, k: ch * k, st.sampled_from("ab"), st.integers(1, 12)),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    texts=st.lists(_BPE_TEXT, max_size=8),
+    num_merges=st.integers(0, 40),
+    min_pair_count=st.integers(1, 3),
+)
+def test_train_bpe_equals_rescan_oracle(texts, num_merges, min_pair_count):
+    """The incremental trainer returns the oracle's merge list, including
+    ties, runs, zero merges and merge counts past exhaustion."""
+    assert train_bpe(texts, num_merges, min_pair_count) == _rescan_train_bpe(
+        texts, num_merges, min_pair_count
+    )
+
+
+def test_train_bpe_equals_rescan_oracle_on_corpus(spark):
+    texts = _corpus_texts(spark)
+    assert train_bpe(texts, 256) == _rescan_train_bpe(texts, 256, 2)
+
+
+def _python_stage_tasks(spark, group):
+    """Tasks run by the stages of job group ``group`` whose operation
+    graph holds an ArrowEvalPython node."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+
+    def scopes(cluster):
+        names = [cluster.name()]
+        it = cluster.childClusters().iterator()
+        while it.hasNext():
+            names += scopes(it.next())
+        return names
+
+    tasks = 0
+    for job in tracker.getJobIdsForGroup(group):
+        for s in tracker.getJobInfo(job).stageIds:
+            info = tracker.getStageInfo(s)
+            root = store.operationGraphForStage(s).rootCluster()
+            if info is not None and "ArrowEvalPython" in scopes(root):
+                tasks += info.numCompletedTasks
+    return tasks
+
+
+def test_encode_stage_over_persisted_shuffle_is_coalesced(spark):
+    """A persisted DataFrame that ends in a shuffle keeps one partition
+    per shuffle partition unless AQE may coalesce cached plans; the BPE
+    encode stage reading it then runs one Python task per partition,
+    each paying PySpark's fixed per-task start-up cost."""
+    import uuid
+
+    from amr_kg_spark.operators.textprep import materialize_token_ids
+    from amr_kg_spark.operators.tokenize import build_vocab
+
+    texts = [f"doc {i % 17} says the quick brown fox {i}" for i in range(300)]
+    docs = (
+        spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+        .dropDuplicates(["text"])
+        .persist()
+    )
+    try:
+        assert docs.count() == len(texts)
+        merges = train_bpe(texts, num_merges=32)
+        vocab = build_vocab(merges, texts)
+        group = f"encode-{uuid.uuid4().hex}"
+        spark.sparkContext.setJobGroup(group, group)
+        materialize_token_ids(
+            docs, budget=64, merges=merges, vocab=vocab
+        ).write.format("noop").mode("overwrite").save()
+        tasks = _python_stage_tasks(spark, group)
+    finally:
+        docs.unpersist()
+    assert 0 < tasks < int(spark.conf.get("spark.sql.shuffle.partitions")), tasks
