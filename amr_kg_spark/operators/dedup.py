@@ -5,8 +5,8 @@ Four families, each with a different cost/recall point:
 - exact:      hash groupBy on the full text — one shuffle, exact.
 - n-gram Jaccard: EXACT set-similarity via a prefix-filtered inverted
   index (Vernica/Carey/Li, "Efficient Parallel Set-Similarity Joins Using
-  MapReduce", SIGMOD 2010) — candidates only from each doc's rare-first
-  prefix, so cost ~ sum(prefix-df^2) and hot shingles never enumerate.
+  MapReduce", SIGMOD 2010) — candidates only from each doc's prefix in
+  xxhash64 order, so only prefix shingles enter the candidate join.
 - MinHash-LSH: banded candidates (pyspark.ml MinHashLSH, or the
   Catalyst-native banding in :func:`minhash_pairs_native`) + EXACT
   rerank — the 100 TB path; candidate pairs ~ linear in corpus size and
@@ -35,21 +35,6 @@ def tokens_col(text_col: str = "text") -> F.Column:
     """Non-empty lowercase word tokens."""
     return F.filter(
         F.split(F.lower(F.col(text_col)), TOKEN_SPLIT), lambda t: t != ""
-    )
-
-
-def word_shingles(text_col: str = "text", n: int = 3) -> F.Column:
-    """Distinct n-word shingles (space-joined) — pure Catalyst.
-
-    NOTE: inline form — the token split is re-evaluated per shingle inside
-    the lambda (O(len^2)). Prefer :func:`with_word_shingles`, which
-    materializes the token array first (measured 10x faster at sf0.1)."""
-    toks = tokens_col(text_col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
     )
 
 
@@ -143,113 +128,59 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    hot_shingle_cap: int | None = None,
-    order: str = "hash",
 ) -> DataFrame:
     """EXACT n-gram Jaccard-similar pairs via a prefix-filtered inverted
     index (the MapReduce set-similarity join of Vernica/Carey/Li, SIGMOD'10
     — PPJoin-style prefix + length filters, re-expressed in DataFrame ops).
 
     Plan:
-      1. shingle + xxhash64 each doc (shuffle payload = longs, not strings);
-      2. pick a GLOBAL TOTAL ORDER of the shingle universe (see ``order``);
-      3. index ONLY each doc's prefix — the first ``sz - ceil(t*sz) + 1``
-         shingles in that order. Theorem: two sets with Jaccard >= t must
-         share a prefix element — and the theorem holds for ANY global
-         total order, so candidate recall is exactly 1 either way;
-      4. candidate pairs = prefix self-join + length filter
-         (min_sz >= t * max_sz, a Jaccard necessary condition);
-      5. exact rerank: array_intersect on the full per-doc shingle sets.
-
-    ``order`` picks the prefix order, a pure performance knob:
-
-    - ``"hash"`` (default): the xxhash64 value itself — the prefix is a
-      per-row ``slice(array_sort(hs))``, needing NO df aggregation, NO
-      join and NO window (measured 13.5s -> 7.8s at sf0.1). Right when
-      shingle document-frequency is near-uniform (natural-text n-grams:
-      almost all shingles are rare).
-    - ``"frequency"``: the classic rare-first (df, hash) order — costs a
-      df groupBy, a join and a window pass, but hot shingles sort to the
-      END of the order and drop out of most prefixes, minimizing the
-      candidate join (sum over prefix shingles of df^2). Right for
-      heavy-tailed/adversarial corpora (boilerplate, templates).
-
-    The optional ``hot_shingle_cap`` additionally drops shingles with
-    df > cap from the universe (an approximation knob for adversarial
-    corpora; default off so results match the exact oracle; implies
-    ``order="frequency"``). The cap list is tiny by construction (it is
-    the blocked list, NOT the keep list) and is applied via a broadcast
-    left_anti join.
+      1. shingle + xxhash64 each doc (shuffle payload = longs, not strings)
+         and store each doc's hash set ``hs`` sorted ascending;
+      2. the GLOBAL TOTAL ORDER of the shingle universe is the xxhash64
+         value itself, so a doc's prefix is ``slice(hs, 1, sz - ceil(t*sz)
+         + 1)`` — NO df aggregation, NO join and NO window (measured 13.5s
+         -> 7.8s at sf0.1 against a rare-first (df, hash) order).
+         Theorem: two sets with Jaccard >= t must share a prefix element,
+         for ANY global total order, so candidate recall is exactly 1;
+      3. candidate pairs = prefix self-join + length filter
+         (min_sz >= t * max_sz, a Jaccard necessary condition) + PPJoin
+         positional filter;
+      4. exact rerank: array_intersect on the shingle-set suffixes.
 
     The shingled base table is localCheckpoint'ed (eager): it feeds
-    several downstream branches (prefix index, both exact-rerank sides,
-    and for "frequency" the df counts) and, left lazy, Spark's
-    broadcast-subquery futures re-derive it from the raw scan — measured
-    2-4x the whole query's wall at sf0.1. On a cluster the equivalent is
-    persisting the tokenized corpus before the join, standard for
-    multi-pass set-similarity plans (a config point: executor-local
-    checkpoint blocks are lost on executor failure; production swaps this
-    for reliable checkpoint / a persisted table).
+    several downstream branches (prefix index and both exact-rerank
+    sides) and, left lazy, Spark's broadcast-subquery futures re-derive
+    it from the raw scan — measured 2-4x the whole query's wall at
+    sf0.1. On a cluster the equivalent is persisting the tokenized corpus
+    before the join, standard for multi-pass set-similarity plans (a
+    config point: executor-local checkpoint blocks are lost on executor
+    failure; production swaps this for reliable checkpoint / a persisted
+    table).
     """
     t = float(threshold)
-    if hot_shingle_cap is not None:
-        order = "frequency"
     # the degenerate-doc filter runs AFTER the checkpoint barrier: placed
     # before it, Catalyst pushes the predicate below the fan-out exchange,
     # inlining the entire shingle expression into a Filter evaluated on the
     # (single-task) scan side — measured 4s of serial compute at sf0.1
     # hs is stored ASCENDING-SORTED in the checkpoint (sort_array — the
     # native SortArray, not array_sort whose default comparator is an
-    # interpreted lambda per element pair): the "hash" prefix order then
-    # reads its prefix as a plain slice, where round 8 re-sorted the
-    # array in BOTH explode branches of the candidate self-join at query
-    # time. Order is invisible downstream (array_intersect and the
-    # "frequency" explode are set-wise).
+    # interpreted lambda per element pair): the prefix is then a plain
+    # slice instead of a re-sort in BOTH explode branches of the
+    # candidate self-join.
     base = (
         with_word_shingles(docs, text_col, n, out="__sh", hashed=True)
         .select(F.col(id_col).alias("id"), F.sort_array("__sh").alias("hs"))
         .transform(stable_checkpoint)
         .filter(F.size("hs") > 0)
     )
-
-    if order == "hash":
-        sz = F.size("hs")
-        prefix = base.select(
-            "id",
-            sz.alias("sz"),
-            F.posexplode(F.slice("hs", 1, _prefix_len("size(hs)", t))).alias(
-                "pos", "sh"
-            ),
-        )
-        sets = base.select("id", "hs")
-    else:
-        sh = base.select("id", F.explode("hs").alias("sh"))
-        dfreq = sh.groupBy("sh").agg(F.count("*").alias("df"))
-        if hot_shingle_cap is not None:
-            blocked = dfreq.filter(F.col("df") > hot_shingle_cap).select("sh")
-            sh = sh.join(F.broadcast(blocked), "sh", "left_anti")
-            dfreq = dfreq.filter(F.col("df") <= hot_shingle_cap)
-
-        # rare-first position of each shingle within its doc + doc set
-        # size, one window pass (single shuffle on id, single sort)
-        w = Window.partitionBy("id").orderBy("df", "sh")
-        wall = w.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        pos = sh.join(dfreq, "sh").select(
-            "id",
-            "sh",
-            F.row_number().over(w).alias("pos"),
-            F.count("*").over(wall).cast("int").alias("sz"),
-        )
-        prefix = pos.filter(
-            F.col("pos") <= _prefix_len("sz", t)
-        ).select("id", "sz", (F.col("pos") - 1).alias("pos"), "sh")
-        if hot_shingle_cap is not None:
-            # capped universe: rebuild per-doc sets from filtered postings
-            sets = sh.groupBy("id").agg(F.collect_list("sh").alias("hs"))
-        else:
-            sets = base.select("id", "hs")
+    prefix = base.select(
+        "id",
+        F.size("hs").alias("sz"),
+        F.posexplode(F.slice("hs", 1, _prefix_len("size(hs)", t))).alias(
+            "pos", "sh"
+        ),
+    )
+    sets = base.select("id", "hs")
 
     a = prefix.select(
         F.col("id").alias("id_a"), F.col("sz").alias("sz_a"),
@@ -294,26 +225,20 @@ def ngram_jaccard_pairs(
     paired = cands.join(
         sets.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a")), "id_a"
     ).join(sets.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b")), "id_b")
-    if order == "hash":
-        # Suffix-only rerank: in the hash order the prefix positions
-        # index the sorted ``hs`` arrays directly, and (same argument as
-        # the positional filter) every shared element is either one of
-        # the __c shared prefix elements or sits strictly after position
-        # __pa in A AND strictly after __pb in B. So
-        # |A∩B| = __c + |suffix_a ∩ suffix_b| — the candidate join
-        # already did the prefix part of the intersection; re-intersect
-        # only the tails (~(1-t)/(1+t) of each array) instead of the
-        # full arrays. Exact, bit-identical jaccard.
-        inter = F.col("__c") + F.size(
-            F.array_intersect(
-                F.slice("hs_a", F.col("__pa") + 2, F.size("hs_a")),
-                F.slice("hs_b", F.col("__pb") + 2, F.size("hs_b")),
-            )
+    # Suffix-only rerank: the prefix positions index the sorted ``hs``
+    # arrays directly, and (same argument as the positional filter)
+    # every shared element is either one of the __c shared prefix
+    # elements or sits strictly after position __pa in A AND strictly
+    # after __pb in B. So |A∩B| = __c + |suffix_a ∩ suffix_b| — the
+    # candidate join already did the prefix part of the intersection;
+    # re-intersect only the tails (~(1-t)/(1+t) of each array) instead
+    # of the full arrays. Exact, bit-identical jaccard.
+    inter = F.col("__c") + F.size(
+        F.array_intersect(
+            F.slice("hs_a", F.col("__pa") + 2, F.size("hs_a")),
+            F.slice("hs_b", F.col("__pb") + 2, F.size("hs_b")),
         )
-    else:
-        # frequency order: positions index the (df, sh) window order,
-        # not the stored arrays — full-array exact rerank
-        inter = F.size(F.array_intersect("hs_a", "hs_b"))
+    )
     union = F.size("hs_a") + F.size("hs_b") - inter
     return (
         paired.withColumn("jaccard", F.round(inter / union, 6))

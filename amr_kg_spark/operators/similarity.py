@@ -45,6 +45,54 @@ def _norm(x: F.Column) -> F.Column:
     return F.sqrt(_dot(x, x))
 
 
+def _cosine(x: F.Column, y: F.Column) -> F.Column:
+    return _dot(x, y) / (_norm(x) * _norm(y))
+
+
+def _l2sq(x: F.Column, c: list[float]) -> F.Column:
+    """Squared L2 distance from array column ``x`` to literal vector ``c``."""
+    carr = F.array(*[F.lit(float(v)) for v in c])
+    return F.aggregate(
+        F.zip_with(
+            x, carr, lambda p, q: (p.cast("double") - q) * (p.cast("double") - q)
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _rerank_topk(
+    cands: DataFrame, query_vec: list[float], k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact cosine top-k of ``cands`` against one literal query vector.
+    Sorts on the UNROUNDED cosine (tie-break vec_id), rounding only for
+    display — the oracle SQL orders by the unrounded expression, so rounding
+    before the sort could flip the k-boundary on 6dp ties."""
+    q = F.array(*[F.lit(float(v)) for v in query_vec])
+    return (
+        cands.select(
+            F.col(id_col).alias("vec_id"),
+            _cosine(F.col(vec_col), q).alias("_cos"),
+        )
+        .orderBy(F.col("_cos").desc(), F.col("vec_id").asc())
+        .limit(k)
+        .select("vec_id", F.round("_cos", 6).alias("cosine"))
+    )
+
+
+def _nearest_centroids(
+    query_vec: list[float], centroids: list[tuple[int, list[float]]], n_probe: int
+) -> list[int]:
+    """Ids of the ``n_probe`` centroids nearest the query (driver side,
+    squared L2; ties break on the smaller id)."""
+    q = np.asarray(query_vec, dtype=float)
+    scored = sorted(
+        (float(np.sum((q - np.asarray(c, dtype=float)) ** 2)), int(cid))
+        for cid, c in centroids
+    )
+    return [cid for _, cid in scored[:n_probe]]
+
+
 def cosine_topk(
     emb: DataFrame,
     query_vec: list[float],
@@ -55,23 +103,7 @@ def cosine_topk(
     """Exact top-k by cosine similarity; deterministic tie-break on id."""
     from ..session import fan_out
 
-    emb = fan_out(emb)
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    cos = _dot(F.col(vec_col), q) / (_norm(F.col(vec_col)) * _norm(q))
-    return _topk_by_cosine(
-        emb.select(F.col(id_col).alias("vec_id"), cos.alias("_cos")), k
-    )
-
-
-def _topk_by_cosine(scored: DataFrame, k: int) -> DataFrame:
-    """Top-k on the UNROUNDED cosine (tie-break vec_id), rounding only for
-    display — the oracle SQL orders by the unrounded expression, so rounding
-    before the sort could flip the k-boundary on 6dp ties."""
-    return (
-        scored.orderBy(F.col("_cos").desc(), F.col("vec_id").asc())
-        .limit(k)
-        .select("vec_id", F.round("_cos", 6).alias("cosine"))
-    )
+    return _rerank_topk(fan_out(emb), query_vec, k, id_col, vec_col)
 
 
 def rhp_signature(vec_col: str, hyperplanes: np.ndarray) -> F.Column:
@@ -141,11 +173,7 @@ def ivf_topk(
     probes = sorted(range(len(centers)), key=lambda i: dists[i])[:n_probe]
 
     cands = assigned.filter(F.col("cluster").isin(probes))
-    qcol = F.array(*[F.lit(float(v)) for v in query_vec])
-    cos = _dot(F.col(vec_col), qcol) / (_norm(F.col(vec_col)) * _norm(qcol))
-    return _topk_by_cosine(
-        cands.select(F.col(id_col).alias("vec_id"), cos.alias("_cos")), k
-    )
+    return _rerank_topk(cands, query_vec, k, id_col, vec_col)
 
 
 def assign_fixed_centroids(
@@ -160,23 +188,13 @@ def assign_fixed_centroids(
     the smaller cid). This is the production IVF pattern: the quantizer is
     pretrained, assignment happens at ingest, and the cluster id becomes
     the table's partition key."""
-
-    def l2sq(c: list[float]) -> F.Column:
-        carr = F.array(*[F.lit(float(v)) for v in c])
-        return F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                carr,
-                lambda p, q: (p.cast("double") - q) * (p.cast("double") - q),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     best = F.array_min(
         F.array(
             *[
-                F.struct(l2sq(c).alias("d"), F.lit(int(cid)).alias("cid"))
+                F.struct(
+                    _l2sq(F.col(vec_col), c).alias("d"),
+                    F.lit(int(cid)).alias("cid"),
+                )
                 for cid, c in centroids
             ]
         )
@@ -202,20 +220,10 @@ def ivf_topk_pretrained(
     from ..session import fan_out
 
     emb = fan_out(emb)
-    q = np.asarray(query_vec, dtype=float)
-    scored = sorted(
-        (float(np.sum((q - np.asarray(c, dtype=float)) ** 2)), int(cid))
-        for cid, c in centroids
-    )
-    probes = [cid for _, cid in scored[:n_probe]]
-
+    probes = _nearest_centroids(query_vec, centroids, n_probe)
     assigned = assign_fixed_centroids(emb, centroids, vec_col)
     cands = assigned.filter(F.col("cluster").isin(probes))
-    qcol = F.array(*[F.lit(float(v)) for v in query_vec])
-    cos = _dot(F.col(vec_col), qcol) / (_norm(F.col(vec_col)) * _norm(qcol))
-    return _topk_by_cosine(
-        cands.select(F.col(id_col).alias("vec_id"), cos.alias("_cos")), k
-    )
+    return _rerank_topk(cands, query_vec, k, id_col, vec_col)
 
 
 def rhp_ann_topk(
@@ -248,11 +256,7 @@ def rhp_ann_topk(
 
     sigged = emb.withColumn("sig", rhp_signature(vec_col, planes))
     cands = sigged.filter(F.col("sig").isin(probe_sigs))
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    cos = _dot(F.col(vec_col), q) / (_norm(F.col(vec_col)) * _norm(q))
-    return _topk_by_cosine(
-        cands.select(F.col(id_col).alias("vec_id"), cos.alias("_cos")), k
-    )
+    return _rerank_topk(cands, query_vec, k, id_col, vec_col)
 
 
 def write_ivf_table(
@@ -284,18 +288,9 @@ def ivf_table_topk(
     """Query the materialized IVF table: pick the n_probe nearest centroids
     on the driver (centroid list is tiny), scan ONLY their partitions,
     exact cosine rerank."""
-    q = np.asarray(query_vec, dtype=float)
-    scored = sorted(
-        (float(np.sum((q - np.asarray(c, dtype=float)) ** 2)), int(cid))
-        for cid, c in centroids
-    )
-    probes = [cid for _, cid in scored[:n_probe]]
+    probes = _nearest_centroids(query_vec, centroids, n_probe)
     cands = spark.read.parquet(path).filter(F.col("cluster").isin(probes))
-    qcol = F.array(*[F.lit(float(v)) for v in query_vec])
-    cos = _dot(F.col(vec_col), qcol) / (_norm(F.col(vec_col)) * _norm(qcol))
-    return _topk_by_cosine(
-        cands.select(F.col(id_col).alias("vec_id"), cos.alias("_cos")), k
-    )
+    return _rerank_topk(cands, query_vec, k, id_col, vec_col)
 
 
 def cosine_topk_join(
@@ -334,9 +329,7 @@ def cosine_topk_join(
     c = corpus.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__cv")
     ).filter(_norm(F.col("__cv")) > 0)
-    cos = _dot(F.col("__cv"), F.col("__qv")) / (
-        _norm(F.col("__cv")) * _norm(F.col("__qv"))
-    )
+    cos = _cosine(F.col("__cv"), F.col("__qv"))
     scored = c.crossJoin(F.broadcast(q)).select(
         "query_id", "vec_id", cos.alias("_cos")
     )
@@ -425,20 +418,10 @@ def ivf_topk_join(
     """
     from pyspark.sql import Window
 
-    def l2sq(c: list[float], col: F.Column) -> F.Column:
-        carr = F.array(*[F.lit(float(v)) for v in c])
-        return F.aggregate(
-            F.zip_with(
-                col, carr, lambda p, q: (p.cast("double") - q) * (p.cast("double") - q)
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     probe_structs = F.array(
         *[
             F.struct(
-                l2sq(c, F.col("__qv")).alias("d"), F.lit(int(cid)).alias("cid")
+                _l2sq(F.col("__qv"), c).alias("d"), F.lit(int(cid)).alias("cid")
             )
             for cid, c in centroids
         ]
@@ -464,9 +447,7 @@ def ivf_topk_join(
         )
         .filter(_norm(F.col("__cv")) > 0)
     )
-    cos = _dot(F.col("__cv"), F.col("__qv")) / (
-        _norm(F.col("__cv")) * _norm(F.col("__qv"))
-    )
+    cos = _cosine(F.col("__cv"), F.col("__qv"))
     scored = c.join(F.broadcast(q), "cluster").select(
         "query_id", "vec_id", cos.alias("_cos")
     )

@@ -44,9 +44,9 @@ def run_pipeline(
     duplicate nodes and repoints edges before the final tables (north_star
     canonicalization stage; a no-op when the vocabulary is already clean).
 
-    ``runner`` selects the persistence layer: the default parquet-dir
-    StageRunner(workdir), or a CatalogStageRunner for catalog-table
-    snapshots (both expose run/is_committed/lineage/metrics).
+    Stages commit through ``StageRunner(workdir)``. ``runner`` replaces
+    it with a caller-built instance, e.g. a subclass that wraps
+    ``run(stage, build)`` to time each stage.
     """
     if runner is None:
         if workdir is None:

@@ -176,14 +176,6 @@ def q_token_count(spark, sf):
     return X.token_count(_docs(spark, sf))
 
 
-def q_quality(spark, sf):
-    return X.quality_score(_docs(spark, sf))
-
-
-def q_lang_id(spark, sf):
-    return X.lang_id(_docs(spark, sf))
-
-
 # corpus-filter gates (strict profile — every signal + several reject
 # reasons get non-zero support at sf0.01: 237 kept / 263 rejected)
 CF_MIN_TOKENS = 5
@@ -271,10 +263,6 @@ def q_dedup_corpus(spark, sf):
         F.col("est_jaccard"),
     )
     return keep.unionByName(incr)
-
-
-def q_fingerprint(spark, sf):
-    return X.fingerprint(_docs(spark, sf))
 
 
 def q_text_basic(spark, sf):

@@ -133,23 +133,6 @@ def spark_xxhash64_long_sql(src: str, col: str, out: str) -> str:
     return stage(src, steps)
 
 
-def spark_xxhash64_longs_sql(src: str, cols: list[str], out: str) -> str:
-    """``F.xxhash64(c0, c1, ...)`` over multiple LongType columns — one
-    8-byte lane per argument, each value's hash seeding the next (Spark's
-    left-to-right chaining) — as a staged DuckDB query. Used to replay
-    LSH band hashes (``xxhash64(sig[j*r], ..., sig[j*r+r-1])``)."""
-    steps = xxh64_long_steps(
-        _as_u64(cols[0]), "CAST(42 AS UBIGINT)", f"{out}_c0"
-    )
-    prev = f"{out}_c0"
-    for k, c in enumerate(cols[1:], start=1):
-        name = f"{out}_c{k}"
-        steps += xxh64_long_steps(_as_u64(c), prev, name)
-        prev = name
-    steps.append((out, signed64(prev)))
-    return stage(src, steps)
-
-
 def spark_xxhash64_long_int_sql(src: str, col: str, int_lit: int, out: str) -> str:
     """``F.xxhash64(longcol, F.lit(i))`` — the long lane then the 4-byte
     int-literal lane chained on its result — as a staged DuckDB query."""

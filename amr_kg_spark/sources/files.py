@@ -197,19 +197,6 @@ def read_jdbc_sqlite(
     )
 
 
-def write_parquet_table(
-    df: DataFrame, path: str, partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Node/edge/triple table sink (S5 replacement — in production an
-    Iceberg ``writeTo(...).createOrReplace()``); partitioning column choice
-    is the physical design knob at 100 TB (e.g. edges by rel_type)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def read_jsonl(
     spark: SparkSession, path: str, schema: T.StructType | str
 ) -> DataFrame:

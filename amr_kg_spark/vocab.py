@@ -98,20 +98,8 @@ def sql_values(rows: list[tuple], cols: list[str]) -> str:
     return f"(VALUES {body}) AS t({', '.join(cols)})"
 
 
-def pathogen_sql() -> str:
-    return sql_values(PATHOGENS, ["pathogen", "ncbitaxon"])
-
-
-def strain_alias_sql() -> str:
-    return sql_values(STRAIN_ALIASES, ["alias", "canonical"])
-
-
 def compound_sql() -> str:
     return sql_values(
         COMPOUNDS,
         ["pref_name", "chembl_id", "pubchem_id", "spark_id", "drugcentral_id"],
     )
-
-
-def institute_sql() -> str:
-    return sql_values(INSTITUTES, ["id", "institute", "link", "projects"])

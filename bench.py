@@ -29,6 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from amr_kg_spark.session import get_spark  # noqa: E402
+from tools.capture_plans import HEADLINE, headline_queries  # noqa: E402
 
 # round-3 recorded per-query medians (BENCH_r03.json, sf0.1/local[32]) —
 # the regression guard's baseline: a round-4+ change must not silently
@@ -59,35 +60,6 @@ LATER_MEDIANS = {
 GUARD_MEDIANS = {**R3_MEDIANS, **LATER_MEDIANS}
 GUARD_FACTOR = 2.0
 
-HEADLINE = [
-    # flagship KG construction path
-    "kg_triples",
-    "kg_mentions",
-    "kg_reconstruct",
-    # relational / optimizer exercise
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5",
-    # training-data pipeline
-    "dp_ngram_jaccard",
-    "dp_simhash",
-    "dp_cosine_topk",
-    "dp_minhash_native",
-    "dp_token_count",
-    # end-to-end corpus-prep path (normalize->scrub->filter->dedup->pack),
-    # the LLM-pipeline counterpart of kg_triples (round-5 verdict item #5)
-    "dp_prep_corpus",
-    # BPE token-id materialization: the heaviest per-byte stage a real
-    # 100 TB run executes — its tokens/sec is the budget line item
-    # (round-7 verdict item #1). The BPE model trains once per process
-    # (driver-side, bounded sample) before the timed passes, mirroring the
-    # train-once / persist / reuse contract at scale.
-    "dp_token_ids",
-    # ExactSubstr duplicated-span removal at the production width (k=50):
-    # the corpus-wide substring dedup stage (round 8)
-    "dp_span_dedup",
-]
-
 
 def _run(df) -> None:
     df.write.format("noop").mode("overwrite").save()
@@ -98,27 +70,9 @@ def main() -> None:
     cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from amr_kg_spark.queries import all_queries
-    from amr_kg_spark.queries.datapipe import (
-        q_minhash_native,
-        q_prep_corpus,
-        q_span_dedup,
-        q_token_count,
-        q_token_ids,
-    )
-
-    queries, _ = all_queries()
-    # benched standalone; their driver-registry surfaces live inside the
-    # merged dp_minhash_pairs / dp_text_basic rows (q_prep_corpus composes
-    # operators that each carry their own registry oracle; q_token_ids'
-    # per-sequence values are oracle-checked in test_tokenize.py)
-    queries["dp_minhash_native"] = q_minhash_native
-    queries["dp_token_count"] = q_token_count
-    queries["dp_prep_corpus"] = q_prep_corpus
-    queries["dp_token_ids"] = q_token_ids
-    queries["dp_span_dedup"] = q_span_dedup
     spark = get_spark(app_name="amr-kg-bench", cores=cores)
     spark.sparkContext.setLogLevel("ERROR")
+    queries = headline_queries(spark, sf_dir)
 
     # warmup: JVM + Arrow + codegen paths
     _run(queries["kg_triples"](spark, sf_dir))

@@ -19,30 +19,48 @@ The job is resumable: re-submitting with the same --workdir skips committed
 stages (lineage in <workdir>/lineage). Output tables land under
 <workdir>/stages/{nodes,edges,triples}.
 
-Catalog-table persistence (--catalog-db): stages become catalog TABLES
-committed through a commit-log (amr_kg_spark/lineage.py
-CatalogStageRunner — the Iceberg snapshot protocol on whatever catalog
-the session has). With a PERSISTENT catalog, resume survives JVM
-restarts; verified end-to-end in this sandbox with the Hive metastore
-Spark ships (Derby-backed):
+Catalog tables (--catalog-db DB): after the build, every committed stage
+directory is registered as the external parquet table DB.<stage>, so SQL
+clients can query the graph by name. The tables point at the stage
+directories; with a persistent catalog (e.g. Spark's Derby-backed Hive
+metastore) they outlive the JVM:
 
     spark-submit --master 'local[8]' --py-files /tmp/amr_kg_spark.zip \
         --conf spark.sql.catalogImplementation=hive \
         --conf spark.driver.extraJavaOptions=-Dderby.system.home=<msdir> \
         --conf spark.sql.warehouse.dir=<msdir>/warehouse \
-        jobs/build_kg.py --synthetic 20000 \
-        --catalog-db kg --catalog-location <dbdir> --run-id a
+        jobs/build_kg.py --synthetic 20000 --workdir /tmp/kg_out --catalog-db kg
 
-    # resubmit (new JVM, new run-id): every stage resumes from the
-    # catalog — lineage shows ONLY the first run's id (measured: second
-    # submit = startup cost only)
+    # then: spark.table("kg.triples")
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
+
+
+def register_stage_tables(spark, workdir: str, database: str) -> list[str]:
+    """Register every committed stage under ``<workdir>/stages`` as the
+    external parquet table ``<database>.<stage>`` and return the table
+    names. Idempotent: a table that already exists is left as it is."""
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
+    root = os.path.abspath(os.path.join(workdir, "stages"))
+    tables = []
+    for stage in sorted(os.listdir(root)):
+        path = os.path.join(root, stage)
+        if stage.endswith(".inprogress") or not os.path.exists(
+            os.path.join(path, "_SUCCESS")
+        ):
+            continue
+        table = f"{database}.{stage}"
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {table} USING parquet LOCATION '{path}'"
+        )
+        tables.append(table)
+    return tables
 
 
 def main() -> None:
@@ -50,12 +68,14 @@ def main() -> None:
     ap.add_argument("--input", help="transcripts parquet path (conv_id, turn_idx, role, text, tool, ts)")
     ap.add_argument("--input-table", help="transcripts CATALOG table (e.g. an Iceberg table: catalog.db.transcripts) — the production input shape")
     ap.add_argument("--synthetic", type=int, default=0, help="generate N synthetic turns instead of --input")
-    ap.add_argument("--workdir", help="parquet-dir checkpoint root (default persistence)")
-    ap.add_argument("--catalog-db", help="persist stages as catalog TABLES in this database (CatalogStageRunner) instead of parquet dirs")
-    ap.add_argument("--catalog-location", help="explicit database location for --catalog-db")
+    ap.add_argument("--workdir", help="parquet-dir checkpoint root")
+    ap.add_argument("--catalog-db", help="also register each committed stage directory as an external table in this database")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--canonicalize", action="store_true")
     args = ap.parse_args()
+    if not args.workdir:
+        print("need --workdir (--catalog-db registers its stage dirs)", file=sys.stderr)
+        sys.exit(2)
 
     from pyspark.sql import SparkSession
 
@@ -75,21 +95,9 @@ def main() -> None:
         print("need --input, --input-table or --synthetic", file=sys.stderr)
         sys.exit(2)
 
-    runner = None
-    if args.catalog_db:
-        from amr_kg_spark.lineage import CatalogStageRunner
-
-        runner = CatalogStageRunner(
-            spark, database=args.catalog_db, run_id=args.run_id,
-            location=args.catalog_location,
-        )
-    elif not args.workdir:
-        print("need --workdir or --catalog-db", file=sys.stderr)
-        sys.exit(2)
-
     out = run_pipeline(
         spark, transcripts, args.workdir,
-        run_id=args.run_id, canonicalize=args.canonicalize, runner=runner,
+        run_id=args.run_id, canonicalize=args.canonicalize,
     )
     summary = {
         "triples": out["triples"].count(),
@@ -97,6 +105,8 @@ def main() -> None:
         "edges": out["edges"].count(),
         "stages": [r.stage for r in out["metrics"].select("stage").distinct().collect()],
     }
+    if args.catalog_db:
+        summary["tables"] = register_stage_tables(spark, args.workdir, args.catalog_db)
     print(json.dumps(summary))
     spark.stop()
 

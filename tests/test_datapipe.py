@@ -65,27 +65,6 @@ def test_ivf_topk_recall_and_pruning(spark):
     assert len(sizes) > 4 and max(r["count"] for r in sizes) < total / 2
 
 
-def test_ngram_jaccard_hot_shingle_cap(spark):
-    """The anti-skew cap drops hot shingles from the universe consistently
-    (postings AND rerank sets): with a cap below the planted boilerplate's
-    document frequency, pairs that share only hot shingles disappear while
-    genuinely-near docs survive."""
-    rows = [(i, "common boilerplate header tokens " + ("alpha beta gamma " * 3 if i < 2 else f"unique{i} filler{i} text{i} words{i} "))
-            for i in range(20)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    # uncapped: docs 0 and 1 are near-identical; everyone shares the header
-    full = {(r.id_a, r.id_b): r.jaccard
-            for r in D.ngram_jaccard_pairs(docs, n=3, threshold=0.9).collect()}
-    assert (0, 1) in full
-    # cap below the header's df (20): header shingles drop out of the
-    # universe; (0,1) still match on their shared non-hot shingles
-    capped = {(r.id_a, r.id_b): r.jaccard
-              for r in D.ngram_jaccard_pairs(
-                  docs, n=3, threshold=0.9, hot_shingle_cap=10).collect()}
-    assert (0, 1) in capped
-    assert set(capped) == {(0, 1)}
-
-
 def test_media_features_batch_shape(spark):
     media = M.synth_media(spark, SF_SMALL)
     feats = M.extract_features(media).collect()
@@ -180,22 +159,6 @@ def test_ivf_pretrained_full_probe_equals_bruteforce(spark):
     ]
 
 
-def test_ngram_prefix_order_invariance(spark):
-    """The prefix-filter theorem holds for ANY global total order, so the
-    hash-order and rare-first-frequency-order plans must produce identical
-    exact results."""
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    h = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in D.ngram_jaccard_pairs(docs, n=3, threshold=0.2, order="hash").collect()
-    }
-    f = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in D.ngram_jaccard_pairs(docs, n=3, threshold=0.2, order="frequency").collect()
-    }
-    assert h == f and len(h) > 0
-
-
 def test_dedup_keep_representatives(spark):
     """Corpus-level dedup: every near-dup cluster keeps exactly its min-id
     member; everything else passes through."""
@@ -230,8 +193,9 @@ def test_dedup_keep_representatives(spark):
 def test_ngram_jaccard_exactness_vs_bruteforce(spark, threshold):
     """EXACTNESS across awkward thresholds (incl. values where t*sz is an
     exact integer — the fp-ceiling edge): the prefix-filtered join must
-    equal the driver-side brute-force Jaccard on a seeded random corpus
-    with planted near-dups."""
+    equal the driver-side brute-force Jaccard on (a) a seeded random
+    corpus with planted near-dups and (b) a hot-key corpus — 20 docs that
+    share one boilerplate header, docs 0 and 1 near-identical."""
     import itertools
     import random
 
@@ -245,7 +209,12 @@ def test_ngram_jaccard_exactness_vs_bruteforce(spark, threshold):
     for i in range(3):
         base = docs[i][1]
         docs.append((100 + i, base + " extraword"))
-    df = spark.createDataFrame(docs, "doc_id long, text string")
+    boilerplate = [
+        (i, "common boilerplate header tokens " + (
+            "alpha beta gamma " * 3 if i < 2
+            else f"unique{i} filler{i} text{i} words{i} "))
+        for i in range(20)
+    ]
 
     def shingles(text, n=3):
         toks = [t for t in text.lower().split() if t]
@@ -253,22 +222,25 @@ def test_ngram_jaccard_exactness_vs_bruteforce(spark, threshold):
             return {" ".join(toks[0:n])} if toks else set()
         return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
 
-    sh = {i: shingles(t) for i, t in docs}
-    expected = set()
-    for (a, sa), (b, sb) in itertools.combinations(sorted(sh.items()), 2):
-        if not sa or not sb:
-            continue
-        j = len(sa & sb) / len(sa | sb)
-        if j >= threshold:
-            expected.add((a, b))
+    for corpus in (docs, boilerplate):
+        sh = {i: shingles(t) for i, t in corpus}
+        expected = set()
+        for (a, sa), (b, sb) in itertools.combinations(sorted(sh.items()), 2):
+            if not sa or not sb:
+                continue
+            j = len(sa & sb) / len(sa | sb)
+            if j >= threshold:
+                expected.add((a, b))
 
-    got = {
-        (r.id_a, r.id_b)
-        for r in D.ngram_jaccard_pairs(df, n=3, threshold=threshold).collect()
-    }
-    assert got == expected, (
-        f"t={threshold}: spark-only={got - expected}, missed={expected - got}"
-    )
+        df = spark.createDataFrame(corpus, "doc_id long, text string")
+        got = {
+            (r.id_a, r.id_b)
+            for r in D.ngram_jaccard_pairs(df, n=3, threshold=threshold).collect()
+        }
+        assert got == expected, (
+            f"t={threshold}: spark-only={got - expected}, missed={expected - got}"
+        )
+    assert (0, 1) in got
 
 
 def test_repetition_signals(spark):

@@ -3,6 +3,7 @@ resume, identical triple set; lineage rows recorded per partition."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 import uuid
 
@@ -204,120 +205,34 @@ def test_pipeline_with_canonicalization_stage(spark):
         assert d["edges"].count() > 0
 
 
-def test_catalog_runner_resume_and_partition_overwrite(spark):
-    """S5 on the session catalog: commit-log resume semantics, crash-before-
-    commit recovery, and idempotent overwrite-by-partition with version
-    bumps (the Iceberg snapshot protocol on the sandbox catalog)."""
-    import pyspark.sql.functions as F
-
-    from amr_kg_spark.lineage import CatalogStageRunner
+def test_register_stage_tables_one_table_per_committed_stage(spark):
+    """``build_kg.py --catalog-db``: every committed stage directory of
+    the workdir becomes the external table ``<db>.<stage>``; a second
+    registration is a no-op."""
+    from jobs.build_kg import register_stage_tables
 
     t = synth_transcripts(spark, n_turns=800, n_convs=10)
-    db = "amr_stages_test"
+    db = "kg_tables_test"
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    with tempfile.TemporaryDirectory() as loc:
-        runner = CatalogStageRunner(spark, database=db, run_id="r1", location=loc)
-
-        calls = {"n": 0}
-
-        def build():
-            calls["n"] += 1
-            return t.withColumn("part", (F.col("turn_idx") % 3).cast("int"))
-
-        out1 = runner.run("turns", build, partition_by=["part"])
-        n1 = out1.count()
-        assert calls["n"] == 1 and runner.is_committed("turns")
-        assert runner.committed_version("turns") == 1
-
-        # resume: committed stage read back, never recomputed
-        out2 = runner.run("turns", build, partition_by=["part"])
-        assert calls["n"] == 1 and out2.count() == n1
-
-        # crash-before-commit: data written, no commit row -> the stage is
-        # NOT committed; a resumed run recomputes idempotently (partition
-        # overwrite replaces, never appends)
-        crashed = CatalogStageRunner(
-            spark, database=db, run_id="crash", location=loc
-        )
-        assert crashed.is_committed("uncommitted_stage") is False
-        build().write.mode("overwrite").format("parquet").saveAsTable(
-            f"{db}.orphan"
-        )
-        calls["n"] -= 1  # that write was the simulated crash, not a build
-        assert spark.catalog.tableExists(f"{db}.orphan")
-        assert not crashed.is_committed("orphan"), (
-            "table existence must never imply committed"
-        )
-
-        # force: re-materialize a committed stage as a NEW version; dynamic
-        # partition overwrite keeps the row count stable (no duplicates)
-        out3 = runner.run("turns", build, partition_by=["part"], force=True)
-        assert calls["n"] == 2
-        assert out3.count() == n1, "partition overwrite must not duplicate rows"
-        assert runner.committed_version("turns") == 2
-
-        # lineage rows carry the snapshot version they audited
-        lin = runner.lineage()
-        vers = {r.version for r in lin.filter(F.col("stage") == "turns").collect()}
-        assert vers == {1, 2}
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-
-
-def test_catalog_runner_column_order_and_orphan_lineage(spark):
-    """Round-4 audit fixes:
-
-    1. insertInto matches columns by POSITION and saveAsTable(partitionBy)
-       moves the partition column to the END of the table schema — a
-       build() whose partition column is NOT last must still land aligned
-       on the force/resume path (name-based realignment in run()).
-    2. lineage rows are appended before the commit row; a crash between
-       the two leaves orphan audit rows tagged with a version the
-       recovery re-run mints again — lineage()/metrics() must not see
-       them (commit-gated semi-join)."""
-    import tempfile
-
-    import pyspark.sql.functions as F
-
-    from amr_kg_spark.lineage import CatalogStageRunner
-
-    db = "amr_stages_order_test"
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    with tempfile.TemporaryDirectory() as loc:
-        runner = CatalogStageRunner(spark, database=db, run_id="r1", location=loc)
-
-        # partition column 'part' FIRST, a value column after it
-        def build():
-            return spark.range(0, 30).select(
-                (F.col("id") % 3).cast("int").alias("part"),
-                (F.col("id") * 10).alias("val"),
+    with tempfile.TemporaryDirectory() as w:
+        d = run_pipeline(spark, t, w, run_id="tables")
+        # a crash between write and publish leaves an uncommitted dir
+        tmp = os.path.join(w, "stages", "pairs.inprogress")
+        os.makedirs(tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+        stages = sorted(r.stage for r in d["metrics"].collect())
+        tables = register_stage_tables(spark, w, db)
+        assert tables == [f"{db}.{s}" for s in stages]
+        def listed():
+            return sorted(
+                r.name for r in spark.catalog.listTables(db) if not r.isTemporary
             )
 
-        out1 = runner.run("ordered", build, partition_by=["part"])
-        expect = {(r.part, r.val) for r in build().collect()}
-        assert {(r.part, r.val) for r in out1.collect()} == expect
+        assert listed() == stages
+        assert spark.table(f"{db}.triples").count() == d["triples"].count()
 
-        # force re-run takes the insertInto path: values must stay aligned
-        # (positional insert would write val into part and vice versa)
-        out2 = runner.run("ordered", build, partition_by=["part"], force=True)
-        assert {(r.part, r.val) for r in out2.collect()} == expect
-        assert runner.committed_version("ordered") == 2
-
-        # orphan lineage: simulate the crash window by appending audit rows
-        # for a version that never got its commit row
-        orphan = spark.createDataFrame(
-            [("ghost", "ordered", 7, 999, 1, 3)],
-            "run_id string, stage string, partition_id int, rows long,"
-            " wall_ms long, version long",
-        ).select(  # match the lineage table column order
-            "run_id", "stage", "partition_id", "rows", "wall_ms", "version"
-        )
-        orphan.write.mode("append").format("parquet").saveAsTable(
-            runner._lineage()
-        )
-        lin = runner.lineage()
-        assert lin.filter("run_id = 'ghost'").count() == 0, (
-            "uncommitted audit rows must be invisible"
-        )
-        m = {r.stage: r.rows for r in runner.metrics().collect()}
-        assert m["ordered"] == 30, "metrics must not double-count versions"
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+        assert register_stage_tables(spark, w, db) == tables
+        assert listed() == stages
+        spark.sql(f"DROP DATABASE {db} CASCADE")
+        # dropping external tables leaves the stage data in place
+        assert spark.read.parquet(os.path.join(w, "stages", "triples")).count() > 0
