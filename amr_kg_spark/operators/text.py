@@ -223,10 +223,13 @@ def corpus_filter(
     literally a single pass; no self-joins, no exchanges before the
     consumer (plan-asserted in tests/test_plans.py). Gate order is the
     audit priority: too_short > repetitive > token_spam > low_quality >
-    wrong_lang (first failing gate names the reason)."""
+    wrong_lang (first failing gate names the reason). NULL text has NULL
+    ``n_tokens`` and is rejected as too_short."""
     sig = with_signals(docs, text_col)
     reason = (
-        F.when(F.col("n_tokens") < min_tokens, F.lit("too_short"))
+        F.when(
+            F.coalesce("n_tokens", F.lit(0)) < min_tokens, F.lit("too_short")
+        )
         .when(F.col("dup_ngram_ratio") > max_dup_ngram, F.lit("repetitive"))
         .when(F.col("top_token_ratio") > max_top_token, F.lit("token_spam"))
         .when(F.col("quality") < min_quality, F.lit("low_quality"))

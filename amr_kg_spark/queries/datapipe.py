@@ -518,34 +518,25 @@ def q_textprep(spark, sf):
 
 def q_prep_corpus(spark, sf):
     """Corpus-prep bench headline (round-5 verdict item #5): the
-    prep_corpus job's hot path — normalize -> PII scrub -> single-pass
-    quality gate -> exact near-dup dedup (keep min-id representatives) ->
-    pack into 2048-token sequences — composed WITHOUT the job's audit
-    persists, so the bench measures the raw end-to-end plan. Not a
-    registry row (the constituent operators each carry their own value
-    oracle; this entry exists to put a tracked wall-clock number on the
-    LLM-pipeline path, like kg_triples does for the KG path)."""
+    prep_corpus job's chain (``corpus.prep_corpus``) with its default
+    options — normalize -> PII scrub -> single-pass quality gate -> exact
+    near-dup dedup (keep min-id representatives) -> pack into 2048-token
+    sequences — run with a checkpoint at each stage boundary instead of
+    the job's persist+count, so it is the job minus its audits. Not a
+    registry row (the constituent operators each carry
+    their own value oracle; this entry exists to put a tracked wall-clock
+    number on the LLM-pipeline path, like kg_triples does for the KG
+    path)."""
+    from ..corpus import parse_args, prep_corpus
     from ..session import fan_out, stable_checkpoint
 
-    docs = fan_out(_docs(spark, sf))
-    cleaned = (
-        TP.scrub_pii(
-            TP.normalize_text(docs), text_col="text_norm", out_col="text_clean"
-        )
-        .drop("text")
-        .withColumnRenamed("text_clean", "text")
+    # the job's defaults; --input/--output are the job's sinks, unread here
+    args = parse_args(["--input", "", "--output", ""])
+    sides, _ = prep_corpus(
+        spark, fan_out(_docs(spark, sf)), args,
+        stage=lambda key, df: stable_checkpoint(df),
     )
-    # stage boundary, exactly like the job's persisted quality stage: left
-    # lazy, the reject_reason pushdown inlines the whole scrub+signal
-    # chain into the scan filter AND each signal lambda (measured 19
-    # copies of the scrub regexes in the plan, 5x the wall) — the
-    # checkpoint makes the cleaned+scored text evaluate once per row
-    sig = stable_checkpoint(X.corpus_filter(cleaned))
-    kept = sig.filter(F.col("reject_reason").isNull()).select(
-        "doc_id", "lang", "text", "n_tokens"
-    )
-    deduped = D.dedup_keep_representatives(kept, n=3, threshold=0.8, method="exact")
-    return TP.pack_sequences(deduped, budget=2048)
+    return sides[""]
 
 
 # bench-only BPE model cache: the merge table + vocab are a fixed,
@@ -962,7 +953,7 @@ sig AS (
        LEFT JOIN topc USING (doc_id)
 )
 SELECT sig.*,
-       CASE WHEN n_tokens < {CF_MIN_TOKENS} THEN 'too_short'
+       CASE WHEN coalesce(n_tokens, 0) < {CF_MIN_TOKENS} THEN 'too_short'
             WHEN dup_ngram_ratio > {CF_MAX_DUP_NGRAM} THEN 'repetitive'
             WHEN top_token_ratio > {CF_MAX_TOP_TOKEN} THEN 'token_spam'
             WHEN quality < {CF_MIN_QUALITY} THEN 'low_quality'

@@ -5,277 +5,50 @@ raw documents in, packed training sequences out, audit trail on the side:
         jobs/prep_corpus.py --input <documents parquet> \
         --output <packed parquet> [--rejects <dir>] \
         [--benchmark <eval parquet> [--decontam-n 13]] \
-        [--min-quality 0.2] [--lang en] [--dedup-threshold 0.8] \
+        [--min-quality 0.2] [--lang en] \
         [--lm-drop-bottom 0.05] [--semantic-dedup 0.95] \
         [--dedup-against <fp dir> [--emit-fingerprints <dir>]] \
-        [--sample lang=en:0.5,lang=de:0.25 | --mix lang=en:2e9,...] \
+        [--sample en:0.5,de:0.25 | --mix en:2e9,...] \
         [--budget 2048] [--shuffle-seed 42] [--materialize] \
         [--val-fraction 0.01 [--val-decontam 13]] \
         [--tokenizer bpe --bpe-merges 256 --bpe-sample 2000] \
         [--stage-dir <dir>]   # StageRunner checkpoint/resume + lineage
 
-Stage order (each a library operator, composed, nothing bespoke):
-
-  1. normalize_text         — one projection (control chars, whitespace)
-  2. scrub_pii              — one projection (+audit counts)
-  3. corpus_filter          — single-pass quality/lang/repetition gates
-  3.5 dedup_lines           — optional corpus-wide boilerplate-line dedup
-  3.7 unigram-LM cut        — optional cheap-LM quality tail drop
-  3.8 quality classifier    — optional trained-linear-model tail drop
-      (--quality-pos reference corpus; CCNet-style noisy negatives)
-  3.9 incremental_dedup     — optional drop of docs an earlier increment
-      already accepted (--dedup-against fingerprint state; the accepted
-      survivors' state re-emits via --emit-fingerprints)
-  4. dedup_keep_representatives — near-dup clusters -> keep min id
-  4.5 semantic dedup        — optional embedding-cosine near-dup removal
-      (featurize_text: deterministic text->vector, no external vectors)
-  5. decontaminate          — drop docs sharing n-grams with --benchmark
-  6. stratified_sample / mix_to_token_budget — deterministic mix
-      (--tokenizer bpe counts real subword tokens for the budgets)
-  6.5 split_corpus          — optional train/val split (+ val-side
-      decontamination of the training docs: the train/val-leakage guard)
-  7. pack_sequences         — budget-token streams (optionally shuffled);
-      --materialize assembles actual sequences (BPE token ids with
-      --tokenizer bpe: materialize_token_ids, encode-then-slice)
-
-Scale notes: stages 1-3 fuse into ONE scan-side projection (no exchange
-until dedup); dedup/decontam shuffle only hashes; sampling is a
-scan-side predicate; packing is one exchange + one window. Every
-decision (mix, order, bins) is a pure function of ids + seeds, so a
-re-run resumes to bit-identical sequences.
+The chain itself (stage order and options) is
+``amr_kg_spark.corpus.prep_corpus``; this job supplies its stage
+boundary — persist + count, or a ``StageRunner`` commit + count with
+``--stage-dir`` — and the sinks: the output write, the one-aggregation
+audit and, with ``--shard-size``, the reconciled shard manifest. The
+last stdout line is one JSON object of per-stage counts.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
 
 
-def _parse_kv(spec: str, cast) -> dict[str, float]:
-    out = {}
-    for item in spec.split(","):
-        if not item.strip():
-            continue
-        k, v = item.split(":")
-        k = k.split("=")[-1].strip()  # accept lang=en:0.5 or en:0.5
-        out[k] = cast(float(v))
-    return out
-
-
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--rejects", default=None)
-    ap.add_argument("--benchmark", default=None)
-    ap.add_argument("--decontam-n", type=int, default=13)
-    ap.add_argument("--min-tokens", type=int, default=5)
-    ap.add_argument("--max-dup-ngram", type=float, default=0.6)
-    ap.add_argument("--max-top-token", type=float, default=0.5)
-    ap.add_argument("--min-quality", type=float, default=0.2)
-    ap.add_argument("--lang", default=None, help="comma list; default: any")
-    ap.add_argument("--dedup-threshold", type=float, default=0.8)
-    ap.add_argument(
-        "--lm-drop-bottom", type=float, default=None, metavar="FRAC",
-        help="fit a unigram LM on the surviving corpus and drop the "
-        "bottom FRAC of documents by mean token logprob (CCNet-style "
-        "cheap-LM quality cut; threshold via approxQuantile)",
-    )
-    ap.add_argument(
-        "--quality-pos", default=None, metavar="POS_DIR",
-        help="train the linear quality classifier with POS_DIR (a curated "
-        "reference corpus parquet) as positives and THIS corpus as noisy "
-        "negatives (the CCNet trick), then drop the lowest-scoring tail",
-    )
-    ap.add_argument(
-        "--quality-drop-bottom", type=float, default=0.1, metavar="FRAC",
-        help="with --quality-pos: fraction of the corpus to drop from the "
-        "bottom of the classifier-logit distribution (approxQuantile cut)",
-    )
-    ap.add_argument(
-        "--semantic-dedup", type=float, default=None, metavar="COSINE",
-        help="ALSO drop embedding-cosine near-dups at this threshold, "
-        "using the deterministic text featurizer (no external vectors): "
-        "RHP-banded candidate pairs + exact rerank -> keep min-id rep",
-    )
-    ap.add_argument(
-        "--dedup-lines", type=int, default=None, metavar="MIN_CHARS",
-        help="corpus-wide line dedup before doc dedup; lines shorter than "
-        "MIN_CHARS are exempt",
-    )
-    ap.add_argument(
-        "--dedup-against", default=None, metavar="FP_DIR",
-        help="INCREMENTAL ingest: drop documents already present in the "
-        "corpus whose fingerprint table (corpus_fingerprints parquet) "
-        "lives at FP_DIR — exact for (id, fp) tables, minhash-estimate "
-        "for (id, sig) tables (schema auto-detected)",
-    )
-    ap.add_argument(
-        "--emit-fingerprints", default=None, metavar="DIR",
-        help="write the ACCEPTED documents' fingerprint table to DIR "
-        "(same method as the --dedup-against table, else exact) — union "
-        "it with the existing state for the next increment",
-    )
-    ap.add_argument("--sample", default=None, help="stratum:fraction list")
-    ap.add_argument("--mix", default=None, help="stratum:token-budget list")
-    ap.add_argument("--stratum-col", default="lang")
-    ap.add_argument("--budget", type=int, default=2048)
-    ap.add_argument("--num-bins", type=int, default=1024)
-    ap.add_argument("--shuffle-seed", type=int, default=None)
-    ap.add_argument(
-        "--materialize", action="store_true",
-        help="write the ASSEMBLED budget-token sequences (seq_tokens "
-        "arrays) instead of per-document packing coordinates: word-token "
-        "strings with --tokenizer whitespace, REAL BPE token ids "
-        "(array<int>, encode-then-slice boundaries) with --tokenizer bpe",
-    )
-    ap.add_argument(
-        "--eod", action="store_true",
-        help="with --materialize --tokenizer bpe: reserve an <eod> id in "
-        "the vocab and append it to every document's encoding (standard "
-        "document delimiter; counts against the budget)",
-    )
-    ap.add_argument(
-        "--boundaries", action="store_true",
-        help="with --materialize: also emit seq_doc_starts (in-sequence "
-        "document-segment start offsets — attention/loss-mask boundaries)",
-    )
-    ap.add_argument(
-        "--val-fraction", type=float, default=None, metavar="FRAC",
-        help="deterministic train/validation split before packing "
-        "(split_corpus id-hash predicate): output lands in "
-        "<output>/train and <output>/val",
-    )
-    ap.add_argument(
-        "--val-decontam", type=int, default=None, metavar="N",
-        help="with --val-fraction: ALSO drop training documents sharing "
-        "an N-gram with the validation side (guards against train/val "
-        "leakage through near-dups that survive the id-hash split — "
-        "near-identical docs land on both sides; val shingles broadcast)",
-    )
-    ap.add_argument(
-        "--shard-size", type=int, default=None, metavar="N",
-        help="write the output as ORDERED training shards (range-"
-        "partitioned + sorted by (pack_bin, seq_id), at most N rows per "
-        "parquet file) instead of arbitrary task-sized files",
-    )
-    ap.add_argument(
-        "--stage-dir", default=None,
-        help="persist every audited stage through the lineage StageRunner "
-        "(atomic publish + commit marker + lineage rows): a re-run with "
-        "the same dir resumes from committed stages instead of recomputing "
-        "the chain — the checkpoint/resume contract applied to corpus prep",
-    )
-    ap.add_argument(
-        "--tokenizer", choices=("whitespace", "bpe"), default="whitespace",
-        help="token-count basis for --mix/--budget: Catalyst word count "
-        "(default) or a BPE merge table trained on the corpus (real "
-        "subword counts via a batched Arrow UDF)",
-    )
-    ap.add_argument("--bpe-merges", type=int, default=256)
-    ap.add_argument("--bpe-sample", type=int, default=2000,
-                    help="lowest-id docs the BPE trainer reads (driver-side)")
-    ap.add_argument(
-        "--max-per-source", type=int, default=None, metavar="Q",
-        help="cap each source/domain at Q documents (largest cleaned "
-        "text first, ties by id — the Common-Crawl-style guard against "
-        "template-heavy domains dominating the mix); runs after "
-        "dedup/decontam, before sampling",
-    )
-    ap.add_argument(
-        "--cap-col", default="source",
-        help="stratum column for --max-per-source (default: source)",
-    )
-    ap.add_argument(
-        "--fim-rate", type=float, default=None, metavar="RATE",
-        help="fill-in-the-middle augmentation: rewrite RATE of the "
-        "TRAINING-side documents into PSM sentinel layout "
-        "(hash-deterministic selection + split points); whitespace "
-        "tokenizer only — a BPE vocab trained pre-FIM has no sentinel "
-        "merges, so token-budget packing would mis-count",
-    )
-    ap.add_argument("--fim-seed", type=int, default=4242)
-    ap.add_argument(
-        "--dedup-spans", type=int, default=None, metavar="K",
-        help="ExactSubstr duplicated-span removal (Lee et al. 2021): any "
-        "run of >= K tokens occurring more than once corpus-wide "
-        "survives only at its first occurrence; runs after line dedup, "
-        "before document-level dedup (prod: K=50)",
-    )
-    ap.add_argument(
-        "--cluster-balance", type=int, default=None, metavar="K",
-        help="SemDeDup-style topic balancing: featurize -> seeded KMeans "
-        "with K clusters -> keep at most --cluster-cap docs per cluster "
-        "(deterministic xxhash64(id, seed) pick order); runs after the "
-        "per-source quota, before sampling",
-    )
-    ap.add_argument("--cluster-cap", type=int, default=1000, metavar="M")
-    ap.add_argument("--cluster-seed", type=int, default=42)
-    ap.add_argument(
-        "--dsir-target", default=None, metavar="DIR",
-        help="DSIR importance resampling (Xie et al. 2023): fit "
-        "hashed-bigram bucket LMs on DIR (the target corpus parquet) vs "
-        "THIS corpus, then keep the --dsir-keep documents by Gumbel "
-        "top-n on the integer importance log-weight — a deterministic "
-        "sample proportional to exp(w) that skews the mix toward the "
-        "target distribution; runs after the per-source/cluster caps, "
-        "before sampling",
-    )
-    ap.add_argument("--dsir-keep", type=int, default=None, metavar="N")
-    ap.add_argument("--dsir-seed", type=int, default=1234)
-    ap.add_argument("--dsir-buckets", type=int, default=4096)
-    args = ap.parse_args()
-    if args.fim_rate is not None and args.tokenizer == "bpe":
-        raise SystemExit(
-            "--fim-rate requires --tokenizer whitespace (train BPE on the "
-            "FIM-transformed corpus with its sentinels as specials instead)"
-        )
-    if args.eod and not (args.materialize and args.tokenizer == "bpe"):
-        raise SystemExit(
-            "--eod appends a reserved token id: it requires "
-            "--materialize --tokenizer bpe"
-        )
-    if args.boundaries and not args.materialize:
-        raise SystemExit("--boundaries requires --materialize")
-    if args.dsir_target is not None and args.dsir_keep is None:
-        raise SystemExit("--dsir-target requires --dsir-keep N")
+    from amr_kg_spark.corpus import parse_args, prep_corpus
+
+    args = parse_args()
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     spark = SparkSession.builder.appName("prep-corpus").getOrCreate()
 
-    from amr_kg_spark.operators.dedup import (
-        decontaminate,
-        dedup_keep_representatives,
-        dedup_lines,
-        tokens_col,
-    )
-    from amr_kg_spark.operators.text import corpus_filter
-    from amr_kg_spark.operators.textprep import (
-        mix_to_token_budget,
-        normalize_text,
-        pack_sequences,
-        scrub_pii,
-        stratified_sample,
-    )
-
     docs = spark.read.parquet(args.input)
     counts = {"rows_in": docs.count()}
-    cached = []
     runner = None
     if args.stage_dir:
         from amr_kg_spark.lineage import StageRunner
 
         # Stage keys are NAMES; the fingerprint ties the whole stage dir to
-        # the exact parameters that produced its committed outputs. A
-        # re-run with the same dir but a different --input/--min-quality/
-        # --dedup-threshold/... would otherwise silently read back stale
-        # stage parquet computed under the OLD parameters (round-6 ADVICE
-        # #2). Sinks (--output/--rejects/--emit-fingerprints) don't feed
-        # any stage computation and may move between runs (round-7 ADVICE
-        # #4: emit_fingerprints is a pure sink too).
+        # the exact parameters that produced its committed outputs, so a
+        # re-run with different stage-feeding options refuses to resume
+        # instead of reading back stale stages (round-6 ADVICE #2). Sinks
+        # don't feed any stage computation and may move between runs.
         params = {
             k: v for k, v in sorted(vars(args).items())
             if k not in ("output", "rejects", "stage_dir",
@@ -283,452 +56,23 @@ def main() -> None:
         }
         runner = StageRunner(spark, args.stage_dir, params=params)
 
-    def checkpointed(df, key):
+    def stage(key, df):
         """Per-stage audit count WITHOUT recomputing the upstream chain:
         the counted frame is persisted, so the count materializes the
-        stage once and every downstream consumer reuses it (the 100 TB
-        alternative to counting is df.observe metrics riding the final
-        write; persist keeps the counts exact under the multi-branch
-        stages here). Unpersisted before exit.
-
-        With --stage-dir the stage instead routes through the lineage
-        StageRunner: atomic parquet publish + commit marker + lineage
-        row, and an already-committed stage is READ BACK rather than
-        recomputed — a crashed or killed run resumes mid-pipeline."""
-        if runner is not None:
-            out = runner.run(key, lambda: df)
-            counts[key] = out.count()
-            return out
-        df = df.persist()
+        stage once and every downstream consumer reuses it. With
+        --stage-dir the stage routes through the lineage StageRunner
+        instead (atomic publish + commit marker + lineage row); an
+        already-committed stage is READ BACK, so a crashed run resumes
+        mid-pipeline."""
+        df = runner.run(key, lambda: df) if runner else df.persist()
         counts[key] = df.count()
-        cached.append(df)
         return df
 
-    # 1+2: normalize + scrub compose into the same projection. With
-    # --dedup-lines, normalization must PRESERVE line structure: the
-    # default collapses "\n" into the whitespace run, so stage 3.5's
-    # split-on-"\n" would see one segment per document and line dedup
-    # would silently degenerate into whole-document exact dedup
-    # (round-6 ADVICE #1). preserve_newlines collapses only horizontal
-    # whitespace and canonicalizes \r\n|\r|U+2028|U+2029 to \n.
-    cleaned = scrub_pii(
-        normalize_text(docs, preserve_newlines=args.dedup_lines is not None),
-        text_col="text_norm", out_col="text_clean",
-    )
-    # downstream operators read the cleaned text
-    cleaned = cleaned.drop("text").withColumnRenamed("text_clean", "text")
-
-    # 3: single-pass quality gate (+ audit side-channel)
-    langs = (
-        [x.strip() for x in args.lang.split(",") if x.strip()]
-        if args.lang
-        else None
-    )
-    sig = corpus_filter(
-        cleaned,
-        min_tokens=args.min_tokens,
-        max_dup_ngram=args.max_dup_ngram,
-        max_top_token=args.max_top_token,
-        min_quality=args.min_quality,
-        langs=langs,
-    )
-    if args.rejects:
-        # persist the signal frame FIRST so the quality stage materializes
-        # once and both branches (rejects write + kept filter) reuse it —
-        # without this the rejects write evaluates the whole upstream
-        # chain a second time (round-5 ADVICE #1)
-        sig = sig.persist()
-        cached.append(sig)
-        sig.filter(F.col("reject_reason").isNotNull()).write.mode(
-            "overwrite"
-        ).parquet(args.rejects + "/quality")
-    kept = checkpointed(
-        sig.filter(F.col("reject_reason").isNull()).select(cleaned.columns),
-        "after_filter",
-    )
-
-    # 3.5: boilerplate line dedup (optional) — repeated banners/nav lines
-    # removed corpus-wide before document-level dedup sees the texts.
-    # The deduped frame goes through checkpointed() BEFORE the
-    # lines_dropped aggregate, so the two-shuffle dedup subtree
-    # materializes exactly once (the agg and the downstream doc-dedup both
-    # read the persisted stage — round-5 verdict item #3).
-    if args.dedup_lines is not None:
-        deduped = checkpointed(
-            dedup_lines(kept, min_chars=args.dedup_lines), "after_line_dedup"
-        )
-        counts["lines_dropped"] = int(
-            deduped.agg(F.sum("n_lines_dropped")).collect()[0][0] or 0
-        )
-        kept = deduped.drop("text", "n_lines_dropped").withColumnRenamed(
-            "text_deduped", "text"
-        )
-
-    # 3.6: duplicated-span removal (optional) — ExactSubstr: runs of
-    # >= K tokens occurring more than once corpus-wide survive only at
-    # their first (id, position) occurrence (Lee et al. 2021), cut BEFORE
-    # document-level dedup so repeated boilerplate spans can't hold
-    # near-dup similarity up between otherwise-distinct documents. Like
-    # line dedup, the cleaning is corpus-dependent by design; the rebuilt
-    # text is the space-joined surviving token stream (newlines — already
-    # consumed by line dedup when both flags are set — do not survive).
-    if args.dedup_spans is not None:
-        from amr_kg_spark.operators.dedup import remove_duplicate_spans
-
-        spanned = checkpointed(
-            remove_duplicate_spans(kept, k=args.dedup_spans),
-            "after_span_dedup",
-        )
-        counts["span_tokens_removed"] = int(
-            spanned.agg(F.sum("n_tokens_removed")).collect()[0][0] or 0
-        )
-        kept = spanned.drop(
-            "text", "n_tokens_kept", "n_tokens_removed", "n_spans_removed"
-        ).withColumnRenamed("text_deduped", "text")
-
-    # 3.7: cheap-LM quality cut (optional) — fit a unigram LM on the
-    # surviving corpus, drop the least corpus-typical tail by mean token
-    # logprob (CCNet-style; LM table broadcasts, one scoring join)
-    if args.lm_drop_bottom is not None:
-        from amr_kg_spark.operators.text import (
-            fit_unigram_lm,
-            unigram_logprob,
-        )
-
-        lm = fit_unigram_lm(kept)
-        # persisted BEFORE the quantile: scoring is an explode + broadcast
-        # join + per-doc re-aggregation over the whole surviving corpus,
-        # and both the quantile and the keep-filter read it — without the
-        # persist the corpus-scale scoring pass runs twice (round-7
-        # verdict item #3)
-        scores = (
-            unigram_logprob(kept, lm).select("doc_id", "lm_score").persist()
-        )
-        cached.append(scores)
-        thresh = scores.approxQuantile(
-            "lm_score", [args.lm_drop_bottom], 0.001
-        )[0]
-        keep_ids = scores.filter(F.col("lm_score") >= thresh).select("doc_id")
-        kept = checkpointed(
-            kept.join(keep_ids, "doc_id", "left_semi"), "after_lm_filter"
-        )
-
-    # 3.8: trained-classifier quality cut (optional) — fit the linear
-    # quality model driver-side (positives = the curated reference,
-    # negatives = a bounded sample of THIS corpus: the standard
-    # noisy-negative trick), score every doc in one Catalyst projection,
-    # drop the bottom tail by logit
-    if args.quality_pos is not None:
-        from amr_kg_spark.operators.featurize import (
-            fit_quality_classifier,
-            score_quality,
-        )
-
-        pos = spark.read.parquet(args.quality_pos)
-        weights = fit_quality_classifier(pos, kept)
-        # same double-eval shape as the LM stage: the quantile and the
-        # keep-filter both read the scored frame (scoring is only a
-        # projection over the persisted `kept`, but persisting it keeps
-        # the corpus passes at one per stage)
-        scored = score_quality(kept, weights).persist()
-        cached.append(scored)
-        q_thresh = scored.approxQuantile(
-            "quality_logit", [args.quality_drop_bottom], 0.001
-        )[0]
-        kept = checkpointed(
-            scored.filter(F.col("quality_logit") >= q_thresh).drop(
-                "quality_logit"
-            ),
-            "after_quality_clf",
-        )
-
-    # 3.9: incremental dedup (optional) — drop documents the corpus has
-    # ALREADY accepted in previous increments, using only its persisted
-    # fingerprint table (never the accepted text). Runs on the cleaned
-    # text, which is what --emit-fingerprints records, so increments of
-    # the SAME job compare in the same normalization space.
-    fp_method, fp_n, fp_k = "exact", 3, 32
-    if args.dedup_against:
-        from amr_kg_spark.operators.dedup import (
-            incremental_dedup,
-            read_fingerprint_meta,
-        )
-
-        state = spark.read.parquet(args.dedup_against)
-        # parameters come from the state's meta sidecar when it has one:
-        # fingerprints are pure functions of (normalization space, method,
-        # n, num_hashes), so an increment hashed under different
-        # parameters compares in a DIFFERENT space and re-crawls silently
-        # pass dedup (round-7 ADVICE #2). A state without a sidecar
-        # (externally built) falls back to schema inference + defaults.
-        meta = read_fingerprint_meta(spark, args.dedup_against)
-        if meta is not None:
-            fp_method, fp_n, fp_k = (
-                meta["method"], meta["n"], meta["num_hashes"]
-            )
-            preserve = args.dedup_lines is not None
-            if bool(meta["preserve_newlines"]) != preserve:
-                raise SystemExit(
-                    "--dedup-against state was fingerprinted with "
-                    f"preserve_newlines={meta['preserve_newlines']} (its "
-                    "emitting run's --dedup-lines setting) but this run "
-                    f"normalizes with preserve_newlines={preserve} — the "
-                    "two text spaces differ, so incremental dedup would "
-                    "silently miss re-crawls; match --dedup-lines between "
-                    "increments or rebuild the state"
-                )
-            # same-space check for duplicated-span removal (it rewrites
-            # the text before fingerprinting); sidecars written before
-            # the field existed don't carry it and fall through
-            if "spans_k" in meta and meta["spans_k"] != args.dedup_spans:
-                raise SystemExit(
-                    "--dedup-against state was fingerprinted with "
-                    f"--dedup-spans={meta['spans_k']} but this run uses "
-                    f"--dedup-spans={args.dedup_spans} — the two text "
-                    "spaces differ; match the flag between increments or "
-                    "rebuild the state"
-                )
-        else:
-            fp_method = "minhash" if "sig" in state.columns else "exact"
-        kept = checkpointed(
-            incremental_dedup(
-                kept, state, method=fp_method, n=fp_n, num_hashes=fp_k
-            ),
-            "after_incremental_dedup",
-        )
-
-    # 4: near-dup removal (clusters -> min-id representative)
-    kept = checkpointed(
-        dedup_keep_representatives(
-            kept, n=3, threshold=args.dedup_threshold, method="exact"
-        ),
-        "after_dedup",
-    )
-
-    # 4.5: semantic near-dup removal (optional) — embedding-cosine dedup
-    # driven entirely from raw text via the deterministic featurizer
-    if args.semantic_dedup is not None:
-        from amr_kg_spark.operators.featurize import semantic_neardup_pairs
-
-        sem_pairs = semantic_neardup_pairs(
-            kept, threshold=args.semantic_dedup
-        )
-        kept = checkpointed(
-            dedup_keep_representatives(kept, pairs=sem_pairs),
-            "after_semantic_dedup",
-        )
-
-    # 5: benchmark decontamination (optional)
-    if args.benchmark:
-        bench = spark.read.parquet(args.benchmark)
-        kept = checkpointed(
-            decontaminate(kept, bench, n=args.decontam_n), "after_decontam"
-        )
-
-    # accepted-state snapshot for the NEXT increment: everything that
-    # survived dedup/decontam (docs later dropped by sampling/mixing were
-    # still SEEN — a re-crawl of one should not re-enter tomorrow)
-    if args.emit_fingerprints:
-        from amr_kg_spark.operators.dedup import (
-            corpus_fingerprints,
-            write_fingerprint_meta,
-        )
-
-        corpus_fingerprints(
-            kept, method=fp_method, n=fp_n, num_hashes=fp_k
-        ).write.mode("overwrite").parquet(args.emit_fingerprints)
-        # the meta sidecar the NEXT increment's --dedup-against verifies
-        write_fingerprint_meta(
-            spark, args.emit_fingerprints, fp_method, num_hashes=fp_k,
-            n=fp_n, preserve_newlines=args.dedup_lines is not None,
-            spans_k=args.dedup_spans,
-        )
-        counts["fingerprints_emitted"] = (
-            spark.read.parquet(args.emit_fingerprints).count()
-        )
-
-    # 5.7: per-source quota cap (optional) — after dedup/decontam (and
-    # after the fingerprint snapshot: capped-out docs were still SEEN, so
-    # a re-crawl of one must not re-enter the next increment), before
-    # sampling. Ordering is by CLEANED text length desc (ties by id) — an
-    # integer total order, so the kept set reproduces exactly anywhere.
-    if args.max_per_source is not None:
-        from amr_kg_spark.operators.textprep import cap_per_stratum
-
-        kept = checkpointed(
-            cap_per_stratum(
-                kept.withColumn("__len", F.length("text")),
-                args.max_per_source,
-                stratum_col=args.cap_col,
-                order_col="__len",
-            ).drop("__len", "stratum_rank"),
-            "after_source_cap",
-        )
-
-    # 5.8: cluster-balanced subsetting (optional) — SemDeDup-style topic
-    # balancing over the deterministic featurizer's embedding space:
-    # seeded KMeans, then at most --cluster-cap docs per cluster picked
-    # in xxhash64(id, seed) order, so no single content mode dominates
-    # the mix regardless of how skewed the crawl is
-    if args.cluster_balance is not None:
-        from amr_kg_spark.operators.featurize import cluster_balanced_sample
-
-        kept = checkpointed(
-            cluster_balanced_sample(
-                kept,
-                n_clusters=args.cluster_balance,
-                per_cluster=args.cluster_cap,
-                seed=args.cluster_seed,
-            ).drop("cluster", "stratum_rank"),
-            "after_cluster_balance",
-        )
-
-    # 5.9: DSIR importance resampling (optional) — skew the surviving
-    # corpus toward a target distribution: two B-bucket histograms fit
-    # driver-side, integer micro-nat weights broadcast, Gumbel top-n
-    # selection (deterministic sampling proportional to exp(w))
-    if args.dsir_target is not None:
-        from amr_kg_spark.operators.featurize import (
-            dsir_select,
-            fit_dsir_weights,
-        )
-
-        tgt = spark.read.parquet(args.dsir_target)
-        dsir_w = fit_dsir_weights(
-            tgt, kept, num_buckets=args.dsir_buckets
-        )
-        kept = checkpointed(
-            dsir_select(
-                kept, dsir_w, n=args.dsir_keep, seed=args.dsir_seed
-            ).drop("dsir_logweight"),
-            "after_dsir",
-        )
-
-    # 6: deterministic mix (rate-based or token-budget-based)
-    if args.sample:
-        kept = checkpointed(
-            stratified_sample(
-                kept, _parse_kv(args.sample, float),
-                stratum_col=args.stratum_col,
-            ),
-            "after_sample",
-        )
-    # token-count basis for mixing + packing: whitespace (Catalyst) or a
-    # BPE merge table trained driver-side on a deterministic sample of the
-    # SURVIVING corpus (kept is persisted, so the sample reads cache)
-    merges = vocab = None
-    if args.tokenizer == "bpe":
-        from amr_kg_spark.operators.tokenize import (
-            build_vocab,
-            sample_texts,
-            train_bpe,
-            with_token_counts,
-        )
-
-        sample = sample_texts(kept, n=args.bpe_sample)
-        merges = train_bpe(sample, num_merges=args.bpe_merges)
-        specials = ("<unk>", "<eod>") if args.eod else ("<unk>",)
-        vocab = build_vocab(merges, sample, specials=specials)
-        counts["bpe_merges_trained"] = len(merges)
-        counts["bpe_vocab_size"] = len(vocab)
-        toks = with_token_counts(kept, counter="bpe", merges=merges)
-    else:
-        toks = kept.withColumn("n_tokens", F.size(tokens_col("text")))
-    if args.mix:
-        toks = checkpointed(
-            mix_to_token_budget(
-                toks, _parse_kv(args.mix, int), stratum_col=args.stratum_col
-            ),
-            "after_mix",
-        )
-
-    # 6.5: deterministic train/validation split (optional) — both sides
-    # are scan-side id-hash filters over the SAME surviving frame
-    # (disjoint + exhaustive by construction); with --val-decontam the
-    # training side additionally drops documents sharing an N-gram with
-    # the validation side (near-identical docs land on both sides of an
-    # id-hash split — the standard train/val-leakage guard)
-    if args.val_fraction is not None:
-        from amr_kg_spark.operators.textprep import split_corpus
-
-        train, val = split_corpus(toks, val_fraction=args.val_fraction)
-        train = checkpointed(train, "rows_train")
-        val = checkpointed(val, "rows_val")
-        if args.val_decontam is not None:
-            train = checkpointed(
-                decontaminate(train, val, n=args.val_decontam),
-                "after_val_decontam",
-            )
-        sides = {"train": train, "val": val}
-    else:
-        sides = {"": toks}
-
-    # 6.7: FIM augmentation (optional) — TRAINING side only (the val set
-    # must measure plain language modeling), after the split so the
-    # rewrite can't leak across it; token counts are recomputed on the
-    # transformed text (the sentinels tokenize, so they count against
-    # the packing budget exactly as they will at training time)
-    if args.fim_rate is not None:
-        from amr_kg_spark.operators.textprep import fim_transform
-
-        for side_name in list(sides):
-            if side_name == "val":
-                continue
-            fimmed = checkpointed(
-                fim_transform(
-                    sides[side_name], rate=args.fim_rate, seed=args.fim_seed
-                ),
-                "after_fim" + ("_" + side_name if side_name else ""),
-            )
-            counts["fim_rewritten"] = fimmed.filter(
-                F.col("fim_applied")
-            ).count()
-            sides[side_name] = (
-                fimmed.drop(
-                    "text", "fim_applied", "fim_prefix_len", "fim_middle_len"
-                )
-                .withColumnRenamed("fim_text", "text")
-                .withColumn("n_tokens", F.size(tokens_col("text")))
-            )
-
-    # 7: pack into training sequences — coordinates by default, or the
-    # assembled budget-token sequences themselves with --materialize
-    # (word-token strings, or real BPE token ids when --tokenizer bpe)
-    def pack(side):
-        if args.materialize and args.tokenizer == "bpe":
-            from amr_kg_spark.operators.textprep import materialize_token_ids
-
-            return materialize_token_ids(
-                side.drop("n_tokens"),
-                budget=args.budget,
-                merges=merges,
-                vocab=vocab,
-                num_bins=args.num_bins,
-                shuffle_seed=args.shuffle_seed,
-                eod_id=vocab["<eod>"] if args.eod else None,
-                with_boundaries=args.boundaries,
-            )
-        if args.materialize:
-            from amr_kg_spark.operators.textprep import materialize_sequences
-
-            return materialize_sequences(
-                side.drop("n_tokens"),
-                budget=args.budget,
-                token_col=None,
-                num_bins=args.num_bins,
-                shuffle_seed=args.shuffle_seed,
-                with_boundaries=args.boundaries,
-            )
-        return pack_sequences(
-            side,
-            budget=args.budget,
-            num_bins=args.num_bins,
-            shuffle_seed=args.shuffle_seed,
-        )
-
-    for name, side in sides.items():
+    sides, chain_counts = prep_corpus(spark, docs, args, stage)
+    counts.update(chain_counts)
+    for name, packed in sides.items():
         dest = args.output + ("/" + name if name else "")
-        packed = pack(side)
+        suffix = "_" + name if name else ""
         if args.shard_size is not None:
             from amr_kg_spark.sources.files import (
                 shard_manifest,
@@ -738,7 +82,6 @@ def main() -> None:
             write_training_shards(packed, dest, seqs_per_file=args.shard_size)
         else:
             packed.write.mode("overwrite").parquet(dest)
-        suffix = "_" + name if name else ""
         # one aggregation over one scan of the export. countDistinct skips
         # NULL values but a struct of a NULL field is not NULL, so a NULL
         # seq_id still counts as one sequence
@@ -754,39 +97,31 @@ def main() -> None:
         for k, v in audit.asDict().items():
             counts[k + suffix] = v
         if args.shard_size is not None:
-            # the per-file index a training loader strides instead of
-            # listing parquet footers, derived FROM the export itself and
-            # published under the same root (underscore prefix = invisible
-            # to plain parquet reads of dest). The audit totals must
-            # reconcile exactly with the data counts above — a manifest
-            # that disagrees with its export is worse than none (round-7
-            # verdict item #4).
-            man = shard_manifest(spark, dest)
-            man.write.mode("overwrite").parquet(dest + "/_manifest")
+            # the per-file index a training loader strides, derived FROM
+            # the export and published under its root (underscore prefix =
+            # invisible to plain parquet reads of dest); its totals must
+            # reconcile exactly with the audit above (round-7 verdict #4)
+            shard_manifest(spark, dest).write.mode("overwrite").parquet(
+                dest + "/_manifest"
+            )
             magg = (
                 spark.read.parquet(dest + "/_manifest")
-                .agg(
-                    F.sum("n_rows").alias("r"),
-                    F.sum("n_tokens").alias("t"),
-                    F.count("*").alias("f"),
-                )
+                .agg(F.count("*"), F.sum("n_rows"), F.sum("n_tokens"))
                 .collect()[0]
             )
-            counts["manifest_files" + suffix] = magg["f"]
-            counts["manifest_rows" + suffix] = magg["r"]
-            counts["manifest_tokens" + suffix] = magg["t"]
-            if magg["r"] != counts["rows_out" + suffix] or (
-                magg["t"] != counts["total_tokens" + suffix]
+            for k, v in zip(("files", "rows", "tokens"), magg):
+                counts[f"manifest_{k}{suffix}"] = v
+            if (magg[1], magg[2]) != (
+                counts["rows_out" + suffix], counts["total_tokens" + suffix]
             ):
                 raise SystemExit(
                     f"shard manifest for {dest} does not reconcile with "
-                    f"the export: manifest rows/tokens {magg['r']}/"
-                    f"{magg['t']} vs data {counts['rows_out' + suffix]}/"
+                    f"the export: manifest rows/tokens {magg[1]}/{magg[2]} "
+                    f"vs data {counts['rows_out' + suffix]}/"
                     f"{counts['total_tokens' + suffix]}"
                 )
     print(json.dumps(counts))
-    for df in cached:
-        df.unpersist()
+    spark.catalog.clearCache()
     spark.stop()
 
 

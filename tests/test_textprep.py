@@ -483,7 +483,7 @@ def test_pack_sequences_shuffle_seed(spark):
 def test_prep_corpus_job_end_to_end(tmp_path):
     """jobs/prep_corpus.py: the full raw-docs -> packed-sequences pipeline
     in a fresh JVM — stage counts monotone, side-channel written, output
-    packed within budget."""
+    packed within budget, --mix cut to its token budget."""
     import json
     import os
     import subprocess
@@ -509,6 +509,7 @@ def test_prep_corpus_job_end_to_end(tmp_path):
         capture_output=True, text=True, env=env, timeout=300,
     )
     assert pre.returncode == 0, pre.stderr[-2000:]
+    mix_budget = 4000
     r = subprocess.run(
         [
             sys.executable, os.path.join(repo, "jobs", "prep_corpus.py"),
@@ -516,7 +517,8 @@ def test_prep_corpus_job_end_to_end(tmp_path):
             "--output", out, "--rejects", rej,
             "--benchmark", bench, "--decontam-n", "8",
             "--min-quality", "0.4", "--lang", "en",
-            "--sample", "en:0.9", "--budget", "512", "--shuffle-seed", "13",
+            "--sample", "en:0.9", "--mix", f"en:{mix_budget}",
+            "--budget", "512", "--shuffle-seed", "13",
             "--tokenizer", "bpe", "--bpe-merges", "64",
             "--semantic-dedup", "0.95", "--lm-drop-bottom", "0.05",
         ],
@@ -528,10 +530,16 @@ def test_prep_corpus_job_end_to_end(tmp_path):
     )
     chain = ["rows_in", "after_filter", "after_lm_filter", "after_dedup",
              "after_semantic_dedup", "after_decontam",
-             "after_sample", "rows_out"]
+             "after_sample", "after_mix", "rows_out"]
     vals = [stats[k] for k in chain]
     assert vals == sorted(vals, reverse=True), stats
     assert stats["rows_out"] > 0 and stats["total_tokens"] > 0
+    # the en stratum's packed tokens reach its mix budget (the boundary
+    # document is kept) unless the stratum runs out first
+    assert (
+        stats["total_tokens"] >= mix_budget
+        or stats["after_mix"] == stats["after_sample"]
+    ), stats
     assert stats["bpe_merges_trained"] > 0, "BPE counter must be active"
     assert os.path.isdir(rej + "/quality")
 

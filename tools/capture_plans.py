@@ -29,9 +29,10 @@ def headline_queries(spark, sf_dir):
 
     queries, _ = all_queries()
     # benched standalone; their driver-registry surfaces live inside the
-    # merged dp_minhash_pairs / dp_text_basic rows (q_prep_corpus composes
-    # operators that each carry their own registry oracle; q_token_ids'
-    # per-sequence values are oracle-checked in test_tokenize.py)
+    # merged dp_minhash_pairs / dp_text_basic rows (q_prep_corpus runs the
+    # prep_corpus job's chain, whose operators each carry their own
+    # registry oracle; q_token_ids' per-sequence values are oracle-checked
+    # in test_tokenize.py)
     queries["dp_minhash_native"] = q_minhash_native
     queries["dp_token_count"] = q_token_count
     queries["dp_prep_corpus"] = q_prep_corpus
@@ -55,8 +56,10 @@ HEADLINE = [
     "dp_cosine_topk",
     "dp_minhash_native",
     "dp_token_count",
-    # end-to-end corpus-prep path (normalize->scrub->filter->dedup->pack),
-    # the LLM-pipeline counterpart of kg_triples (round-5 verdict item #5)
+    # end-to-end corpus-prep path: corpus.prep_corpus with the job's
+    # defaults (normalize->scrub->filter->dedup->pack) and a checkpoint per
+    # stage boundary, the LLM-pipeline counterpart of kg_triples (round-5
+    # verdict item #5)
     "dp_prep_corpus",
     # BPE token-id materialization: the heaviest per-byte stage a real
     # 100 TB run executes — its tokens/sec is the budget line item
