@@ -7,10 +7,17 @@ Four families, each with a different cost/recall point:
   index (Vernica/Carey/Li, "Efficient Parallel Set-Similarity Joins Using
   MapReduce", SIGMOD 2010) — candidates only from each doc's prefix in
   xxhash64 order, so only prefix shingles enter the candidate join.
-- MinHash-LSH: banded candidates (pyspark.ml MinHashLSH, or the
-  Catalyst-native banding in :func:`minhash_pairs_native`) + EXACT
-  rerank — the 100 TB path; candidate pairs ~ linear in corpus size and
-  the output equals the exact join whenever banding recall is 1.
+- MinHash-LSH: Catalyst-native banding (:func:`minhash_pairs_native`)
+  + EXACT rerank — the 100 TB path; candidate pairs ~ linear in corpus
+  size and the output equals the exact join whenever banding recall is 1.
+  The signature (``_minhash_signature``, also :func:`corpus_fingerprints`),
+  the band keys (``_band_keys``, also :func:`incremental_matches`) and
+  the exact rerank (``_jaccard_rerank``, also :func:`ngram_jaccard_pairs`)
+  are each written once. Short strings (entity names) block on
+  character n-grams through pyspark.ml instead
+  (:func:`char_ngram_lsh_pairs`, the same join ``linking.fuzzy_link``
+  runs): at name-table size the Catalyst banding found the same pairs
+  with more Spark jobs and a slower wall.
 - SimHash:    64->32-bit locality-sensitive fingerprint from md5 token
   hashes — fully expressible in Catalyst (and in the DuckDB oracle),
   hamming-bucketable for near-dup blocking.
@@ -222,9 +229,6 @@ def ngram_jaccard_pairs(
         )
         .select("id_a", "id_b", "__c", "__pa", "__pb")
     )
-    paired = cands.join(
-        sets.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a")), "id_a"
-    ).join(sets.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b")), "id_b")
     # Suffix-only rerank: the prefix positions index the sorted ``hs``
     # arrays directly, and (same argument as the positional filter)
     # every shared element is either one of the __c shared prefix
@@ -239,69 +243,31 @@ def ngram_jaccard_pairs(
             F.slice("hs_b", F.col("__pb") + 2, F.size("hs_b")),
         )
     )
+    return _jaccard_rerank(cands, sets, threshold, inter)
+
+
+def _jaccard_rerank(
+    cands: DataFrame,
+    sets: DataFrame,
+    threshold: float,
+    inter: F.Column | None = None,
+) -> DataFrame:
+    """EXACT Jaccard rerank of candidate pairs ``(id_a, id_b, ...)``:
+    rejoin both sides' shingle-hash sets from ``sets`` ``(id, hs)`` and
+    keep ``round(|A∩B| / |A∪B|, 6) >= threshold`` as
+    ``(id_a, id_b, jaccard)``. ``inter`` replaces the full
+    ``array_intersect`` size with a cheaper exact ``|A∩B|`` expression
+    over ``hs_a``/``hs_b`` and the candidate columns (the suffix-only
+    form of :func:`ngram_jaccard_pairs`)."""
+    paired = cands.join(
+        sets.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a")), "id_a"
+    ).join(sets.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b")), "id_b")
+    if inter is None:
+        inter = F.size(F.array_intersect("hs_a", "hs_b"))
     union = F.size("hs_a") + F.size("hs_b") - inter
     return (
         paired.withColumn("jaccard", F.round(inter / union, 6))
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hash_tables: int = 8,
-    max_dist: float = 0.5,
-) -> DataFrame:
-    """Jaccard pairs via pyspark.ml MinHash banding + EXACT rerank.
-
-    approxSimilarityJoin blocks candidate pairs by LSH band (~linear in
-    corpus size — the 100 TB path); the output similarity is then the
-    EXACT shingle-set Jaccard (array_intersect), filtered at
-    ``1 - max_dist``. False positives never surface; when banding recall
-    is 1 (true pairs well above the threshold — guaranteed for identical
-    sets, probability (1-j)^numHashTables of missing a pair at Jaccard j
-    otherwise) the result equals the exact similarity join, which is what
-    the driver's exact-SQL oracle checks.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    base = (
-        with_word_shingles(docs, text_col, n, out="shingles")
-        .select(F.col(id_col).alias("id"), "shingles")
-        .transform(stable_checkpoint)  # barrier BEFORE the filter (see
-        .filter(F.size("shingles") > 0)  # ngram_jaccard_pairs note)
-    )
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True
-    )
-    feats = tf.transform(base)
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
-    )
-    model = lsh.fit(feats)
-    # the est_dist prefilter is Jaccard distance over the 2^18-hashed
-    # feature space — near-exact; the rerank below makes the output exact
-    pairs = model.approxSimilarityJoin(feats, feats, max_dist, distCol="est_dist")
-    cands = (
-        pairs.filter(F.col("datasetA.id") < F.col("datasetB.id"))
-        .select(
-            F.col("datasetA.id").alias("id_a"),
-            F.col("datasetB.id").alias("id_b"),
-        )
-        .dropDuplicates()
-    )
-    sets = base.select("id", "shingles")
-    joined = cands.join(
-        sets.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a"
-    ).join(sets.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        joined.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= 1.0 - max_dist)
         .select("id_a", "id_b", "jaccard")
     )
 
@@ -316,21 +282,16 @@ def char_ngram_lsh_pairs(
 ) -> DataFrame:
     """MinHash-LSH similar pairs on CHARACTER n-grams — the right granularity
     for short strings (entity names), where word shingles degenerate.
-    Used by KG canonicalization for the similarity self-join."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    from .linking import char_ngrams_expr
+    Used by KG canonicalization for the similarity self-join; returns
+    ``(id_a, id_b, est_jaccard)`` with ``id_a < id_b``; ``est_jaccard``
+    is the Jaccard of the 2^18-hashed gram sets (callers rerank on the
+    gram sets themselves)."""
+    from .linking import _char_gram_lsh_join, char_ngrams_expr
 
     base = df.select(
         F.col(id_col).alias("id"), F.expr(char_ngrams_expr(text_col, n)).alias("grams")
     ).filter(F.size("grams") > 0)
-    tf = HashingTF(inputCol="grams", outputCol="features", numFeatures=1 << 18, binary=True)
-    feats = tf.transform(base)
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
-    )
-    model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, max_dist, distCol="dist")
+    pairs = _char_gram_lsh_join(base, base, num_hash_tables, max_dist)
     return (
         pairs.filter(F.col("datasetA.id") < F.col("datasetB.id"))
         .select(
@@ -398,6 +359,7 @@ def embedding_neardup_pairs(
     Cosine = zip_with dot / norms, all Catalyst.
     """
     from ..session import fan_out
+    from .similarity import _cosine
 
     emb = fan_out(emb)
     a = emb.select(
@@ -412,17 +374,7 @@ def embedding_neardup_pairs(
     )
     joined = a.join(b, on="blk" if block_col else None) if block_col else a.crossJoin(b)
     joined = joined.filter(F.col("id_a") < F.col("id_b"))
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p.cast("double") * q.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    cos = dot(F.col("v_a"), F.col("v_b")) / (
-        F.sqrt(dot(F.col("v_a"), F.col("v_a"))) * F.sqrt(dot(F.col("v_b"), F.col("v_b")))
-    )
+    cos = _cosine(F.col("v_a"), F.col("v_b"))
     # threshold on the UNROUNDED cosine (round only for display) — the
     # oracle filters the unrounded expression, and a pair sitting exactly
     # on the 6dp boundary must land the same way on both sides
@@ -456,6 +408,44 @@ def _banding_rows(num_hashes: int, bands: int, where: str) -> int:
     return num_hashes // bands
 
 
+def _minhash_signature(base: DataFrame, num_hashes: int) -> DataFrame:
+    """``(id, s0 .. s{num_hashes-1})``: the MinHash signature of each
+    ``(id, hs)`` shingle-hash set, ``s_i = min over h in hs of
+    xxhash64(h, i)``.
+
+    Explode + ``num_hashes`` min-aggregations: stays in whole-stage
+    codegen with map-side partial aggregation (the shuffle carries k
+    longs per doc). The equivalent nested array_min(transform(...)) x k
+    single projection is interpreted per element (higher-order lambdas
+    don't codegen) — measured 4-8x slower at sf0.1. NOTE for any HOF
+    variant: transform() lambdas must take ONE argument — pyspark passes
+    the array index as a second lambda arg, which silently overwrites an
+    `i=i` default and collapses every signature slot to the same
+    function."""
+    sh = base.select("id", F.explode("hs").alias("sh"))
+    return sh.groupBy("id").agg(
+        *[F.min(F.xxhash64("sh", F.lit(i))).alias(f"s{i}") for i in range(num_hashes)]
+    )
+
+
+def _band_keys(slots: list[F.Column], r: int) -> F.Column:
+    """Generator column ``b`` with one ``struct(band, bh)`` per LSH band:
+    band ``j`` hashes signature slots ``j*r .. j*r+r-1`` as
+    ``bh = xxhash64(slot, ...)``. ``r`` comes from :func:`_banding_rows`,
+    so it divides ``len(slots)``."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(j).alias("band"),
+                    F.xxhash64(*slots[j * r : j * r + r]).alias("bh"),
+                )
+                for j in range(len(slots) // r)
+            ]
+        )
+    ).alias("b")
+
+
 def minhash_pairs_native(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -474,7 +464,8 @@ def minhash_pairs_native(
                   (array_intersect on the per-doc shingle-hash arrays),
                   filtered to >= threshold.
 
-    Same recall profile as MinHashLSH.approxSimilarityJoin with
+    With r=1 (``bands == num_hashes``) the S-curve 1-(1-j)^bands is that
+    of pyspark.ml's MinHashLSH.approxSimilarityJoin with
     numHashTables=bands, but the whole plan stays in whole-stage codegen;
     candidate pairs are exact-verified so false positives never surface.
     Default banding (r=2, b=16): a pair at Jaccard j is missed with
@@ -496,18 +487,7 @@ def minhash_pairs_native(
     ).transform(stable_checkpoint).filter(F.size("hs") > 0)
     # (barrier before the filter — see ngram_jaccard_pairs note)
 
-    # signatures via explode + 32 min-aggregations: stays in whole-stage
-    # codegen with map-side partial aggregation (the shuffle carries 32
-    # longs per doc). The equivalent nested array_min(transform(...)) x32
-    # single projection is interpreted per element (higher-order lambdas
-    # don't codegen) — measured 4-8x slower at sf0.1. NOTE for any HOF
-    # variant: transform() lambdas must take ONE argument — pyspark passes
-    # the array index as a second lambda arg, which silently overwrites an
-    # `i=i` default and collapses every signature slot to the same function.
-    sh = base.select("id", F.explode("hs").alias("sh"))
-    sig = sh.groupBy("id").agg(
-        *[F.min(F.xxhash64("sh", F.lit(i))).alias(f"s{i}") for i in range(num_hashes)]
-    )
+    sig = _minhash_signature(base, num_hashes)
     # the banding self-join moves ONLY (id, band, bh) — the shingle arrays
     # rejoin afterwards for the (few) surviving candidate pairs.
     # Checkpointed: written lazily, BOTH sides of the self-join re-derive
@@ -517,20 +497,7 @@ def minhash_pairs_native(
     # it computes once and the self-join reads bands*|docs| tiny rows.
     banded = stable_checkpoint(
         sig.select(
-            "id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("band"),
-                            F.xxhash64(
-                                *[F.col(f"s{j * r + i}") for i in range(r)]
-                            ).alias("bh"),
-                        )
-                        for j in range(bands)
-                    ]
-                )
-            ).alias("b"),
+            "id", _band_keys([F.col(f"s{i}") for i in range(num_hashes)], r)
         ).select("id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
     )
 
@@ -542,17 +509,7 @@ def minhash_pairs_native(
         .select("id_a", "id_b")
         .dropDuplicates()
     )
-    hs = base.select("id", "hs")
-    cands = cands.join(
-        hs.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a")), "id_a"
-    ).join(hs.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b")), "id_b")
-    inter = F.size(F.array_intersect("hs_a", "hs_b"))
-    union = F.size("hs_a") + F.size("hs_b") - inter
-    return (
-        cands.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_rerank(cands, base.select("id", "hs"), threshold)
 
 
 def dedup_keep_representatives(
@@ -838,13 +795,7 @@ def corpus_fingerprints(
         .select(F.col(id_col).alias("id"), "hs")
         .filter(F.size("hs") > 0)
     )
-    sh = base.select("id", F.explode("hs").alias("sh"))
-    sig = sh.groupBy("id").agg(
-        *[
-            F.min(F.xxhash64("sh", F.lit(i))).alias(f"s{i}")
-            for i in range(num_hashes)
-        ]
-    )
+    sig = _minhash_signature(base, num_hashes)
     return sig.select(
         "id", F.array(*[f"s{i}" for i in range(num_hashes)]).alias("sig")
     )
@@ -883,11 +834,19 @@ def read_fingerprint_meta(spark, path: str) -> dict | None:
     """Read the :func:`write_fingerprint_meta` sidecar of a fingerprint
     table; ``None`` when the state carries no sidecar (externally-built
     tables — the caller falls back to schema inference and its own
-    parameters, accepting the round-7 ADVICE #2 risk it documents)."""
+    parameters, accepting the round-7 ADVICE #2 risk it documents).
+
+    Only a MISSING sidecar reads as ``None``: a corrupt or unreadable one
+    raises, because treating it as absent would silently skip the
+    parameter checks the sidecar exists for."""
+    from pyspark.errors import AnalysisException
+
     try:
         rows = spark.read.parquet(path + "/_meta").collect()
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
     return rows[0].asDict() if rows else None
 
 
@@ -966,22 +925,7 @@ def incremental_matches(
     def banded(sig_df, out_id):
         return sig_df.select(
             F.col("id").alias(out_id),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("band"),
-                            F.xxhash64(
-                                *[
-                                    F.element_at("sig", j * r + i + 1)
-                                    for i in range(r)
-                                ]
-                            ).alias("bh"),
-                        )
-                        for j in range(bands)
-                    ]
-                )
-            ).alias("b"),
+            _band_keys([F.element_at("sig", i + 1) for i in range(num_hashes)], r),
         ).select(out_id, "b.band", "b.bh")
 
     cands = (

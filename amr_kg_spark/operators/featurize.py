@@ -116,7 +116,7 @@ def semantic_neardup_pairs(
     (dim*8 bytes per row; at larger dim, join ids only and re-join
     embeddings). Hyperplanes are seeded driver-side literals
     (bands x band_bits x dim floats, tiny)."""
-    from .similarity import make_hyperplanes, rhp_signature
+    from .similarity import _cosine, _norm, make_hyperplanes, rhp_signature
 
     emb = featurize_text(docs, dim=dim, text_col=text_col).select(
         F.col(id_col).alias("id"), F.col("embedding").alias("v")
@@ -145,19 +145,9 @@ def semantic_neardup_pairs(
         .select("id_a", "id_b", "v_a", "v_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
-        )
-
-    na, nb = F.sqrt(dot(F.col("v_a"), F.col("v_a"))), F.sqrt(
-        dot(F.col("v_b"), F.col("v_b"))
-    )
-    cos = dot(F.col("v_a"), F.col("v_b")) / (na * nb)
     return (
-        cand.filter((na > 0) & (nb > 0))
-        .withColumn("_cos", cos)
+        cand.filter((_norm(F.col("v_a")) > 0) & (_norm(F.col("v_b")) > 0))
+        .withColumn("_cos", _cosine(F.col("v_a"), F.col("v_b")))
         .filter(F.col("_cos") >= threshold)
         .select("id_a", "id_b", F.round("_cos", 6).alias("cosine"))
     )

@@ -110,6 +110,28 @@ def char_ngrams_expr(col_sql: str, n: int = 3) -> str:
     )
 
 
+def _char_gram_lsh_join(
+    a: DataFrame, b: DataFrame, num_hash_tables: int, max_dist: float
+) -> DataFrame:
+    """pyspark.ml MinHash-LSH similarity join of two frames that carry a
+    ``grams`` column (char-n-gram sets, see :func:`char_ngrams_expr`):
+    both sides hash to binary 2^18-wide sparse vectors (HashingTF), and
+    ``approxSimilarityJoin`` keeps ``(datasetA, datasetB, dist)`` rows whose
+    Jaccard distance over the hashed gram sets (exact up to hash
+    collisions) is ``dist < max_dist``. Pass the same frame as
+    ``a`` and ``b`` for a self-join — pyspark.ml recognizes it by identity,
+    so it is hashed once."""
+    from pyspark.ml.feature import HashingTF, MinHashLSH
+
+    tf = HashingTF(inputCol="grams", outputCol="features", numFeatures=1 << 18, binary=True)
+    fa = tf.transform(a)
+    fb = fa if b is a else tf.transform(b)
+    model = MinHashLSH(
+        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
+    ).fit(fb)
+    return model.approxSimilarityJoin(fa, fb, max_dist, distCol="dist")
+
+
 def fuzzy_link(
     mentions: DataFrame,
     vocab_df: DataFrame,
@@ -124,25 +146,21 @@ def fuzzy_link(
     Both sides are hashed to fixed-width sparse vectors (HashingTF over
     n-gram sets); ``approxSimilarityJoin`` blocks by LSH band so the
     candidate pair set is ~linear, not |mentions| x |vocab|. Returns
-    (mention, matched_name, jaccard_dist) for distances <= threshold.
+    (mention, matched_name, jaccard_dist) for distances strictly below
+    ``threshold`` (``approxSimilarityJoin`` drops a pair AT the
+    threshold).
     """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
 
     def grams(df: DataFrame, col: str) -> DataFrame:
-        return df.withColumn("ngrams", F.expr(char_ngrams_expr(col, n))).filter(
-            F.size("ngrams") > 0
+        return df.withColumn("grams", F.expr(char_ngrams_expr(col, n))).filter(
+            F.size("grams") > 0
         )
 
     m = grams(mentions.select(mention_col).distinct(), mention_col)
     v = grams(vocab_df.select(vocab_col).distinct(), vocab_col)
-
-    tf = HashingTF(inputCol="ngrams", outputCol="features", numFeatures=1 << 18, binary=True)
-    mf, vf = tf.transform(m), tf.transform(v)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42)
-    model = lsh.fit(vf)
-    joined = model.approxSimilarityJoin(mf, vf, threshold, distCol="jaccard_dist")
+    joined = _char_gram_lsh_join(m, v, num_hash_tables, threshold)
     return joined.select(
         F.col(f"datasetA.{mention_col}").alias("mention"),
         F.col(f"datasetB.{vocab_col}").alias("matched_name"),
-        F.col("jaccard_dist").alias("jaccard_dist"),
+        F.col("dist").alias("jaccard_dist"),
     )

@@ -8,11 +8,12 @@
   signature bucket (multi-probe via hamming-1 neighbors optional), then
   exact rerank within candidates. The 100 TB path: the bucket join is a
   hash join on the signature, never |corpus| x |queries|.
-- ``ivf_topk``: inverted-file ANN — a KMeans coarse quantizer
-  (pyspark.ml) assigns every vector a cluster id; a query scans only the
-  ``n_probe`` clusters whose centroids are nearest. At scale the cluster
-  id is the table's partition key, so probing is partition pruning: a
-  query reads n_probe/n_clusters of the corpus from disk.
+- ``ivf_topk_pretrained``: inverted-file ANN — a fixed coarse quantizer
+  (pretrained centroids, e.g. ``fit_ivf``'s KMeans ``clusterCenters()``)
+  assigns every vector a cluster id; a query scans only the ``n_probe``
+  clusters whose centroids are nearest. At scale the cluster id is the
+  table's partition key, so probing is partition pruning: a query reads
+  n_probe/n_clusters of the corpus from disk.
 - ``cosine_topk_join`` / ``ivf_topk_join``: the BATCH siblings — top-k
   for every row of a query set in one pass. Exact (deliberate broadcast
   nested-loop: the |Q| x |C| product IS exact batch kNN) and ANN
@@ -147,35 +148,6 @@ def fit_ivf(
     return model, assigned
 
 
-def ivf_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    model_and_assigned=None,
-) -> DataFrame:
-    """IVF ANN top-k: scan only the n_probe clusters nearest the query (by
-    centroid distance, computed on the driver — centroids are tiny), exact
-    cosine rerank within them. Pass ``model_and_assigned`` (from
-    :func:`fit_ivf`) to amortize the quantizer across queries — the
-    production pattern, where assignment happens once at ingest."""
-    if model_and_assigned is None:
-        model_and_assigned = fit_ivf(emb, n_clusters, vec_col, seed)
-    model, assigned = model_and_assigned
-
-    q = np.asarray(query_vec, dtype=float)
-    centers = model.clusterCenters()
-    dists = [float(np.linalg.norm(q - np.asarray(c))) for c in centers]
-    probes = sorted(range(len(centers)), key=lambda i: dists[i])[:n_probe]
-
-    cands = assigned.filter(F.col("cluster").isin(probes))
-    return _rerank_topk(cands, query_vec, k, id_col, vec_col)
-
-
 def assign_fixed_centroids(
     emb: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -214,9 +186,9 @@ def ivf_topk_pretrained(
     """IVF ANN with a FIXED (pretrained) coarse quantizer: Catalyst
     assignment (:func:`assign_fixed_centroids`), driver-side probe
     selection over the tiny centroid list, exact cosine rerank inside the
-    probed clusters. Unlike :func:`ivf_topk` (KMeans-fitted), every step
-    is deterministic and replicable in ANSI SQL, so the driver oracle can
-    value-check the bucketing, probing and rerank."""
+    probed clusters. Every step is deterministic and replicable in ANSI
+    SQL, so the driver oracle can value-check the bucketing, probing and
+    rerank."""
     from ..session import fan_out
 
     emb = fan_out(emb)
@@ -397,7 +369,7 @@ def ivf_topk_join(
     """Batch IVF ANN JOIN: approximate top-k corpus neighbors for EVERY
     query row — the ANN sibling of :func:`cosine_topk_join` (which is
     exact but reads the whole corpus per batch). Completes the operator
-    symmetry: single-query exact/ANN (``cosine_topk`` / ``ivf_topk*``)
+    symmetry: single-query exact/ANN (``cosine_topk`` / ``ivf_topk_pretrained``)
     and batch exact (``cosine_topk_join``) already exist.
 
     Per query, the ``n_probe`` nearest centroids are selected IN CATALYST

@@ -61,12 +61,16 @@ def q_ngram_jaccard(spark, sf):
 
 
 def q_minhash_pairs(spark, sf):
-    """Both MinHash implementations under ONE driver row (variant column):
-    the pyspark.ml banding (threshold 0.2) and the Catalyst-native banding
-    (threshold 0.5), each exact-reranked — merged so the freed registry
-    slot could go to dp_ivf_topk while keeping both code paths
-    driver-verified."""
-    ml = D.minhash_lsh_pairs(_docs(spark, sf), n=JACCARD_N, max_dist=0.8)
+    """Two banding points of the Catalyst-native MinHash under ONE driver
+    row (variant column), each exact-reranked: ``ml`` is 8 bands of 1 row
+    at threshold 0.2 — the 1-(1-j)^8 S-curve of pyspark.ml's MinHashLSH
+    with 8 hash tables, which this row ran before that path was removed
+    (the label is kept so the rows and the oracle stay the same) — and
+    ``native`` is the default 16 bands of 2 rows at threshold 0.5."""
+    ml = D.minhash_pairs_native(
+        _docs(spark, sf), n=JACCARD_N, num_hashes=8, bands=8,
+        threshold=JACCARD_THRESHOLD,
+    )
     nat = D.minhash_pairs_native(_docs(spark, sf), n=JACCARD_N, threshold=0.5)
     return ml.select(
         F.lit("ml").alias("variant"), "id_a", "id_b", "jaccard"

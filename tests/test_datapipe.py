@@ -1,5 +1,5 @@
 """Behavioral tests for the approximate / non-SQL-expressible datapipe ops:
-MinHash-LSH pair recall vs exact Jaccard, ANN recall vs brute-force top-k,
+MinHash banding pair recall vs exact Jaccard, ANN recall vs brute-force top-k,
 and the multimodal plumbing (batch shape + stubbed decode)."""
 
 from __future__ import annotations
@@ -12,22 +12,6 @@ from amr_kg_spark.operators import multimodal as M
 from amr_kg_spark.operators import similarity as S
 
 from tests.conftest import SF_SMALL
-
-
-def test_minhash_lsh_finds_exact_jaccard_pairs(spark):
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    exact = {
-        (r.id_a, r.id_b)
-        for r in D.ngram_jaccard_pairs(docs, n=3, threshold=0.5).collect()
-    }
-    approx = {
-        (r.id_a, r.id_b)
-        for r in D.minhash_lsh_pairs(docs, n=3, max_dist=0.6).collect()
-    }
-    if not exact:
-        pytest.skip("no high-jaccard pairs at this SF")
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.8, f"LSH recall {recall} over {len(exact)} exact pairs"
 
 
 def test_ann_recall_vs_bruteforce(spark):
@@ -47,14 +31,14 @@ def test_ivf_topk_recall_and_pruning(spark):
     of the corpus."""
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     q = [float(v) for v in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    model_assigned = S.fit_ivf(emb, n_clusters=16)
-    _, assigned = model_assigned
+    model, assigned = S.fit_ivf(emb, n_clusters=16)
+    centroids = [
+        (i, [float(v) for v in c]) for i, c in enumerate(model.clusterCenters())
+    ]
     exact = [r.vec_id for r in S.cosine_topk(emb, q, k=10).collect()]
     approx = [
         r.vec_id
-        for r in S.ivf_topk(
-            emb, q, k=10, n_clusters=16, n_probe=4, model_and_assigned=model_assigned
-        ).collect()
+        for r in S.ivf_topk_pretrained(emb, q, centroids, k=10, n_probe=4).collect()
     ]
     assert exact[0] == 0 and approx[0] == 0
     recall = len(set(exact) & set(approx)) / 10
@@ -97,15 +81,25 @@ def test_frame_offsets_monotone(spark):
         assert all(0 <= o for o in offs)
 
 
-def test_minhash_native_matches_exact_with_high_recall(spark):
+@pytest.mark.parametrize(
+    "num_hashes,bands,threshold",
+    # the default r=2 x 16 point, and 8 bands of 1 row (the S-curve of
+    # pyspark.ml MinHashLSH with 8 hash tables, dp_minhash_pairs' `ml` row)
+    [(32, 16, 0.5), (8, 8, 0.4)],
+)
+def test_minhash_native_matches_exact_with_high_recall(
+    spark, num_hashes, bands, threshold
+):
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     exact = {
         (r.id_a, r.id_b): r.jaccard
-        for r in D.ngram_jaccard_pairs(docs, n=3, threshold=0.5).collect()
+        for r in D.ngram_jaccard_pairs(docs, n=3, threshold=threshold).collect()
     }
     native = {
         (r.id_a, r.id_b): r.jaccard
-        for r in D.minhash_pairs_native(docs, n=3, threshold=0.5).collect()
+        for r in D.minhash_pairs_native(
+            docs, n=3, num_hashes=num_hashes, bands=bands, threshold=threshold
+        ).collect()
     }
     if not exact:
         pytest.skip("no high-jaccard pairs at this SF")
@@ -119,7 +113,7 @@ def test_minhash_native_matches_exact_with_high_recall(spark):
 
 def test_fixture_jaccard_margin_guard():
     """The value-oracle equality for the banded MinHash rows (dp_minhash_pairs:
-    ml threshold 0.2 / 8 tables, native threshold 0.5 / r=2,b=16) holds only
+    ml threshold 0.2 / r=1,b=8, native threshold 0.5 / r=2,b=16) holds only
     while no doc pair sits in the recall-risky Jaccard band where a banding
     miss is non-negligible. Nothing in the derivation enforces that margin,
     so codify it: the testdata's pair distribution must stay bimodal —

@@ -167,6 +167,17 @@ def test_fingerprint_meta_sidecar(spark, tmp_path):
     assert read_fingerprint_meta(spark, str(tmp_path / "missing")) is None
 
 
+def test_fingerprint_meta_corrupt_sidecar_raises(spark, tmp_path):
+    """Only a MISSING sidecar reads as None: an unreadable one must raise,
+    not pass for "no sidecar" and silently skip the --dedup-against
+    parameter checks."""
+    meta = tmp_path / "fp" / "_meta"
+    meta.mkdir(parents=True)
+    (meta / "part-00000.parquet").write_text("not a parquet file")
+    with pytest.raises(Exception):
+        read_fingerprint_meta(spark, str(tmp_path / "fp"))
+
+
 def test_prep_corpus_two_increment_flow(tmp_path):
     """The daily-ingest loop end-to-end in fresh JVMs: increment 1 emits
     the accepted corpus's fingerprint state; increment 2 carries re-crawls
