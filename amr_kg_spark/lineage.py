@@ -192,8 +192,3 @@ class StageRunner:
                 F.round(F.col("rows") / (F.col("wall_ms") / 1000.0), 2),
             )
         )
-
-    def invalidate(self, stage: str) -> None:
-        out = self._stage_dir(stage)
-        if os.path.exists(out):
-            shutil.rmtree(out)

@@ -1,12 +1,14 @@
 """Canonicalization: connected components over a similarity graph.
 
 Duplicate node variants (case/whitespace/hyphen spellings, multi-source
-ids) are merged by: (1) building similarity pairs (exact-normalized match
-or MinHash-LSH fuzzy pairs, operators/linking.py), (2) running connected
-components over the pair graph, (3) electing the canonical id = min(node_id)
-per component, (4) merging properties by source priority — reproducing the
-reference's per-label upsert policies (last-wins src/sources.py:46,
-first-wins src/sources.py:91-92,119-120) as explicit ORDER BY choices.
+ids) are merged by: (1) building similarity pairs with the one exact
+char-gram Jaccard join of operators/linking.py (MinHash-LSH blocking, exact
+verify) plus a same-entity-group gate, (2) running connected components
+over the pair graph, (3) electing the highest-priority node of each
+component as canonical, (4) merging properties by source priority —
+reproducing the reference's per-label upsert policies (last-wins
+src/sources.py:46, first-wins src/sources.py:91-92,119-120) as explicit
+ORDER BY choices.
 
 CC is a hand-rolled driver loop of joins (hash-to-min label propagation,
 cf. Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14
@@ -123,45 +125,38 @@ def connected_components(
     return labels
 
 
-def canonicalize_nodes(
-    nodes: DataFrame,
-    similarity_pairs: DataFrame,
-    id_col: str = "node_id",
-    cc: DataFrame | None = None,
-) -> DataFrame:
-    """Merge duplicate nodes: canonical id = component min; properties merged
-    with ``map_concat`` in ascending priority order so the highest-priority
-    source wins key collisions (the reference's A4 last-wins dict update).
+def canonicalize_nodes(nodes: DataFrame, cc: DataFrame) -> DataFrame:
+    """Merge duplicate nodes: canonical id = the highest-priority node of
+    each component; properties merged with ``map_concat`` in ascending
+    priority order so the highest-priority source wins key collisions (the
+    reference's A4 last-wins dict update).
 
-    nodes must carry a ``priority`` int column (lower = higher priority,
-    e.g. chembl=0 < pubchem=1 < spark=2 < drugcentral=3) and a ``props``
-    map column; rows without a similarity partner stay singleton components.
-    ``cc`` (node, component) may be passed in when the caller already ran
-    connected components over the same pairs — the iterative CC loop is the
-    most expensive stage of canonicalization and must run exactly once.
+    nodes must carry ``node_id``, a ``priority`` int column (lower = higher
+    priority, e.g. chembl=0 < pubchem=1 < spark=2 < drugcentral=3) and a
+    ``props`` map column. ``cc`` is the (node, component) output of
+    :func:`connected_components` over the similarity pairs, computed once
+    by the caller; nodes absent from it stay singleton components.
     """
-    if cc is None:
-        cc = connected_components(similarity_pairs, "src", "dst")
     with_comp = nodes.join(
-        cc, nodes[id_col] == cc["node"], "left"
-    ).withColumn("component", F.coalesce("component", F.col(id_col)))
+        cc, nodes["node_id"] == cc["node"], "left"
+    ).withColumn("component", F.coalesce("component", F.col("node_id")))
 
     # order rows within a component by DESCENDING priority value so that the
     # highest-priority source's props land LAST in map_concat (last-wins)
     merged = (
         with_comp.groupBy("component")
         .agg(
-            F.min(F.struct("priority", id_col, "label", "name", "curie")).alias("best"),
+            F.min(F.struct("priority", "node_id", "label", "name", "curie")).alias("best"),
             F.aggregate(
                 F.reverse(
                     F.array_sort(
-                        F.collect_list(F.struct("priority", id_col, "props")),
+                        F.collect_list(F.struct("priority", "node_id", "props")),
                         # comparator on scalar fields only: structs holding
                         # maps have no natural ordering in Spark
                         lambda l, r: F.when(l["priority"] < r["priority"], -1)
                         .when(l["priority"] > r["priority"], 1)
-                        .when(l[id_col] < r[id_col], -1)
-                        .when(l[id_col] > r[id_col], 1)
+                        .when(l["node_id"] < r["node_id"], -1)
+                        .when(l["node_id"] > r["node_id"], 1)
                         .otherwise(0)
                         .cast("int"),
                     )
@@ -176,7 +171,7 @@ def canonicalize_nodes(
         )
         .select(
             "component",
-            F.col("best")[id_col].alias("canonical_id"),
+            F.col("best.node_id").alias("canonical_id"),
             F.col("best.label").alias("label"),
             F.col("best.name").alias("name"),
             F.col("best.curie").alias("curie"),
@@ -232,31 +227,26 @@ DEFAULT_LABEL_GROUPS = {
 
 
 def canonicalize_kg(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_dist: float = 0.35,
-    label_priority: dict[str, int] | None = None,
-    label_groups: dict[str, str] | None = None,
+    nodes: DataFrame, edges: DataFrame, max_dist: float = 0.35
 ) -> dict[str, DataFrame]:
-    """Full KG canonicalization (north_star): similarity self-join on node
-    names (char-3-gram MinHash-LSH blocking — candidate pairs ~linear, the
-    'salted self-join' scale path), restricted to nodes of the same entity
-    group; connected components; canonical node election by source
-    priority; edges repointed at canonical ids.
+    """Full KG canonicalization (north_star): exact char-3-gram Jaccard
+    self-join on node names (``dedup.char_ngram_lsh_pairs``: MinHash-LSH
+    blocking keeps candidate pairs ~linear, the 'salted self-join' scale
+    path; distance <= ``max_dist`` decided exactly), restricted to nodes of
+    the same entity group (:data:`DEFAULT_LABEL_GROUPS`); connected
+    components; canonical node election by source priority
+    (:data:`DEFAULT_LABEL_PRIORITY`); edges repointed at canonical ids.
 
     nodes: (node_id, label, name, curie, props); edges: (src_id, dst_id,
     rel_type, props). Returns {nodes, edges, mapping}.
     """
     from .dedup import char_ngram_lsh_pairs
 
-    prio = label_priority or DEFAULT_LABEL_PRIORITY
-    groups = label_groups or DEFAULT_LABEL_GROUPS
-
     grp_map = F.create_map(
-        *[x for k, v in groups.items() for x in (F.lit(k), F.lit(v))]
+        *[x for k, v in DEFAULT_LABEL_GROUPS.items() for x in (F.lit(k), F.lit(v))]
     )
     prio_map = F.create_map(
-        *[x for k, v in prio.items() for x in (F.lit(k), F.lit(v))]
+        *[x for k, v in DEFAULT_LABEL_PRIORITY.items() for x in (F.lit(k), F.lit(v))]
     )
     # only labels with an explicit entity group are mergeable — literal-
     # valued labels (Activity "3.5 nM" vs "6.5 nM") must never fuzzy-merge
@@ -265,30 +255,13 @@ def canonicalize_kg(
         .withColumn("grp", grp_map[F.col("label")])
         .filter(F.col("grp").isNotNull())
     )
-    # candidate pairs via LSH (recall filter), then an EXACT char-n-gram
-    # Jaccard rerank (precision gate: approxSimilarityJoin's estimated
-    # distance can admit pairs whose true similarity is below threshold),
-    # then the group gate (same entity type only)
-    from .linking import char_ngrams_expr
-
-    cand = char_ngram_lsh_pairs(
-        named.select(F.col("node_id"), F.col("name")), "node_id", "name",
-        max_dist=max_dist,
-    )
-    grams = named.select(
-        F.col("node_id").alias("nid"),
-        F.expr(char_ngrams_expr("name")).alias("ng"),
-        F.col("grp").alias("g"),
-    )
-    ga = grams.select(F.col("nid").alias("id_a"), F.col("ng").alias("ng_a"), F.col("g").alias("g_a"))
-    gb = grams.select(F.col("nid").alias("id_b"), F.col("ng").alias("ng_b"), F.col("g").alias("g_b"))
-    inter = F.size(F.array_intersect("ng_a", "ng_b"))
-    union = F.size("ng_a") + F.size("ng_b") - inter
+    # exact-Jaccard name pairs, then the group gate (same entity type only)
+    grp = named.select("node_id", "grp")
     pairs = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
+        char_ngram_lsh_pairs(named, "node_id", "name", max_dist=max_dist)
+        .join(grp.toDF("id_a", "g_a"), "id_a")
+        .join(grp.toDF("id_b", "g_b"), "id_b")
         .filter(F.col("g_a") == F.col("g_b"))
-        .filter(inter / union >= F.lit(1.0 - max_dist))
         .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
 
@@ -303,7 +276,7 @@ def canonicalize_kg(
     # inside connected_components materializes the similarity pairs, so the
     # LSH self-join above is also evaluated exactly once.
     cc = connected_components(pairs, "src", "dst")
-    canonical = canonicalize_nodes(with_prio, pairs, id_col="node_id", cc=cc)
+    canonical = canonicalize_nodes(with_prio, cc)
 
     # node -> canonical_id mapping (MUST use the elected canonical id, not
     # the component min — edges and nodes have to agree on identity)

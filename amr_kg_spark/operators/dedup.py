@@ -280,12 +280,12 @@ def char_ngram_lsh_pairs(
     num_hash_tables: int = 8,
     max_dist: float = 0.5,
 ) -> DataFrame:
-    """MinHash-LSH similar pairs on CHARACTER n-grams — the right granularity
-    for short strings (entity names), where word shingles degenerate.
-    Used by KG canonicalization for the similarity self-join; returns
-    ``(id_a, id_b, est_jaccard)`` with ``id_a < id_b``; ``est_jaccard``
-    is the Jaccard of the 2^18-hashed gram sets (callers rerank on the
-    gram sets themselves)."""
+    """Exact char-n-gram Jaccard self-join with MinHash-LSH blocking — the
+    right granularity for short strings (entity names), where word shingles
+    degenerate. KG canonicalization's similarity self-join; returns
+    ``(id_a, id_b, jaccard)`` with ``id_a < id_b`` for every blocked pair
+    whose exact Jaccard distance is <= ``max_dist`` (verified in
+    ``linking._char_gram_lsh_join``)."""
     from .linking import _char_gram_lsh_join, char_ngrams_expr
 
     base = df.select(
@@ -297,7 +297,7 @@ def char_ngram_lsh_pairs(
         .select(
             F.col("datasetA.id").alias("id_a"),
             F.col("datasetB.id").alias("id_b"),
-            F.round(F.lit(1.0) - F.col("dist"), 6).alias("est_jaccard"),
+            (F.lit(1.0) - F.col("dist")).alias("jaccard"),
         )
     )
 

@@ -1,99 +1,111 @@
-"""Entity linking: exact broadcast-alias joins + priority fallback + LSH.
+"""Entity linking: each of the KG's two linking rules is stated once, here.
 
-Reproduces the reference's resolution semantics Spark-first:
-
-- strain alias -> canonical species normalization = the reference's
-  ``PATHOGEN_MAPPER.get`` lambda (src/relations.py:181) as a broadcast
-  LEFT join (misses keep the original name);
-- id priority fallback = the reference's nested try/except chains
-  (src/relations.py:146-155: SPARK -> ChEMBL -> PubChem;
-  src/relations.py:198-204: PubChem -> DrugCentral) generalized to one
-  ``coalesce`` over curie candidates in priority order
-  chembl > pubchem > spark > drug.central (curie prefixes per
-  src/sources.py:39,103,123,179);
-- fuzzy linking = MinHash-LSH blocking over character 3-gram sets
-  (``approxSimilarityJoin``), the scale path the reference lacked (it made
-  per-row PubChem REST calls instead, src/sources.py:105,117,166).
-
-All dimension tables are broadcast explicitly — at 100 TB the fact side
-never shuffles for these joins.
+- **Resolution** (J1/J2/J5): :func:`entity_resolution_rows` is the one
+  encoding of mention -> (label, canonical name, curie). It bakes in the
+  reference's strain normalization (the ``PATHOGEN_MAPPER.get`` lambda,
+  src/relations.py:181: a strain alias resolves to its species, a miss
+  keeps its own name) and its id priority fallback (the nested try/except
+  chains of src/relations.py:146-155,198-204, generalized to the first
+  present curie in priority order chembl > pubchem > spark > drug.central;
+  curie prefixes per src/sources.py:39,103,123,179). The vocabularies are
+  a few dozen constants, so :func:`entity_resolution_map` renders the rows
+  as one literal ``map(...)`` expression: every lookup
+  (``triples.resolve_pairs``, :func:`link_compounds`,
+  :func:`link_pathogens`) is a map access inside the fact-side projection,
+  with no join.
+- **Fuzzy name matching** (J7): :func:`_char_gram_lsh_join` is the one
+  filter-then-verify join over character n-gram sets. MinHash-LSH
+  (``approxSimilarityJoin``) is a loose candidate filter, the scale path
+  the reference lacked (it made per-row PubChem REST calls instead,
+  src/sources.py:105,117,166); an exact Jaccard test in integer
+  arithmetic decides every pair. :func:`fuzzy_link`,
+  ``dedup.char_ngram_lsh_pairs`` and through it ``canonicalize_kg`` call it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from fractions import Fraction
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import vocab
-from ..schemas import COMPOUND_VOCAB, PATHOGEN_VOCAB, STRAIN_ALIAS
+from ..schemas import COMPOUND_VOCAB
 
 
 def vocab_tables(spark: SparkSession) -> dict[str, DataFrame]:
-    """Materialize the controlled vocabularies as DataFrames."""
+    """The compound vocabulary as a DataFrame (the fuzzy-linking and
+    canonicalization fixtures derive their dirty variants from it)."""
     return {
-        "pathogen": spark.createDataFrame(vocab.PATHOGENS, PATHOGEN_VOCAB),
-        "strain_alias": spark.createDataFrame(vocab.STRAIN_ALIASES, STRAIN_ALIAS),
         "compound": spark.createDataFrame(
             [(c[0], c[1], c[2], c[3], c[4], None) for c in vocab.COMPOUNDS],
             COMPOUND_VOCAB,
         ),
-        "institute": spark.createDataFrame(
-            vocab.INSTITUTES, "id string, institute string, link string, projects string"
-        ),
     }
 
 
-def normalize_strains(mentions: DataFrame, strain_alias: DataFrame) -> DataFrame:
-    """Alias-normalization join (J2): strain mention -> canonical species.
-
-    LEFT broadcast join; non-aliases pass through unchanged. Adds
-    ``canonical`` and ``is_strain``.
-    """
-    alias = F.broadcast(strain_alias)
-    return (
-        mentions.join(alias, mentions["mention"] == alias["alias"], "left")
-        .withColumn("is_strain", F.col("canonical").isNotNull())
-        .withColumn("canonical", F.coalesce("canonical", "mention"))
-        .drop("alias")
-    )
-
-
-def link_compounds(mentions: DataFrame, compound_vocab: DataFrame) -> DataFrame:
-    """Exact-name broadcast join + priority-fallback curie (J1 + J5).
-
-    curie = coalesce(chembl:, pubchem:, spark:, drug.central:) — the
-    declarative form of the reference's nested try/except
-    (src/relations.py:146-155,198-204). Unlinkable mentions are dropped,
-    matching the reference's ``continue`` on double KeyError.
-    """
-    cv = F.broadcast(compound_vocab)
+def entity_resolution_rows() -> list[tuple[str, str, str, str | None]]:
+    """(mention, label, canonical name, curie) rows from the controlled
+    vocabularies — strain normalization (J2) and the compound id priority
+    chain (J5, chembl > pubchem > spark > drug.central) baked in."""
     p = vocab.CURIE_PREFIX
-    return (
-        mentions.join(cv, mentions["mention"] == cv["pref_name"], "inner")
-        .withColumn(
-            "curie",
-            F.coalesce(
-                F.concat(F.lit(p["chembl"]), F.col("chembl_id")),
-                F.concat(F.lit(p["pubchem"]), F.col("pubchem_id")),
-                F.concat(F.lit(p["spark"]), F.col("spark_id")),
-                F.concat(F.lit(p["drugcentral"]), F.col("drugcentral_id")),
-            ),
+    taxon = dict(vocab.PATHOGENS)
+    rows: list[tuple[str, str, str, str | None]] = []
+    for name, tax in vocab.PATHOGENS:
+        rows.append((name, "Pathogen", name, p["ncbitaxon"] + tax))
+    for alias, canon in vocab.STRAIN_ALIASES:
+        rows.append((alias, "Pathogen", canon, p["ncbitaxon"] + taxon[canon]))
+    for pref, *ids in vocab.COMPOUNDS:
+        chain = zip(("chembl", "pubchem", "spark", "drugcentral"), ids)
+        curie = next((p[src] + i for src, i in chain if i), None)
+        rows.append((pref, "Compound", pref, curie))
+    for _, inst, _, _ in vocab.INSTITUTES:
+        rows.append((inst, "Institution", inst, p["institute"] + inst.lower()))
+    return rows
+
+
+def entity_resolution_map() -> Column:
+    """:func:`entity_resolution_rows` as one literal
+    ``map<string, struct<label, name, curie>>`` keyed by mention.
+
+    ONE JVM-parsed map literal instead of 4*len(rows) py4j column
+    constructions: the F.lit/F.struct/F.create_map form cost ~0.22 s of
+    driver-side Python per query CONSTRUCTION (round-8 profiling); the SQL
+    string builds in microseconds and parses JVM-side to the identical
+    constant-folded map."""
+
+    def q(s: str) -> str:
+        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    kv = []
+    for mention, label, name, curie in entity_resolution_rows():
+        c = q(curie) if curie is not None else "CAST(NULL AS STRING)"
+        kv.append(
+            f"{q(mention)}, named_struct('label', {q(label)}, "
+            f"'name', {q(name)}, 'curie', {c})"
         )
-        .filter(F.col("curie").isNotNull())
+    return F.expr("map(" + ", ".join(kv) + ")")
+
+
+def link_compounds(mentions: DataFrame) -> DataFrame:
+    """Compound mentions -> priority-fallback curie (J1 + J5): adds
+    ``curie``. Unlinkable mentions are dropped, matching the reference's
+    ``continue`` on double KeyError."""
+    hit = entity_resolution_map()[F.col("mention")]
+    return mentions.withColumn("curie", hit["curie"]).filter(
+        (hit["label"] == "Compound") & F.col("curie").isNotNull()
     )
 
 
-def link_pathogens(
-    mentions: DataFrame, pathogen_vocab: DataFrame, strain_alias: DataFrame
-) -> DataFrame:
-    """Normalize strains then resolve to ncbitaxon curies (J2 + J1)."""
-    norm = normalize_strains(mentions, strain_alias)
-    pv = F.broadcast(pathogen_vocab)
+def link_pathogens(mentions: DataFrame) -> DataFrame:
+    """Pathogen mentions -> (canonical species, ncbitaxon curie) (J2 + J1):
+    adds ``canonical`` and ``curie``; a strain alias resolves to its
+    species. Unknown names are dropped."""
+    hit = entity_resolution_map()[F.col("mention")]
     return (
-        norm.join(pv, norm["canonical"] == pv["pathogen"], "inner")
-        .withColumn(
-            "curie", F.concat(F.lit(vocab.CURIE_PREFIX["ncbitaxon"]), F.col("ncbitaxon"))
-        )
+        mentions.withColumn("canonical", hit["name"])
+        .withColumn("curie", hit["curie"])
+        .filter(hit["label"] == "Pathogen")
     )
 
 
@@ -113,14 +125,20 @@ def char_ngrams_expr(col_sql: str, n: int = 3) -> str:
 def _char_gram_lsh_join(
     a: DataFrame, b: DataFrame, num_hash_tables: int, max_dist: float
 ) -> DataFrame:
-    """pyspark.ml MinHash-LSH similarity join of two frames that carry a
-    ``grams`` column (char-n-gram sets, see :func:`char_ngrams_expr`):
-    both sides hash to binary 2^18-wide sparse vectors (HashingTF), and
-    ``approxSimilarityJoin`` keeps ``(datasetA, datasetB, dist)`` rows whose
-    Jaccard distance over the hashed gram sets (exact up to hash
-    collisions) is ``dist < max_dist``. Pass the same frame as
-    ``a`` and ``b`` for a self-join — pyspark.ml recognizes it by identity,
-    so it is hashed once."""
+    """Exact char-n-gram Jaccard join of two frames that carry a ``grams``
+    column (char-n-gram sets, see :func:`char_ngrams_expr`), with MinHash-
+    LSH blocking.
+
+    Filter: both sides hash to binary 2^18-wide sparse vectors (HashingTF)
+    and pyspark.ml's ``approxSimilarityJoin`` pairs rows that share a
+    MinHash value, at distance bound 1.0 — it only drops pairs with no
+    common hashed gram, which cannot pass the verifier. Verify: a pair is
+    kept iff the exact Jaccard of its ``grams`` arrays is
+    >= 1 - ``max_dist`` (boundary included), tested as
+    ``q*|A∩B| >= p*|A∪B|`` with p/q = 1 - ``Fraction(str(max_dist))``.
+    Returns ``(datasetA, datasetB, dist)`` with ``dist`` the exact Jaccard
+    distance. Pass the same frame as ``a`` and ``b`` for a self-join —
+    pyspark.ml recognizes it by identity, so it is hashed once."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     tf = HashingTF(inputCol="grams", outputCol="features", numFeatures=1 << 18, binary=True)
@@ -129,7 +147,13 @@ def _char_gram_lsh_join(
     model = MinHashLSH(
         inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
     ).fit(fb)
-    return model.approxSimilarityJoin(fa, fb, max_dist, distCol="dist")
+    cand = model.approxSimilarityJoin(fa, fb, 1.0, distCol="est_dist")
+    sim = 1 - Fraction(str(max_dist))
+    inter = F.size(F.array_intersect("datasetA.grams", "datasetB.grams")).cast("long")
+    union = F.size("datasetA.grams").cast("long") + F.size("datasetB.grams") - inter
+    return cand.filter(inter * sim.denominator >= union * sim.numerator).select(
+        "datasetA", "datasetB", ((union - inter) / union).alias("dist")
+    )
 
 
 def fuzzy_link(
@@ -146,9 +170,8 @@ def fuzzy_link(
     Both sides are hashed to fixed-width sparse vectors (HashingTF over
     n-gram sets); ``approxSimilarityJoin`` blocks by LSH band so the
     candidate pair set is ~linear, not |mentions| x |vocab|. Returns
-    (mention, matched_name, jaccard_dist) for distances strictly below
-    ``threshold`` (``approxSimilarityJoin`` drops a pair AT the
-    threshold).
+    (mention, matched_name, jaccard_dist) for exact char-gram Jaccard
+    distances at or below ``threshold`` (see :func:`_char_gram_lsh_join`).
     """
 
     def grams(df: DataFrame, col: str) -> DataFrame:

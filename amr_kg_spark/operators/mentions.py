@@ -48,27 +48,20 @@ def default_vocabularies() -> dict[str, list[str]]:
     }
 
 
-def compile_detectors(
-    vocabularies: dict[str, list[str]],
-    activity_pattern: str = vocab.ACTIVITY_PATTERN,
-) -> dict[str, re.Pattern]:
-    """One alternation regex per class, longest term first."""
+def compile_detectors(vocabularies: dict[str, list[str]]) -> dict[str, re.Pattern]:
+    """One alternation regex per class, longest term first, plus the
+    ``activity`` value detector (``vocab.ACTIVITY_PATTERN``)."""
     dets: dict[str, re.Pattern] = {}
     for cls, terms in vocabularies.items():
         alts = "|".join(
             re.escape(t) for t in sorted(terms, key=len, reverse=True)
         )
         dets[cls] = re.compile(f"{_BOUND_L}(?:{alts}){_BOUND_R}")
-    if activity_pattern:
-        dets["activity"] = re.compile(f"{_BOUND_L}(?:{activity_pattern}){_BOUND_R}")
+    dets["activity"] = re.compile(f"{_BOUND_L}(?:{vocab.ACTIVITY_PATTERN}){_BOUND_R}")
     return dets
 
 
-def detect_mentions(
-    turns: DataFrame,
-    vocabularies: dict[str, list[str]] | None = None,
-    text_col: str = "text",
-) -> DataFrame:
+def detect_mentions(turns: DataFrame, text_col: str = "text") -> DataFrame:
     """Append a ``mentions array<struct<entity_class,mention,start>>`` column.
 
     mapInPandas-free: a scalar pandas UDF keeps the surrounding projection
@@ -86,7 +79,7 @@ def detect_mentions(
     from ..session import fan_out
 
     turns = fan_out(turns) if not turns.isStreaming else turns
-    vocabs = vocabularies or default_vocabularies()
+    vocabs = default_vocabularies()
 
     @F.pandas_udf(T.ArrayType(MENTION))
     def _detect(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:

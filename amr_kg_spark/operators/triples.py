@@ -12,8 +12,8 @@ relation builders (reference src/relations.py):
 
 Scale design: co-occurrence pairs are built INSIDE each turn's mention
 array with Catalyst higher-order functions (filter/transform/flatten) —
-zero shuffle, no self-join of the exploded mention table. Linking joins
-are broadcast. The only shuffles in the whole KG build are the final
+zero shuffle, no self-join of the exploded mention table. Linking is a
+literal map lookup (no join). The only shuffles in the whole KG build are the final
 dropDuplicates on nodes and any explicit repartition before write.
 
 Node identity is deterministic ``xxhash64(label, name)`` — stable across
@@ -28,8 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import vocab
-from .linking import vocab_tables
+from .linking import entity_resolution_map
 from .mentions import detect_mentions
 
 RESISTANCE_MARKER = " resistant to "
@@ -94,143 +93,25 @@ def cooccurrence_pairs(with_mentions: DataFrame) -> DataFrame:
     )
 
 
-def _entity_resolution_rows() -> list[tuple[str, str, str, str]]:
-    """(mention, label, canonical name, curie) rows from the controlled
-    vocabularies — strain normalization (J2) and the compound id priority
-    chain (J5, chembl > pubchem > spark > drug.central) baked in."""
-    p = vocab.CURIE_PREFIX
-    taxon = dict(vocab.PATHOGENS)
-    rows: list[tuple[str, str, str, str]] = []
-    for name, tax in vocab.PATHOGENS:
-        rows.append((name, "Pathogen", name, p["ncbitaxon"] + tax))
-    for alias, canon in vocab.STRAIN_ALIASES:
-        rows.append((alias, "Pathogen", canon, p["ncbitaxon"] + taxon[canon]))
-    for pref, chembl, pubchem, spark_id, dc in vocab.COMPOUNDS:
-        curie = (
-            (p["chembl"] + chembl)
-            if chembl
-            else (p["pubchem"] + pubchem)
-            if pubchem
-            else (p["spark"] + spark_id)
-            if spark_id
-            else (p["drugcentral"] + dc)
-            if dc
-            else None
-        )
-        rows.append((pref, "Compound", pref, curie))
-    for _, inst, _, _ in vocab.INSTITUTES:
-        rows.append((inst, "Institution", inst, p["institute"] + inst.lower()))
-    return rows
+def resolve_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:
+    """Resolve both endpoints through ``linking.entity_resolution_map``;
+    activity values resolve to themselves (label Activity, no curie).
 
-
-def _entity_resolution(spark: SparkSession) -> DataFrame:
-    """Broadcast dimension: mention -> (label, canonical name, curie).
-
-    Encodes strain normalization (J2) and the compound id priority chain
-    (J5, chembl > pubchem > spark > drug.central)."""
-    v = vocab_tables(spark)
-    p = vocab.CURIE_PREFIX
-
-    pathogens = (
-        v["pathogen"]
-        .select(
-            F.col("pathogen").alias("mention"),
-            F.lit("Pathogen").alias("label"),
-            F.col("pathogen").alias("name"),
-            F.concat(F.lit(p["ncbitaxon"]), F.col("ncbitaxon")).alias("curie"),
-        )
-    )
-    strains = (
-        v["strain_alias"]
-        .join(v["pathogen"], F.col("canonical") == F.col("pathogen"), "left")
-        .select(
-            F.col("alias").alias("mention"),
-            F.lit("Pathogen").alias("label"),
-            F.col("canonical").alias("name"),
-            F.concat(F.lit(p["ncbitaxon"]), F.col("ncbitaxon")).alias("curie"),
-        )
-    )
-    compounds = v["compound"].select(
-        F.col("pref_name").alias("mention"),
-        F.lit("Compound").alias("label"),
-        F.col("pref_name").alias("name"),
-        F.coalesce(
-            F.concat(F.lit(p["chembl"]), F.col("chembl_id")),
-            F.concat(F.lit(p["pubchem"]), F.col("pubchem_id")),
-            F.concat(F.lit(p["spark"]), F.col("spark_id")),
-            F.concat(F.lit(p["drugcentral"]), F.col("drugcentral_id")),
-        ).alias("curie"),
-    )
-    institutes = v["institute"].select(
-        F.col("institute").alias("mention"),
-        F.lit("Institution").alias("label"),
-        F.col("institute").alias("name"),
-        F.concat(F.lit(p["institute"]), F.lower(F.col("institute"))).alias("curie"),
-    )
-    return pathogens.unionByName(strains).unionByName(compounds).unionByName(institutes)
-
-
-def resolve_pairs(
-    spark: SparkSession, pairs: DataFrame, literal_map_max: int = 10_000
-) -> DataFrame:
-    """Resolve both endpoints; activity values resolve to themselves
-    (label Activity, no curie).
-
-    Physical strategy: for dimension vocabularies up to ``literal_map_max``
-    entries the lookup is a literal ``create_map`` expression — it stays
-    inside whole-stage codegen with ZERO joins/exchanges on the fact side
-    (measured ~3x faster than the broadcast hash join at 300k turns).
-    Larger vocabularies fall back to broadcast hash joins.
+    Physical strategy: the lookup is a literal ``map`` expression — it
+    stays inside whole-stage codegen with ZERO joins/exchanges on the fact
+    side (measured ~3x faster than the broadcast hash join at 300k turns).
     """
-    rows = _entity_resolution_rows()
-    if len(rows) <= literal_map_max:
-        # ONE JVM-parsed map literal instead of 4*len(rows) py4j column
-        # constructions: the F.lit/F.struct/F.create_map form cost ~0.22 s
-        # of driver-side Python per query CONSTRUCTION (round-8
-        # profiling); the SQL string builds in microseconds and parses
-        # JVM-side to the identical constant-folded map.
-        def q(s: str) -> str:
-            return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    lookup = entity_resolution_map()
 
-        kv = []
-        for mention, label, name, curie in rows:
-            c = q(curie) if curie is not None else "CAST(NULL AS STRING)"
-            kv.append(
-                f"{q(mention)}, named_struct('label', {q(label)}, "
-                f"'name', {q(name)}, 'curie', {c})"
-            )
-        lookup = F.expr("map(" + ", ".join(kv) + ")")
+    def side(df: DataFrame, col: str, out: str) -> DataFrame:
+        hit = lookup[F.col(col)]
+        return (
+            df.withColumn(f"{out}_label", F.coalesce(hit["label"], F.lit("Activity")))
+            .withColumn(f"{out}_curie", hit["curie"])
+            .withColumn(out, F.coalesce(hit["name"], F.col(col)))
+        )
 
-        def side(df: DataFrame, col: str, out: str) -> DataFrame:
-            hit = lookup[F.col(col)]
-            return (
-                df.withColumn(f"{out}_label", F.coalesce(hit["label"], F.lit("Activity")))
-                .withColumn(f"{out}_curie", hit["curie"])
-                .withColumn(out, F.coalesce(hit["name"], F.col(col)))
-            )
-
-        resolved = side(side(pairs, "subj_mention", "subj"), "obj_mention", "obj")
-    else:
-        dim = F.broadcast(_entity_resolution(spark))
-
-        def side(df: DataFrame, col: str, out: str) -> DataFrame:
-            d = dim.select(
-                F.col("mention").alias(f"_{out}_mention"),
-                F.col("label").alias(f"{out}_label"),
-                F.col("name").alias(f"_{out}_name"),
-                F.col("curie").alias(f"{out}_curie"),
-            )
-            df = df.join(d, F.col(col) == F.col(f"_{out}_mention"), "left")
-            return (
-                df.withColumn(
-                    f"{out}_label", F.coalesce(f"{out}_label", F.lit("Activity"))
-                )
-                .withColumn(out, F.coalesce(f"_{out}_name", F.col(col)))
-                .drop(f"_{out}_mention", f"_{out}_name")
-            )
-
-        resolved = side(side(pairs, "subj_mention", "subj"), "obj_mention", "obj")
-
+    resolved = side(side(pairs, "subj_mention", "subj"), "obj_mention", "obj")
     return resolved.select(
         "conv_id", "turn_idx",
         "subj", "subj_label", "subj_curie",

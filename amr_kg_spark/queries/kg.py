@@ -1,7 +1,7 @@
 """KG-construction queries + independent DuckDB oracles.
 
 The Spark side runs the real engine (pandas-UDF mention detection,
-broadcast linking, higher-order-function pair building). The oracle side
+map-literal linking, higher-order-function pair building). The oracle side
 recomputes the expected answer in pure SQL from the *planting arithmetic*
 of :mod:`amr_kg_spark.transcripts` — a genuinely independent derivation, so
 agreement means the extraction actually recovered what was planted.
@@ -159,9 +159,7 @@ def q_link_compounds(spark: SparkSession, sf: str) -> DataFrame:
         .select("mention")
         .distinct()
     )
-    return link_compounds(mentions, vocab_tables(spark)["compound"]).select(
-        "mention", "curie"
-    )
+    return link_compounds(mentions).select("mention", "curie")
 
 
 def q_link_pathogens(spark: SparkSession, sf: str) -> DataFrame:
@@ -172,10 +170,7 @@ def q_link_pathogens(spark: SparkSession, sf: str) -> DataFrame:
         .select("mention")
         .distinct()
     )
-    v = vocab_tables(spark)
-    return link_pathogens(mentions, v["pathogen"], v["strain_alias"]).select(
-        "mention", F.col("canonical").alias("canonical"), "curie"
-    )
+    return link_pathogens(mentions).select("mention", "canonical", "curie")
 
 
 def q_sessionize(spark: SparkSession, sf: str) -> DataFrame:

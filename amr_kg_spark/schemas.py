@@ -23,21 +23,7 @@ TRANSCRIPTS = T.StructType(
     ]
 )
 
-# --- vocabularies (shapes mirror reference data/AMR/*.csv, data/MIC) -----
-PATHOGEN_VOCAB = T.StructType(
-    [
-        T.StructField("pathogen", T.StringType(), False),  # canonical name
-        T.StructField("ncbitaxon", T.StringType(), True),
-    ]
-)
-
-STRAIN_ALIAS = T.StructType(  # mirrors PATHOGEN_MAPPER, reference src/constants.py:14-50
-    [
-        T.StructField("alias", T.StringType(), False),
-        T.StructField("canonical", T.StringType(), False),
-    ]
-)
-
+# --- compound vocabulary (shape mirrors reference data/AMR/*.csv) --------
 COMPOUND_VOCAB = T.StructType(
     [
         T.StructField("pref_name", T.StringType(), False),
@@ -46,15 +32,6 @@ COMPOUND_VOCAB = T.StructType(
         T.StructField("spark_id", T.StringType(), True),
         T.StructField("drugcentral_id", T.StringType(), True),
         T.StructField("smiles", T.StringType(), True),
-    ]
-)
-
-INSTITUTE_VOCAB = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("institute", T.StringType(), False),
-        T.StructField("link", T.StringType(), True),
-        T.StructField("projects", T.StringType(), True),  # comma-joined
     ]
 )
 

@@ -4,7 +4,7 @@ The reference is batch-only and the north_rule is checkpoint-resumable
 batch; this module covers the INCREMENTAL path: new transcript files (in
 production: Iceberg incremental reads / Kafka) land continuously, mentions
 are extracted per micro-batch with the SAME operators as batch (the
-detect/pair/resolve plan is stream-safe: stateless projections + broadcast
+detect/pair/resolve plan is stream-safe: stateless projections + map-literal
 lookups), and two sinks are offered:
 
 - ``stream_triples``: append-mode triple stream (stateless — safe for

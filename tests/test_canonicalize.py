@@ -44,7 +44,8 @@ def test_canonicalize_merges_props_by_priority(spark):
         "props map<string,string>, priority int",
     )
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    out = {r.canonical_id: r for r in canonicalize_nodes(nodes, pairs).collect()}
+    cc = connected_components(pairs)
+    out = {r.canonical_id: r for r in canonicalize_nodes(nodes, cc).collect()}
     assert set(out) == {1, 9}
     merged = out[1]
     assert merged.merged_from == 3

@@ -4,6 +4,10 @@ columns, broadcast dims, whole-stage codegen)."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 from amr_kg_spark.queries import relational as R
 
 from tests.conftest import SF_SMALL
@@ -91,6 +95,37 @@ def test_kg_pipeline_has_no_python_row_udfs(spark):
     plan = _plan(extract_triples(spark, derive_transcripts(spark, SF_SMALL)))
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" in plan
+
+
+@pytest.mark.parametrize("query", ["kg_mentions", "kg_triples"])
+def test_mention_udf_runs_once_above_fan_out(spark, query):
+    """The mention UDF must appear exactly once in the physical plan, above
+    the round-robin fan-out exchange: a filter pushed below it would make
+    the optimizer clone the UDF onto the un-fanned (serial) scan side."""
+    from amr_kg_spark.queries.kg import QUERIES
+
+    plan = _plan(QUERIES[query](spark, SF_SMALL))
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    udfs = [i for i, line in enumerate(tree) if "ArrowEvalPython" in line]
+    assert len(udfs) == 1, plan
+    fan_out = re.search(
+        r"^\((\d+)\) Exchange\n.*\n.*RoundRobinPartitioning", plan, re.M
+    )
+    assert fan_out, plan
+
+    def depth(line: str) -> int:
+        m = re.search(r"[+:]- ", line)
+        return m.start() if m else -1
+
+    top = udfs[0]
+    subtree = []
+    for line in tree[top + 1:]:
+        if depth(line) <= depth(tree[top]):
+            break
+        subtree.append(line)
+    assert any(
+        line.endswith(f"- Exchange ({fan_out.group(1)})") for line in subtree
+    ), plan
 
 
 def test_emb_neardup_plan_is_blocked_not_cartesian(spark):

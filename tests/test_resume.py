@@ -7,6 +7,8 @@ import os
 import tempfile
 import uuid
 
+import pytest
+
 from amr_kg_spark.fixtures import synth_transcripts
 from amr_kg_spark.lineage import StageRunner
 from amr_kg_spark.pipeline import run_pipeline
@@ -236,3 +238,44 @@ def test_register_stage_tables_one_table_per_committed_stage(spark):
         spark.sql(f"DROP DATABASE {db} CASCADE")
         # dropping external tables leaves the stage data in place
         assert spark.read.parquet(os.path.join(w, "stages", "triples")).count() > 0
+
+
+_TURN = (
+    "Ciprofloxacin was tested against Escherichia coli K12 at 4 ug/mL "
+    "in Uppsala Antibiotic Center"
+)
+_TURN_TRIPLES = {
+    ("Ciprofloxacin", "testedAgainst", "Escherichia coli"),
+    ("Ciprofloxacin", "hasActivity", "4 ug/mL"),
+    ("Ciprofloxacin", "studiedAt", "Uppsala Antibiotic Center"),
+}
+_EDGE_INPUTS = {
+    "empty": ([], set()),
+    "one_turn": ([_TURN], _TURN_TRIPLES),
+    "identical_30": ([_TURN] * 30, _TURN_TRIPLES),
+    "null_text": ([None, _TURN], _TURN_TRIPLES),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_EDGE_INPUTS))
+def test_pipeline_edge_inputs(spark, case):
+    """Empty, single-turn, all-duplicate and NULL-text transcripts build
+    through all nine stages with canonicalization: the expected triple
+    set, and no NULL node id."""
+    from amr_kg_spark.schemas import TRANSCRIPTS
+
+    texts, expected = _EDGE_INPUTS[case]
+    t = spark.createDataFrame(
+        [("c1", i, "user", text, None, None) for i, text in enumerate(texts)],
+        TRANSCRIPTS,
+    )
+    with tempfile.TemporaryDirectory() as w:
+        d = run_pipeline(spark, t, w, run_id="edge", canonicalize=True)
+        runner = d["_runner"]
+        assert all(runner.is_committed(s) for s in STAGES)
+        assert _triple_set(d) == expected
+        nodes = spark.read.parquet(f"{w}/stages/nodes")
+        assert nodes.filter("node_id IS NULL").count() == 0
+        assert d["nodes"].filter("canonical_id IS NULL").count() == 0
+        assert d["edges"].filter("src_id IS NULL OR dst_id IS NULL").count() == 0
+        assert nodes.count() == d["nodes"].count() == (4 if expected else 0)
