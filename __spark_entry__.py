@@ -30,7 +30,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from amr_kg_spark.transcripts import derive_transcripts
 
     t = derive_transcripts(spark, "/root/testdata/sf0.001")
-    return extract_triples(spark, t)
+    return extract_triples(t)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

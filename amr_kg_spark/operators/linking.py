@@ -33,15 +33,13 @@ from .. import vocab
 from ..schemas import COMPOUND_VOCAB
 
 
-def vocab_tables(spark: SparkSession) -> dict[str, DataFrame]:
+def compound_vocab(spark: SparkSession) -> DataFrame:
     """The compound vocabulary as a DataFrame (the fuzzy-linking and
     canonicalization fixtures derive their dirty variants from it)."""
-    return {
-        "compound": spark.createDataFrame(
-            [(c[0], c[1], c[2], c[3], c[4], None) for c in vocab.COMPOUNDS],
-            COMPOUND_VOCAB,
-        ),
-    }
+    return spark.createDataFrame(
+        [(c[0], c[1], c[2], c[3], c[4], None) for c in vocab.COMPOUNDS],
+        COMPOUND_VOCAB,
+    )
 
 
 def entity_resolution_rows() -> list[tuple[str, str, str, str | None]]:

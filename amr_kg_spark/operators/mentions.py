@@ -68,17 +68,17 @@ def detect_mentions(turns: DataFrame, text_col: str = "text") -> DataFrame:
     inside whole-stage codegen and sends only the text column through Arrow.
 
     The input is fanned out to the session's parallelism here (no-op on
-    multi-split inputs AND on non-file-backed inputs such as streams):
-    mention detection is the compute-dense pandas-UDF stage, and a small
-    single-file scan would otherwise pin it to one core. Measured at
-    sf0.1/local[32]: 1.8s fanned out vs 8.2s pinned (min-of-3). Placed
-    HERE rather than in the transcripts derivation so shuffle-first
-    consumers (reconstruction, sessionization — whose groupBy/window
-    repartitions anyway) don't pay a useless round-robin shuffle.
+    multi-split inputs): mention detection is the compute-dense pandas-UDF
+    stage, and a small single-file scan would otherwise pin it to one
+    core. Measured at sf0.1/local[32]: 1.8s fanned out vs 8.2s pinned
+    (min-of-3). Placed HERE rather than in the transcripts derivation so
+    shuffle-first consumers (reconstruction, sessionization — whose
+    groupBy/window repartitions anyway) don't pay a useless round-robin
+    shuffle.
     """
     from ..session import fan_out
 
-    turns = fan_out(turns) if not turns.isStreaming else turns
+    turns = fan_out(turns)
     vocabs = default_vocabularies()
 
     @F.pandas_udf(T.ArrayType(MENTION))

@@ -8,9 +8,9 @@ queries/datapipe.py so the driver verifies values, not just shapes.
 Scale shape: every signal is a pure projection over ``text``, so the
 whole family composes into ONE ``select`` over ONE scan via
 :func:`with_signals` — no self-joins, no shuffles (plan-asserted in
-tests/test_plans.py). The per-signal functions (``quality_score``,
-``lang_id``, ``repetition_signals``) are thin column-subset views of the
-same projection; Catalyst's ColumnPruning drops the unused expressions.
+tests/test_plans.py). :func:`corpus_filter` gates on those columns;
+a caller that needs a subset selects it, and Catalyst's ColumnPruning
+drops the unused expressions.
 """
 
 from __future__ import annotations
@@ -88,7 +88,10 @@ def with_signals(
 
     Adds: n_tokens, est_bpe_tokens, mean_word_len, stopword_ratio,
     punct_ratio, quality, lang_pred, stopword_hits, dup_ngram_ratio,
-    dup_token_ratio, top_token_ratio.
+    dup_token_ratio, top_token_ratio. The last three are Gopher-style
+    repetition signals (Rae et al., appendix A): 1 - distinct/total
+    word n-grams, 1 - distinct/total tokens, and the share of the most
+    frequent token (sorted-run-length, see :func:`_top_run_length`).
     """
     t = F.col("__t")
     grams = F.transform(
@@ -169,43 +172,6 @@ def with_signals(
         F.when(n_tok > 0, F.round(top / n_tok, 6))
         .otherwise(F.lit(0.0))
         .alias("top_token_ratio"),
-    )
-
-
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Cheap quality heuristics: length, mean word length, stopword ratio,
-    non-alphanumeric ratio. Score = weighted blend, rounded for
-    cross-engine comparability. Column-subset view of with_signals."""
-    return with_signals(docs, text_col).select(
-        "doc_id", "n_tokens", "mean_word_len", "stopword_ratio",
-        "punct_ratio", "quality",
-    )
-
-
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic language ID: count stopword hits per language, argmax with
-    deterministic tie-break on language code; 'und' when nothing hits."""
-    return with_signals(docs, text_col).select(
-        "doc_id", "lang_pred", "stopword_hits"
-    )
-
-
-def repetition_signals(
-    docs: DataFrame, text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """Gopher-style within-document repetition signals — Catalyst-only:
-
-    - ``dup_ngram_ratio``: 1 - distinct/total n-gram shingles (0 = no
-      repeated n-gram; near 1 = boilerplate loops);
-    - ``dup_token_ratio``: 1 - distinct/total tokens;
-    - ``top_token_ratio``: share of the single most frequent token
-      (sorted-run-length, O(n log n) — see _top_run_length).
-
-    Standard pre-training quality gates (Rae et al., Gopher appendix A):
-    documents over thresholds on these are template/spam artifacts.
-    """
-    return with_signals(docs, text_col, n).select(
-        "doc_id", "dup_ngram_ratio", "dup_token_ratio", "top_token_ratio"
     )
 
 

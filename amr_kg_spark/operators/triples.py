@@ -25,7 +25,7 @@ directions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .linking import entity_resolution_map
@@ -93,7 +93,7 @@ def cooccurrence_pairs(with_mentions: DataFrame) -> DataFrame:
     )
 
 
-def resolve_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:
+def resolve_pairs(pairs: DataFrame) -> DataFrame:
     """Resolve both endpoints through ``linking.entity_resolution_map``;
     activity values resolve to themselves (label Activity, no curie).
 
@@ -201,8 +201,8 @@ def export_undirected(triples: DataFrame) -> DataFrame:
     ).select("t.subj", "t.subj_curie", "t.pred", "t.obj", "t.obj_curie")
 
 
-def extract_triples(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
+def extract_triples(transcripts: DataFrame) -> DataFrame:
     """transcripts -> distinct triples (the flagship path)."""
     with_mentions = detect_mentions(transcripts)
     pairs = cooccurrence_pairs(with_mentions)
-    return build_triples(resolve_pairs(spark, pairs))
+    return build_triples(resolve_pairs(pairs))

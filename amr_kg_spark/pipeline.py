@@ -9,10 +9,12 @@ Stage graph (each stage a StageRunner checkpoint):
     -> resolved          map-literal linking + strain normalization
     -> nodes / edges / triples   (dedup shuffles, deterministic ids)
 
-Skew: the mention/pair stages are embarrassingly parallel (no shuffle), so
-a hot conv_id only matters for conversation-level grouping, which uses the
-salted two-phase reconstruction (operators/reconstruct.py). AQE skew-join
-splitting stays on for the dedup shuffles.
+Skew: no KG stage shuffles on conv_id (the mention/pair stages are
+embarrassingly parallel), so a hot conv_id only matters for the
+conversation-level queries outside this pipeline, which shuffle on it
+unsalted: ``kg_reconstruct`` calls ``conversation_text``, and
+``conversation_text_salted`` (operators/reconstruct.py) is its opt-in
+skew-safe form. AQE skew-join splitting stays on for the dedup shuffles.
 """
 
 from __future__ import annotations
@@ -63,7 +65,7 @@ def run_pipeline(
         "mentions_flat", lambda: explode_mentions(with_mentions)
     )
     pairs = runner.run("pairs", lambda: cooccurrence_pairs(with_mentions))
-    resolved = runner.run("resolved", lambda: resolve_pairs(spark, pairs))
+    resolved = runner.run("resolved", lambda: resolve_pairs(pairs))
     nodes = runner.run("nodes", lambda: build_nodes(resolved))
     edges = runner.run("edges", lambda: build_edges(resolved))
     triples = runner.run("triples", lambda: build_triples(resolved))

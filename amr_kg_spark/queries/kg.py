@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import vocab
-from ..operators.linking import link_compounds, link_pathogens, vocab_tables
+from ..operators.linking import compound_vocab, link_compounds, link_pathogens
 from ..operators.mentions import detect_mentions, explode_mentions
 from ..operators.reconstruct import conversation_text, ordered_turns
 from ..operators.triples import (
@@ -199,22 +199,22 @@ def q_conversation_features(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_triples(spark: SparkSession, sf: str) -> DataFrame:
-    return extract_triples(spark, derive_transcripts(spark, sf))
+    return extract_triples(derive_transcripts(spark, sf))
 
 
 def q_triples_undirected(spark: SparkSession, sf: str) -> DataFrame:
-    return export_undirected(extract_triples(spark, derive_transcripts(spark, sf)))
+    return export_undirected(extract_triples(derive_transcripts(spark, sf)))
 
 
 def q_nodes(spark: SparkSession, sf: str) -> DataFrame:
     t = derive_transcripts(spark, sf)
-    resolved = resolve_pairs(spark, cooccurrence_pairs(detect_mentions(t)))
+    resolved = resolve_pairs(cooccurrence_pairs(detect_mentions(t)))
     return build_nodes(resolved).select("label", "name", "curie")
 
 
 def q_edge_counts(spark: SparkSession, sf: str) -> DataFrame:
     t = derive_transcripts(spark, sf)
-    resolved = resolve_pairs(spark, cooccurrence_pairs(detect_mentions(t)))
+    resolved = resolve_pairs(cooccurrence_pairs(detect_mentions(t)))
     return (
         build_edges(resolved)
         .groupBy("rel_type")
@@ -295,7 +295,7 @@ def q_fuzzy_link(spark: SparkSession, sf: str) -> DataFrame:
     Dirty variants are derived deterministically from the vocabulary."""
     from ..operators.linking import fuzzy_link
 
-    v = vocab_tables(spark)["compound"]
+    v = compound_vocab(spark)
     dirty = v.select(
         F.explode(
             F.array(
@@ -313,7 +313,7 @@ def q_canonicalize(spark: SparkSession, sf: str) -> DataFrame:
     (rows-only: iterative CC + LSH)."""
     from ..operators.canonicalize import canonicalize_kg
 
-    v = vocab_tables(spark)["compound"]
+    v = compound_vocab(spark)
     variants = (
         v.select(
             F.explode(

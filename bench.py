@@ -132,17 +132,11 @@ def main() -> None:
         from bench_scaling import SIZE_MULTIPLIERS, _fit
 
         from amr_kg_spark.fixtures import synth_transcripts
-        from amr_kg_spark.operators.mentions import detect_mentions
-        from amr_kg_spark.operators.triples import (
-            build_triples,
-            cooccurrence_pairs,
-            resolve_pairs,
-        )
+        from amr_kg_spark.operators.triples import extract_triples
 
         def flagship(n):
-            t = synth_transcripts(spark, n_turns=n, n_convs=1000, hot_frac=0.1)
-            return build_triples(
-                resolve_pairs(spark, cooccurrence_pairs(detect_mentions(t)))
+            return extract_triples(
+                synth_transcripts(spark, n_turns=n, n_convs=1000, hot_frac=0.1)
             )
 
         # warm the flagship plan itself (codegen + Arrow workers for THIS

@@ -48,7 +48,7 @@ def _plan(spark, detect, n_turns: int):
     )
 
     t = synth_transcripts(spark, n_turns=n_turns, n_convs=1000, hot_frac=0.1)
-    return build_triples(resolve_pairs(spark, cooccurrence_pairs(detect(t))))
+    return build_triples(resolve_pairs(cooccurrence_pairs(detect(t))))
 
 
 SIZE_MULTIPLIERS = (0.5, 1.0, 1.5, 2.0)

@@ -9,7 +9,7 @@ clusters):
         jobs/build_kg.py \
         --input  <transcripts parquet/Iceberg path> \
         --workdir <checkpoint/output dir> \
-        [--canonicalize] [--run-id RID] [--salt-buckets 1024]
+        [--canonicalize] [--run-id RID] [--catalog-db DB]
 
 Local smoke:
     spark-submit --master 'local[8]' --py-files /tmp/amr_kg_spark.zip \

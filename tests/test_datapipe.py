@@ -240,7 +240,7 @@ def test_ngram_jaccard_exactness_vs_bruteforce(spark, threshold):
 def test_repetition_signals(spark):
     """Gopher-style repetition metrics: hand-checked values on constructed
     docs (pure repetition, no repetition, mixed)."""
-    from amr_kg_spark.operators.text import repetition_signals
+    from amr_kg_spark.operators.text import with_signals
 
     docs = spark.createDataFrame(
         [
@@ -250,7 +250,10 @@ def test_repetition_signals(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r for r in repetition_signals(docs, n=3).collect()}
+    sig = with_signals(docs, n=3).select(
+        "doc_id", "dup_ngram_ratio", "dup_token_ratio", "top_token_ratio"
+    )
+    out = {r.doc_id: r for r in sig.collect()}
     # doc 1: 4 trigrams all identical -> dup 0.75; tokens 6 -> distinct 1
     assert out[1].dup_ngram_ratio == 0.75
     assert out[1].dup_token_ratio == round(1 - 1 / 6, 6)

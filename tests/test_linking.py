@@ -9,10 +9,10 @@ from fractions import Fraction
 
 from amr_kg_spark import vocab
 from amr_kg_spark.operators.linking import (
+    compound_vocab,
     fuzzy_link,
     link_compounds,
     link_pathogens,
-    vocab_tables,
 )
 
 
@@ -46,13 +46,13 @@ def test_strain_normalization(spark):
 
 
 def test_fuzzy_link_matches_dirty_mentions(spark):
-    v = vocab_tables(spark)
+    v = compound_vocab(spark)
     dirty = spark.createDataFrame(
         [("ciprofloxacin",), ("Meropenem ",), ("VANCOMYCIN",), ("mero penem",),
          ("totally unrelated string",)],
         "mention string",
     )
-    got = fuzzy_link(dirty, v["compound"], threshold=0.55).collect()
+    got = fuzzy_link(dirty, v, threshold=0.55).collect()
     matched = {(r.mention, r.matched_name) for r in got}
     assert ("ciprofloxacin", "Ciprofloxacin") in matched
     assert ("Meropenem ", "Meropenem") in matched
@@ -102,7 +102,7 @@ def test_fuzzy_link_equals_bruteforce_on_dirty_variants(spark):
     threshold 0.4 no pair that brute force finds is missing."""
     names = [c[0] for c in vocab.COMPOUNDS]
     dirty = sorted({f(n) for n in names for f in (str.lower, str.upper, lambda s: s + " ")})
-    v = vocab_tables(spark)["compound"]
+    v = compound_vocab(spark)
     mentions = spark.createDataFrame([(m,) for m in dirty], "mention string")
     for threshold in (0.4, 0.8):
         got = {

@@ -92,7 +92,7 @@ def test_kg_pipeline_has_no_python_row_udfs(spark):
     from amr_kg_spark.operators.triples import extract_triples
     from amr_kg_spark.transcripts import derive_transcripts
 
-    plan = _plan(extract_triples(spark, derive_transcripts(spark, SF_SMALL)))
+    plan = _plan(extract_triples(derive_transcripts(spark, SF_SMALL)))
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" in plan
 
@@ -206,7 +206,7 @@ def test_top_token_ratio_bounded_on_long_doc(spark):
     finish in seconds, with the exact expected ratio."""
     import time
 
-    from amr_kg_spark.operators.text import repetition_signals
+    from amr_kg_spark.operators.text import with_signals
 
     # 100k tokens, 20k distinct, each appearing 5x except one appearing 6x
     words = [f"w{i % 20000}" for i in range(100000)] + ["w7"]
@@ -214,7 +214,9 @@ def test_top_token_ratio_bounded_on_long_doc(spark):
         [(1, " ".join(words))], "doc_id long, text string"
     )
     t0 = time.monotonic()
-    row = repetition_signals(docs).collect()[0]
+    row = with_signals(docs, n=3).select(
+        "doc_id", "dup_ngram_ratio", "dup_token_ratio", "top_token_ratio"
+    ).collect()[0]
     wall = time.monotonic() - t0
     assert row["top_token_ratio"] == round(6 / 100001, 6)
     assert row["dup_token_ratio"] == round(1 - 20000 / 100001, 6)
