@@ -9,7 +9,7 @@ DataFrame/Catalyst pipeline:
 - vectorized (Arrow pandas-UDF) dictionary/pattern mention detection for the
   reference's entity classes (pathogens+strains, compounds/drugs,
   MIC/pChEMBL activity values, institutions)
-- entity linking via broadcast alias joins with the reference's priority
+- entity linking via one literal alias map with the reference's priority
   fallback chain (ChEMBL > PubChem > SPARK > DrugCentral,
   reference src/relations.py:146-155,198-204) plus MinHash-LSH blocking
 - canonicalization via connected components over a similarity self-join

@@ -30,15 +30,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import vocab
-from ..schemas import COMPOUND_VOCAB
 
 
 def compound_vocab(spark: SparkSession) -> DataFrame:
-    """The compound vocabulary as a DataFrame (the fuzzy-linking and
-    canonicalization fixtures derive their dirty variants from it)."""
+    """The compound preferred names as a one-column ``pref_name`` frame (the
+    fuzzy-linking and canonicalization fixtures derive their dirty variants
+    from it)."""
     return spark.createDataFrame(
-        [(c[0], c[1], c[2], c[3], c[4], None) for c in vocab.COMPOUNDS],
-        COMPOUND_VOCAB,
+        [(c[0],) for c in vocab.COMPOUNDS], "pref_name string not null"
     )
 
 

@@ -132,13 +132,13 @@ def detect_mentions_jvm(
     vocabularies: dict[str, list[str]] | None = None,
     text_col: str = "text",
 ) -> DataFrame:
-    """JVM-side variant: the same gazetteer alternations evaluated with
-    ``regexp_extract_all`` inside whole-stage codegen — zero Python in the
-    plan. Loses match positions (start = -1) but is the fastest path when
-    only mention STRINGS are needed (e.g. co-occurrence triples). Kept
-    alongside the pandas-UDF path (the north-star mandated surface, and
-    the extension point for non-regex detectors like Aho-Corasick or model
-    scoring); both produce the same mention set — asserted in tests.
+    """The zero-Python workload of ``bench_scaling.py``'s box-price control
+    job: the same gazetteer alternations as :func:`detect_mentions`,
+    evaluated with ``regexp_extract_all`` inside whole-stage codegen, so its
+    wall tracks the box rather than the Python worker pool. Match positions
+    are lost (start = -1); otherwise it yields the same mention multiset as
+    :func:`detect_mentions` (asserted in tests). The pipelines and queries
+    run :func:`detect_mentions`.
     """
     vocabs = vocabularies or default_vocabularies()
 

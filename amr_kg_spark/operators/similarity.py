@@ -1,4 +1,6 @@
-"""Similarity search over embedding columns (array<float>).
+"""Single-query similarity search over embedding columns (array<float>),
+behind the ``dp_cosine_topk``, ``dp_ann_topk`` and ``dp_ivf_topk`` registry
+rows.
 
 - ``cosine_topk``: brute-force exact top-k against a query vector —
   a single scan with a Catalyst-only cosine expression; the correctness
@@ -11,17 +13,10 @@
 - ``ivf_topk_pretrained``: inverted-file ANN — a fixed coarse quantizer
   (pretrained centroids, e.g. ``fit_ivf``'s KMeans ``clusterCenters()``)
   assigns every vector a cluster id; a query scans only the ``n_probe``
-  clusters whose centroids are nearest. At scale the cluster id is the
-  table's partition key, so probing is partition pruning: a query reads
-  n_probe/n_clusters of the corpus from disk.
-- ``cosine_topk_join`` / ``ivf_topk_join``: the BATCH siblings — top-k
-  for every row of a query set in one pass. Exact (deliberate broadcast
-  nested-loop: the |Q| x |C| product IS exact batch kNN) and ANN
-  (per-query probe selection in Catalyst, broadcast hash join on the
-  cluster id — never |Q| x |C|).
-- ``quantize_embeddings`` / ``dequantize_embeddings``: symmetric int8 —
-  a 4x storage/shuffle/broadcast cut at ~1e-2 cosine error (tested),
-  composable with both joins.
+  clusters whose centroids are nearest. ``dp_ivf_topk`` uses the first
+  data vectors as centroids so the DuckDB oracle can derive them too.
+- ``fit_ivf``: the KMeans coarse quantizer;
+  ``featurize.cluster_balanced_sample`` buckets documents with it.
 
 Hyperplanes are generated from a seeded RNG on the driver and shipped as
 literals (they are tiny: R x dim floats).
@@ -229,208 +224,3 @@ def rhp_ann_topk(
     sigged = emb.withColumn("sig", rhp_signature(vec_col, planes))
     cands = sigged.filter(F.col("sig").isin(probe_sigs))
     return _rerank_topk(cands, query_vec, k, id_col, vec_col)
-
-
-def write_ivf_table(
-    emb: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    path: str,
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index as a cluster-partitioned table — the
-    ingest-time half of IVF at scale: assignment happens once, the cluster
-    id becomes the physical partition key, and every probe afterwards is
-    PARTITION PRUNING (the scan reads n_probe/n_clusters of the corpus
-    from disk; asserted on the plan in tests/test_plans.py)."""
-    assign_fixed_centroids(emb, centroids, vec_col).write.mode(
-        "overwrite"
-    ).partitionBy("cluster").parquet(path)
-
-
-def ivf_table_topk(
-    spark,
-    path: str,
-    query_vec: list[float],
-    centroids: list[tuple[int, list[float]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probe: int = 4,
-) -> DataFrame:
-    """Query the materialized IVF table: pick the n_probe nearest centroids
-    on the driver (centroid list is tiny), scan ONLY their partitions,
-    exact cosine rerank."""
-    probes = _nearest_centroids(query_vec, centroids, n_probe)
-    cands = spark.read.parquet(path).filter(F.col("cluster").isin(probes))
-    return _rerank_topk(cands, query_vec, k, id_col, vec_col)
-
-
-def cosine_topk_join(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    query_id_col: str = "query_id",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Batch k-NN JOIN: exact top-k corpus neighbors by cosine for EVERY
-    query row — the set-valued sibling of ``cosine_topk`` (embedding-dedup
-    audits, cluster assignment, retrieval-eval harnesses all want the
-    whole query set at once, not a driver loop over single queries).
-
-    Scale shape: the query side of a k-NN join is orders of magnitude
-    smaller than the corpus, so it is BROADCAST and the corpus scans
-    exactly once, computing all query dots per corpus row inside the scan
-    stage (a broadcast nested-loop join — the |Q| x |C| product is the
-    definition of exact k-NN, not an accident; cap |Q| per run and batch,
-    or switch to the LSH/IVF operators when approximation is acceptable).
-    The only exchange is the per-query top-k window over k x |Q| rows.
-    Deterministic tie-break on corpus id.
-
-    Zero-norm vectors (cosine undefined, 0/0 -> NULL) are filtered from
-    BOTH sides before scoring: a NULL cosine sorts last under desc but
-    would still occupy top-k rank slots on a small corpus, and oracle
-    engines disagree on NULL placement — so degenerate vectors simply
-    never rank, matching the exact-kNN contract."""
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-    ).filter(_norm(F.col("__qv")) > 0)
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__cv")
-    ).filter(_norm(F.col("__cv")) > 0)
-    cos = _cosine(F.col("__cv"), F.col("__qv"))
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "query_id", "vec_id", cos.alias("_cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            "query_id", "vec_id", F.round("_cos", 6).alias("cosine"), 
-            F.col("__rn").alias("rank"),
-        )
-    )
-
-
-def quantize_embeddings(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    out_col: str = "embedding_q8",
-    scale_col: str = "q8_scale",
-) -> DataFrame:
-    """Symmetric per-vector int8 quantization: ``scale = max(|x|)/127``,
-    ``q = round(x/scale)`` — a 4x storage/shuffle cut for a 100 TB
-    embedding table at ~1e-2 cosine error (tested bound). Catalyst-only
-    (two array passes per row, no UDF); all-zero vectors get scale 0 and
-    an all-zero code (dequantizes exactly)."""
-    x = F.transform(F.col(vec_col), lambda v: v.cast("double"))
-    amax = F.array_max(F.transform(x, F.abs))
-    scale = F.when(amax > 0, amax / F.lit(127.0)).otherwise(F.lit(0.0))
-    q = F.when(
-        F.col(scale_col) > 0,
-        F.transform(
-            x, lambda v: F.round(v / F.col(scale_col)).cast("tinyint")
-        ),
-    ).otherwise(F.transform(x, lambda v: F.lit(0).cast("tinyint")))
-    return emb.withColumn(scale_col, scale).withColumn(out_col, q)
-
-
-def dequantize_embeddings(
-    emb: DataFrame,
-    q_col: str = "embedding_q8",
-    scale_col: str = "q8_scale",
-    out_col: str = "embedding_dq",
-) -> DataFrame:
-    """Inverse of :func:`quantize_embeddings`: ``x ≈ q * scale``."""
-    return emb.withColumn(
-        out_col,
-        F.transform(
-            F.col(q_col), lambda v: v.cast("double") * F.col(scale_col)
-        ),
-    )
-
-
-def ivf_topk_join(
-    queries: DataFrame,
-    corpus: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    k: int = 10,
-    n_probe: int = 4,
-    query_id_col: str = "query_id",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Batch IVF ANN JOIN: approximate top-k corpus neighbors for EVERY
-    query row — the ANN sibling of :func:`cosine_topk_join` (which is
-    exact but reads the whole corpus per batch). Completes the operator
-    symmetry: single-query exact/ANN (``cosine_topk`` / ``ivf_topk_pretrained``)
-    and batch exact (``cosine_topk_join``) already exist.
-
-    Per query, the ``n_probe`` nearest centroids are selected IN CATALYST
-    (centroids are tiny driver literals: sort an array of (l2-dist, cid)
-    structs, slice, explode — no driver loop, so the query side can be a
-    full DataFrame, not one literal vector); the corpus carries its
-    cluster id (``assign_fixed_centroids``, or a pre-materialized
-    cluster-partitioned table); candidates meet on an EQUI join on
-    ``cluster`` and exact cosine reranks within them.
-
-    Scale shape: the query side (|Q| x n_probe rows) broadcasts; the
-    corpus scans ONCE and each row meets only the queries probing its
-    cluster — a broadcast hash join on a long key, never |Q| x |C|. With
-    the corpus written partitioned by cluster, the same join becomes
-    partition-pruned I/O. Zero-norm vectors are filtered on both sides
-    (cosine undefined), matching ``cosine_topk_join``. Deterministic:
-    centroid ties break on cid (struct ordering), rank ties on corpus id.
-    """
-    from pyspark.sql import Window
-
-    probe_structs = F.array(
-        *[
-            F.struct(
-                _l2sq(F.col("__qv"), c).alias("d"), F.lit(int(cid)).alias("cid")
-            )
-            for cid, c in centroids
-        ]
-    )
-    probes = F.transform(
-        # sort_array = array_sort minus the interpreted comparator (the
-        # literal centroid structs are never NULL; NaN ordering identical)
-        F.slice(F.sort_array(probe_structs), 1, n_probe), lambda s: s["cid"]
-    )
-    q = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-        )
-        .filter(_norm(F.col("__qv")) > 0)
-        .select("query_id", "__qv", F.explode(probes).alias("cluster"))
-    )
-    c = (
-        assign_fixed_centroids(corpus, centroids, vec_col)
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("__cv"),
-            "cluster",
-        )
-        .filter(_norm(F.col("__cv")) > 0)
-    )
-    cos = _cosine(F.col("__cv"), F.col("__qv"))
-    scored = c.join(F.broadcast(q), "cluster").select(
-        "query_id", "vec_id", cos.alias("_cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            "query_id", "vec_id", F.round("_cos", 6).alias("cosine"),
-            F.col("__rn").alias("rank"),
-        )
-    )

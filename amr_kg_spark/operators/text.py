@@ -320,37 +320,3 @@ def unigram_logprob(
             F.count("*").alias("n_tokens_scored"),
         )
     )
-
-
-def with_compression_ratio(
-    docs: DataFrame,
-    text_col: str = "text",
-    out_col: str = "compression_ratio",
-    level: int = 6,
-) -> DataFrame:
-    """zlib-compressed size over raw UTF-8 size per document — the classic
-    redundancy signal (highly templated / repeated text compresses far
-    below ~0.4; natural prose sits ~0.5-0.7). Complements the Gopher
-    ratios in :func:`with_signals`, which only see exact token/n-gram
-    repeats.
-
-    The one quality signal here that is not Catalyst-expressible (no
-    deflate in Spark SQL), so it is a batched Arrow ``pandas_udf`` — the
-    sanctioned slow path: one ArrowEvalPython stage inside the scan, zero
-    shuffles, never per-row Python (plan-asserted in tests). NULL text ->
-    NULL; empty text -> NULL (ratio undefined at length 0)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cr(s):
-        import zlib
-
-        def one(x):
-            if x is None or len(x) == 0:
-                return None
-            raw = x.encode("utf-8")
-            return round(len(zlib.compress(raw, level)) / len(raw), 6)
-
-        return s.map(one)
-
-    return docs.withColumn(out_col, _cr(F.col(text_col)))

@@ -35,9 +35,7 @@ Scale shape: training is a driver-side pass over a bounded sample
 KMeans fits on a sample the same way). Counting is embarrassingly
 parallel: the merge table ships in the UDF closure, batches arrive
 via Arrow, and the count is a projection — no exchange, no state. At
-100 TB you'd train the merge table once, persist it as JSON next to the
-corpus, and pass it to every job; ``merges_to_json``/``merges_from_json``
-cover that round-trip.
+100 TB you'd train the merge table once and pass it to every job.
 
 No reference analogue (the reference pipeline has no tokenizer;
 beyond-reference surface like the rest of the datapipe family).
@@ -46,7 +44,6 @@ beyond-reference surface like the rest of the datapipe family).
 from __future__ import annotations
 
 import heapq
-import json
 import re
 from collections import Counter
 from typing import Iterable
@@ -213,14 +210,6 @@ def bpe_encode(
 
 def merge_ranks(merges: list[tuple[str, str]]) -> dict[tuple[str, str], int]:
     return {pair: i for i, pair in enumerate(merges)}
-
-
-def merges_to_json(merges: list[tuple[str, str]]) -> str:
-    return json.dumps([list(p) for p in merges])
-
-
-def merges_from_json(s: str) -> list[tuple[str, str]]:
-    return [tuple(p) for p in json.loads(s)]
 
 
 def sample_texts(

@@ -6,7 +6,7 @@ Stage graph (each stage a StageRunner checkpoint):
   transcripts            (input; in production an Iceberg table)
     -> mentions          detect + explode (Arrow pandas UDF, zero shuffle)
     -> pairs             per-turn co-occurrence (higher-order fns, zero shuffle)
-    -> resolved          map-literal linking + strain normalization
+    -> resolved          map-literal linking (strain aliases map to species)
     -> nodes / edges / triples   (dedup shuffles, deterministic ids)
 
 Skew: no KG stage shuffles on conv_id (the mention/pair stages are

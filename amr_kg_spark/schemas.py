@@ -23,18 +23,6 @@ TRANSCRIPTS = T.StructType(
     ]
 )
 
-# --- compound vocabulary (shape mirrors reference data/AMR/*.csv) --------
-COMPOUND_VOCAB = T.StructType(
-    [
-        T.StructField("pref_name", T.StringType(), False),
-        T.StructField("chembl_id", T.StringType(), True),
-        T.StructField("pubchem_id", T.StringType(), True),
-        T.StructField("spark_id", T.StringType(), True),
-        T.StructField("drugcentral_id", T.StringType(), True),
-        T.StructField("smiles", T.StringType(), True),
-    ]
-)
-
 # --- extraction output ----------------------------------------------------
 MENTION = T.StructType(
     [

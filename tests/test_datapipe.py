@@ -394,146 +394,6 @@ FROM t LEFT JOIN re USING (doc_id)
     # no-false-positive side; positive support lives in the planted test
 
 
-def test_cosine_topk_join_matches_duckdb_and_single_query(spark):
-    """Batch k-NN join: per-query results equal the single-query operator
-    AND an independent DuckDB window formulation; query side broadcast."""
-    import duckdb
-
-    from amr_kg_spark.operators.similarity import cosine_topk, cosine_topk_join
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    queries = emb.filter("vec_id % 97 = 0").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = cosine_topk_join(queries, emb, k=5)
-    rows = got.collect()
-    by_q: dict = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, []).append((r.rank, r.vec_id, r.cosine))
-    # consistency with the single-query operator for each query
-    for qid in by_q:
-        qv = [
-            float(v)
-            for v in emb.filter(F.col("vec_id") == qid).first()["embedding"]
-        ]
-        single = [
-            (i + 1, r.vec_id, r.cosine)
-            for i, r in enumerate(cosine_topk(emb, qv, k=5).collect())
-        ]
-        assert sorted(by_q[qid]) == single, qid
-    # independent DuckDB oracle over the same parquet
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW e AS SELECT * FROM "
-        f"read_parquet('{SF_SMALL}/embeddings.parquet')"
-    )
-    dot = (
-        "list_sum(list_transform(generate_series(1, len(c.embedding)), "
-        "i -> CAST(c.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE)))"
-    )
-    nc = (
-        "sqrt(list_sum(list_transform(generate_series(1, len(c.embedding)), "
-        "i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))))"
-    )
-    nq = (
-        "sqrt(list_sum(list_transform(generate_series(1, len(q.embedding)), "
-        "i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))))"
-    )
-    exp_rows = con.execute(
-        f"""
-        SELECT query_id, vec_id, round(cos, 6) AS cosine, rn FROM (
-          SELECT q.vec_id AS query_id, c.vec_id,
-                 {dot} / ({nc} * {nq}) AS cos,
-                 row_number() OVER (
-                   PARTITION BY q.vec_id
-                   ORDER BY {dot} / ({nc} * {nq}) DESC, c.vec_id
-                 ) AS rn
-          FROM e c CROSS JOIN (SELECT * FROM e WHERE vec_id % 97 = 0) q
-        ) WHERE rn <= 5
-        """
-    ).fetchall()
-    exp = {(a, b, c, d) for a, b, c, d in exp_rows}
-    assert {(r.query_id, r.vec_id, r.cosine, r.rank) for r in rows} == exp
-    # the query side must be broadcast
-    plan = got._sc._jvm.PythonSQLUtils.explainString(
-        got._jdf.queryExecution(), "formatted"
-    )
-    assert "BroadcastNestedLoopJoin" in plan
-
-
-def test_quantize_embeddings_roundtrip_and_cosine_error(spark):
-    """int8 quantization: codes in range, DuckDB value parity on the
-    quantization arithmetic, reconstruction error bounded elementwise by
-    scale/2, and cosine distortion vs fp under 1e-2 on the real corpus."""
-    import duckdb
-
-    from amr_kg_spark.operators.similarity import (
-        _dot,
-        _norm,
-        dequantize_embeddings,
-        quantize_embeddings,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    q = quantize_embeddings(emb)
-    rows = q.select("vec_id", "q8_scale", "embedding_q8").collect()
-    assert all(
-        all(-127 <= int(v) <= 127 for v in r.embedding_q8) for r in rows
-    )
-    # DuckDB replays the arithmetic exactly (round-half-up matches Spark
-    # F.round HALF_UP on positive halves; scale>0 on this corpus)
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW e AS SELECT * FROM "
-        f"read_parquet('{SF_SMALL}/embeddings.parquet')"
-    )
-    exp = {
-        vid: (s, tuple(code))
-        for vid, s, code in con.execute(
-            """
-            SELECT vec_id, amax / 127.0 AS scale,
-                   list_transform(x, v -> CAST(round(v / (amax / 127.0), 0) AS TINYINT))
-            FROM (
-              SELECT vec_id,
-                     list_transform(embedding, v -> CAST(v AS DOUBLE)) AS x,
-                     list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS amax
-              FROM e
-            )
-            """
-        ).fetchall()
-    }
-    got = {
-        r.vec_id: (r.q8_scale, tuple(int(v) for v in r.embedding_q8))
-        for r in rows
-    }
-    for vid in got:
-        gs, gc = got[vid]
-        es, ec = exp[vid]
-        assert abs(gs - es) < 1e-12 and gc == tuple(int(v) for v in ec), vid
-    # reconstruction + cosine distortion
-    dq = dequantize_embeddings(q)
-    err = dq.select(
-        F.array_max(
-            F.zip_with(
-                F.col("embedding_dq"),
-                F.transform("embedding", lambda v: v.cast("double")),
-                lambda a, b: F.abs(a - b),
-            )
-        ).alias("e"),
-        (F.col("q8_scale") / 2 + F.lit(1e-9)).alias("bound"),
-    )
-    assert err.filter(F.col("e") > F.col("bound")).count() == 0
-    orig = F.transform(F.col("embedding"), lambda v: v.cast("double"))
-    cosd = dq.select(
-        (
-            F.lit(1.0)
-            - _dot(F.col("embedding_dq"), orig)
-            / (_norm(F.col("embedding_dq")) * _norm(orig))
-        ).alias("d")
-    )
-    assert cosd.agg(F.max("d")).collect()[0][0] < 1e-2
-
-
 def test_dedup_lines_literal_sep(spark):
     """sep is a LITERAL separator (round-5 ADVICE #2): separators that are
     regex metacharacters ('.', '|') must split on the exact character and
@@ -560,30 +420,6 @@ def test_dedup_lines_literal_sep(spark):
     got = {r.doc_id: r for r in dedup_lines(pipe, sep="|", min_chars=3).collect()}
     assert got[1].text_deduped == "a longer segment|keep me"
     assert got[2].text_deduped == "second doc" and got[2].n_lines_dropped == 1
-
-
-def test_cosine_topk_join_zero_norm_vectors_excluded(spark):
-    """Zero-norm vectors (undefined cosine) never occupy rank slots on
-    either side (round-5 ADVICE #3): a zero corpus vector is absent even
-    when k > |corpus|, and a zero query vector yields no result rows."""
-    from amr_kg_spark.operators.similarity import cosine_topk_join
-
-    corpus = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0]),
-            (2, [0.0, 0.0]),  # degenerate
-            (3, [0.6, 0.8]),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    queries = spark.createDataFrame(
-        [(10, [0.0, 1.0]), (11, [0.0, 0.0])],
-        "query_id long, embedding array<double>",
-    )
-    rows = cosine_topk_join(queries, corpus, k=10).collect()
-    assert all(r.cosine is not None for r in rows)
-    assert {r.query_id for r in rows} == {10}, "zero-norm query must not rank"
-    assert {r.vec_id for r in rows if r.query_id == 10} == {1, 3}
 
 
 def test_dedup_lines_stage_materializes_once(spark):
@@ -625,141 +461,6 @@ def test_dedup_lines_stage_materializes_once(spark):
     finally:
         deduped.unpersist()
         base.unpersist()
-
-
-def _grid_centroids(spark, n=16):
-    """Deterministic centroids for the batch-IVF tests: the first n corpus
-    vectors by id (any fixed list works; the operator contract only needs
-    FIXED centroids)."""
-    rows = (
-        spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-        .orderBy("vec_id")
-        .limit(n)
-        .collect()
-    )
-    return [(i, [float(v) for v in r.embedding]) for i, r in enumerate(rows)]
-
-
-def test_ivf_topk_join_full_probe_equals_exact(spark):
-    """n_probe = n_clusters means every cluster is probed — the batch IVF
-    join must then equal the exact batch kNN join row-for-row."""
-    from amr_kg_spark.operators.similarity import cosine_topk_join, ivf_topk_join
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    queries = emb.filter("vec_id % 97 = 0").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    cents = _grid_centroids(spark)
-    got = {
-        (r.query_id, r.vec_id, r.cosine, r.rank)
-        for r in ivf_topk_join(
-            queries, emb, cents, k=5, n_probe=len(cents)
-        ).collect()
-    }
-    exact = {
-        (r.query_id, r.vec_id, r.cosine, r.rank)
-        for r in cosine_topk_join(queries, emb, k=5).collect()
-    }
-    assert got == exact and len(got) > 0
-
-
-def test_ivf_topk_join_probe_recall_and_values(spark):
-    """At n_probe < n_clusters the join is approximate: every returned
-    cosine must still be the EXACT cosine for that pair (numpy oracle),
-    ranks must be dense per query, and top-1 recall vs exact stays
-    useful (the corpus clusters are real, so the nearest neighbor's
-    cluster is usually probed)."""
-    import numpy as np
-
-    from amr_kg_spark.operators.similarity import cosine_topk_join, ivf_topk_join
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    queries = emb.filter("vec_id % 97 = 0").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    cents = _grid_centroids(spark)
-    got = ivf_topk_join(queries, emb, cents, k=5, n_probe=4).collect()
-    assert got, "probe must return candidates"
-    vecs = {r.vec_id: np.array(r.embedding, dtype=float) for r in emb.collect()}
-    for r in got:
-        q, c = vecs[r.query_id], vecs[r.vec_id]
-        exp = float(q @ c / (np.linalg.norm(q) * np.linalg.norm(c)))
-        assert abs(r.cosine - exp) < 1e-6, (r.query_id, r.vec_id)
-    by_q: dict = {}
-    for r in got:
-        by_q.setdefault(r.query_id, []).append(r.rank)
-    for qid, ranks in by_q.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1)), qid
-    exact_top1 = {
-        r.query_id: r.vec_id
-        for r in cosine_topk_join(queries, emb, k=1).collect()
-    }
-    hit = sum(
-        1
-        for qid, vid in exact_top1.items()
-        if any(r.vec_id == vid and r.rank == 1 for r in got if r.query_id == qid)
-    )
-    assert hit / len(exact_top1) >= 0.5, (hit, len(exact_top1))
-
-
-def test_ivf_topk_join_plan_is_equi_join(spark):
-    """The candidate meet must be a broadcast hash join on the cluster id
-    — the corpus never cross-joins the query set (the whole point of the
-    batch ANN path vs cosine_topk_join's deliberate BNLJ)."""
-    from amr_kg_spark.operators.similarity import ivf_topk_join
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    queries = emb.filter("vec_id % 97 = 0").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = ivf_topk_join(queries, emb, _grid_centroids(spark), k=5, n_probe=4)
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_cosine_topk_join_over_quantized_embeddings(spark):
-    """The 100 TB bandwidth play: run the batch kNN join over int8
-    dequantized embeddings (4x smaller to shuffle/broadcast) and compare
-    against the fp result — overlap@5 stays high and returned cosines
-    stay within the quantizer's measured distortion bound."""
-    from amr_kg_spark.operators.similarity import (
-        cosine_topk_join,
-        dequantize_embeddings,
-        quantize_embeddings,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    dq = dequantize_embeddings(quantize_embeddings(emb)).select(
-        "vec_id", F.col("embedding_dq").alias("embedding")
-    )
-    queries = emb.filter("vec_id % 97 = 0").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    q_dq = dq.filter("vec_id % 97 = 0").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    fp = cosine_topk_join(queries, emb, k=5).collect()
-    q8 = cosine_topk_join(q_dq, dq, k=5).collect()
-    fp_by_q: dict = {}
-    q8_by_q: dict = {}
-    for r in fp:
-        fp_by_q.setdefault(r.query_id, set()).add(r.vec_id)
-    for r in q8:
-        q8_by_q.setdefault(r.query_id, set()).add(r.vec_id)
-    assert set(fp_by_q) == set(q8_by_q)
-    overlaps = [
-        len(fp_by_q[q] & q8_by_q[q]) / 5 for q in fp_by_q
-    ]
-    assert sum(overlaps) / len(overlaps) >= 0.9, overlaps
-    # cosine distortion bounded by the quantizer's tested 1e-2 envelope
-    fp_cos = {(r.query_id, r.vec_id): r.cosine for r in fp}
-    for r in q8:
-        if (r.query_id, r.vec_id) in fp_cos:
-            assert abs(r.cosine - fp_cos[(r.query_id, r.vec_id)]) < 2e-2
 
 
 def test_unigram_lm_matches_duckdb(spark):
@@ -839,42 +540,6 @@ def test_unigram_lm_matches_duckdb(spark):
         scored._jdf.queryExecution(), "formatted"
     )
     assert "BroadcastHashJoin" in plan
-
-
-def test_compression_ratio_matches_python_and_plan(spark):
-    """Compression-ratio signal: Arrow-UDF values equal direct zlib per
-    document; repetitive text scores far below prose; plan is one
-    ArrowEvalPython stage with zero exchanges."""
-    import zlib
-
-    from amr_kg_spark.operators.text import with_compression_ratio
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    out = with_compression_ratio(docs).select("doc_id", "text", "compression_ratio")
-    rows = out.collect()
-    assert rows
-    for r in rows:
-        raw = r.text.encode("utf-8")
-        exp = round(len(zlib.compress(raw, 6)) / len(raw), 6) if raw else None
-        assert r.compression_ratio == exp, r.doc_id
-    fx = spark.createDataFrame(
-        [
-            (1, "spam " * 200),
-            (2, "The committee reviewed seventeen distinct proposals before "
-                "narrowing the field to a shortlist of four finalists."),
-            (3, ""),
-            (4, None),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: r.compression_ratio for r in with_compression_ratio(fx).collect()}
-    assert got[1] < 0.1 < got[2]
-    assert got[3] is None and got[4] is None
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
-    assert "ArrowEvalPython" in plan
-    assert "BatchEvalPython" not in plan and "Exchange" not in plan
 
 
 def test_xxh64_string_replica_matches_spark(spark):

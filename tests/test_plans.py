@@ -148,34 +148,6 @@ def test_ivf_pretrained_plan_is_pure_catalyst(spark):
         assert node not in plan
 
 
-def test_ivf_table_probe_is_partition_pruning(spark, tmp_path):
-    """The IVF scale claim made physical: probing a cluster-partitioned
-    index table must show up as PartitionFilters on the scan (only the
-    probed clusters' directories are read), and results must equal the
-    in-memory pretrained-IVF operator."""
-    from amr_kg_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    cents = sorted(
-        (int(r["vec_id"]), [float(v) for v in r["embedding"]])
-        for r in emb.filter("vec_id < 16").collect()
-    )
-    q = [float(v) for v in emb.filter("vec_id = 0").first()["embedding"]]
-    path = str(tmp_path / "ivf")
-    S.write_ivf_table(emb, cents, path)
-
-    df = S.ivf_table_topk(spark, path, q, cents, k=10, n_probe=4)
-    plan = _plan(df)
-    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert pf and "cluster" in pf[0], "probe must prune by partition"
-
-    mem = S.ivf_topk_pretrained(emb, q, cents, k=10, n_probe=4).collect()
-    tbl = df.collect()
-    assert [(r.vec_id, r.cosine) for r in tbl] == [
-        (r.vec_id, r.cosine) for r in mem
-    ]
-
-
 def test_corpus_filter_is_single_pass(spark):
     """Round-3 anti-pattern fix: the corpus quality filter must be ONE
     projection over ONE scan — no Join, no Exchange anywhere in the plan

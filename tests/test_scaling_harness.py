@@ -36,11 +36,3 @@ def test_control_stats_price_is_median_over_baseline():
 def test_control_stats_even_count_median():
     s = bs._control_stats([6.0, 8.0])
     assert s["control_median"] == 7.0
-
-
-def test_normalization_never_deflates():
-    """eff_norm = eff * max(1, price): a sub-1 price (box faster than the
-    certified calm baseline) must NOT shrink the raw number."""
-    eff = 0.85
-    for price in (0.9, 1.0, 1.3):
-        assert eff * max(1.0, price) >= eff
