@@ -230,11 +230,12 @@ def canonicalize_kg(
     nodes: DataFrame, edges: DataFrame, max_dist: float = 0.35
 ) -> dict[str, DataFrame]:
     """Full KG canonicalization (north_star): exact char-3-gram Jaccard
-    self-join on node names (``dedup.char_ngram_lsh_pairs``: MinHash-LSH
-    blocking keeps candidate pairs ~linear, the 'salted self-join' scale
-    path; distance <= ``max_dist`` decided exactly), restricted to nodes of
-    the same entity group (:data:`DEFAULT_LABEL_GROUPS`); connected
-    components; canonical node election by source priority
+    self-join on node names (``dedup.char_ngram_lsh_pairs``: the
+    prefix-filtered join, whose candidates are only pairs sharing a
+    prefix gram, the 'salted self-join' scale path; every pair with
+    distance <= ``max_dist`` is found and decided exactly), restricted to
+    nodes of the same entity group (:data:`DEFAULT_LABEL_GROUPS`);
+    connected components; canonical node election by source priority
     (:data:`DEFAULT_LABEL_PRIORITY`); edges repointed at canonical ids.
 
     nodes: (node_id, label, name, curie, props); edges: (src_id, dst_id,
@@ -274,7 +275,7 @@ def canonicalize_kg(
     # CC runs exactly ONCE per canonicalization: the labels feed both the
     # canonical-node election and the edge-rewrite mapping. localCheckpoint
     # inside connected_components materializes the similarity pairs, so the
-    # LSH self-join above is also evaluated exactly once.
+    # name self-join above is also evaluated exactly once.
     cc = connected_components(pairs, "src", "dst")
     canonical = canonicalize_nodes(with_prio, cc)
 

@@ -6,18 +6,17 @@ Four families, each with a different cost/recall point:
 - n-gram Jaccard: EXACT set-similarity via a prefix-filtered inverted
   index (Vernica/Carey/Li, "Efficient Parallel Set-Similarity Joins Using
   MapReduce", SIGMOD 2010) — candidates only from each doc's prefix in
-  xxhash64 order, so only prefix shingles enter the candidate join.
+  xxhash64 order, so only prefix shingles enter the candidate join. The
+  join (``_prefix_jaccard_join``) is the engine's one Jaccard-threshold
+  join: short strings (entity names) run it on sorted character n-gram
+  sets (:func:`char_ngram_lsh_pairs`, ``linking.fuzzy_link``).
 - MinHash-LSH: Catalyst-native banding (:func:`minhash_pairs_native`)
   + EXACT rerank — the 100 TB path; candidate pairs ~ linear in corpus
   size and the output equals the exact join whenever banding recall is 1.
   The signature (``_minhash_signature``, also :func:`corpus_fingerprints`),
   the band keys (``_band_keys``, also :func:`incremental_matches`) and
-  the exact rerank (``_jaccard_rerank``, also :func:`ngram_jaccard_pairs`)
-  are each written once. Short strings (entity names) block on
-  character n-grams through pyspark.ml instead
-  (:func:`char_ngram_lsh_pairs`, the same join ``linking.fuzzy_link``
-  runs): at name-table size the Catalyst banding found the same pairs
-  with more Spark jobs and a slower wall.
+  the exact rerank (``_jaccard_rerank``, also the prefix join) are each
+  written once.
 - SimHash:    64->32-bit locality-sensitive fingerprint from md5 token
   hashes — fully expressible in Catalyst (and in the DuckDB oracle),
   hamming-bucketable for near-dup blocking.
@@ -93,7 +92,7 @@ def exact_dedup(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame
     )
 
 
-def _ratio(t: float) -> tuple[str, str]:
+def _ratio(t: float | Fraction) -> tuple[str, str]:
     """``t`` as the exact rational p/q of its decimal repr (``0.8`` ->
     4/5, ``1/3`` -> 3333333333333333/10**16), as Spark SQL integer
     literals: bigint while every product with a set size fits 64 bits,
@@ -136,23 +135,10 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """EXACT n-gram Jaccard-similar pairs via a prefix-filtered inverted
-    index (the MapReduce set-similarity join of Vernica/Carey/Li, SIGMOD'10
-    — PPJoin-style prefix + length filters, re-expressed in DataFrame ops).
-
-    Plan:
-      1. shingle + xxhash64 each doc (shuffle payload = longs, not strings)
-         and store each doc's hash set ``hs`` sorted ascending;
-      2. the GLOBAL TOTAL ORDER of the shingle universe is the xxhash64
-         value itself, so a doc's prefix is ``slice(hs, 1, sz - ceil(t*sz)
-         + 1)`` — NO df aggregation, NO join and NO window (measured 13.5s
-         -> 7.8s at sf0.1 against a rare-first (df, hash) order).
-         Theorem: two sets with Jaccard >= t must share a prefix element,
-         for ANY global total order, so candidate recall is exactly 1;
-      3. candidate pairs = prefix self-join + length filter
-         (min_sz >= t * max_sz, a Jaccard necessary condition) + PPJoin
-         positional filter;
-      4. exact rerank: array_intersect on the shingle-set suffixes.
+    """EXACT n-gram Jaccard-similar pairs ``(id_a, id_b, jaccard)``: the
+    word shingles of each doc, hashed with xxhash64 (shuffle payload =
+    longs, not strings) and stored as a sorted set ``hs``, self-joined by
+    :func:`_prefix_jaccard_join`.
 
     The shingled base table is localCheckpoint'ed (eager): it feeds
     several downstream branches (prefix index and both exact-rerank
@@ -164,7 +150,6 @@ def ngram_jaccard_pairs(
     failure; production swaps this for reliable checkpoint / a persisted
     table).
     """
-    t = float(threshold)
     # the degenerate-doc filter runs AFTER the checkpoint barrier: placed
     # before it, Catalyst pushes the predicate below the fan-out exchange,
     # inlining the entire shingle expression into a Filter evaluated on the
@@ -180,23 +165,52 @@ def ngram_jaccard_pairs(
         .transform(stable_checkpoint)
         .filter(F.size("hs") > 0)
     )
-    prefix = base.select(
-        "id",
-        F.size("hs").alias("sz"),
-        F.posexplode(F.slice("hs", 1, _prefix_len("size(hs)", t))).alias(
-            "pos", "sh"
-        ),
-    )
-    sets = base.select("id", "hs")
+    pairs = _prefix_jaccard_join(base, base, float(threshold))
+    return pairs.select("id_a", "id_b", _rounded_jaccard())
 
-    a = prefix.select(
-        F.col("id").alias("id_a"), F.col("sz").alias("sz_a"),
-        F.col("pos").alias("pa"), "sh",
-    )
-    b = prefix.select(
-        F.col("id").alias("id_b"), F.col("sz").alias("sz_b"),
-        F.col("pos").alias("pb"), "sh",
-    )
+
+def _prefix_jaccard_join(
+    a: DataFrame, b: DataFrame, threshold: float | Fraction
+) -> DataFrame:
+    """The one EXACT Jaccard-threshold join over ``(id, hs)`` frames, ``hs``
+    a sorted distinct array (word-shingle hashes for documents, char-gram
+    strings for names): a prefix-filtered inverted index (the MapReduce
+    set-similarity join of Vernica/Carey/Li, SIGMOD'10 — PPJoin-style
+    prefix + length filters, re-expressed in DataFrame ops). ``b is a``
+    makes it a self-join keeping ``id_a < id_b``; otherwise every
+    ``a`` x ``b`` pair is a candidate. Returns ``(id_a, id_b, inter,
+    union)`` for every pair with Jaccard >= ``threshold`` (a float or a
+    ``Fraction``; see :func:`_ratio`), boundary included.
+
+    Plan:
+      1. the GLOBAL TOTAL ORDER of the element universe is the sort order
+         of ``hs`` itself, so a set's prefix is ``slice(hs, 1, sz -
+         ceil(t*sz) + 1)`` — NO df aggregation, NO join and NO window
+         (measured 13.5s -> 7.8s at sf0.1 against a rare-first (df, hash)
+         order). Theorem: two sets with Jaccard >= t must share a prefix
+         element, for ANY global total order, so candidate recall is
+         exactly 1;
+      2. candidate pairs = prefix equi-join + length filter (min_sz >= t *
+         max_sz, a Jaccard necessary condition) + PPJoin positional filter;
+      3. exact rerank: array_intersect on the set suffixes
+         (:func:`_jaccard_rerank`).
+    """
+
+    def prefix(side: DataFrame, s: str) -> DataFrame:
+        return side.select(
+            "id",
+            F.size("hs").alias("sz"),
+            F.posexplode(
+                F.slice("hs", 1, _prefix_len("size(hs)", threshold))
+            ).alias("pos", "sh"),
+        ).select(
+            F.col("id").alias(f"id_{s}"), F.col("sz").alias(f"sz_{s}"),
+            F.col("pos").alias(f"p{s}"), "sh",
+        )
+
+    joined = prefix(a, "a").join(prefix(b, "b"), "sh")
+    if b is a:
+        joined = joined.filter(F.col("id_a") < F.col("id_b"))
     # Positional filter (PPJoin, Xiao et al. 2008) on top of the prefix +
     # length filters: both prefixes are slices of the SAME global total
     # order, so any shared element beyond the last shared prefix element
@@ -210,9 +224,7 @@ def ngram_jaccard_pairs(
     # reranked pairs at t=0.2, sf0.1; the filter is exact, no false
     # negatives, so the output is unchanged).
     cands = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(_length_ok(t))
+        joined.filter(_length_ok(threshold))
         .groupBy("id_a", "id_b", "sz_a", "sz_b")
         .agg(
             F.count("*").alias("__c"),
@@ -225,7 +237,7 @@ def ngram_jaccard_pairs(
                 F.col("sz_a") - F.col("__pa") - 1,
                 F.col("sz_b") - F.col("__pb") - 1,
             )
-            >= _overlap_bound(t)
+            >= _overlap_bound(threshold)
         )
         .select("id_a", "id_b", "__c", "__pa", "__pb")
     )
@@ -236,40 +248,51 @@ def ngram_jaccard_pairs(
     # after __pb in B. So |A∩B| = __c + |suffix_a ∩ suffix_b| — the
     # candidate join already did the prefix part of the intersection;
     # re-intersect only the tails (~(1-t)/(1+t) of each array) instead
-    # of the full arrays. Exact, bit-identical jaccard.
+    # of the full arrays.
     inter = F.col("__c") + F.size(
         F.array_intersect(
             F.slice("hs_a", F.col("__pa") + 2, F.size("hs_a")),
             F.slice("hs_b", F.col("__pb") + 2, F.size("hs_b")),
         )
     )
-    return _jaccard_rerank(cands, sets, threshold, inter)
+    return _jaccard_rerank(cands, a, b, threshold, inter)
 
 
 def _jaccard_rerank(
     cands: DataFrame,
-    sets: DataFrame,
-    threshold: float,
+    a: DataFrame,
+    b: DataFrame,
+    threshold: float | Fraction,
     inter: F.Column | None = None,
 ) -> DataFrame:
     """EXACT Jaccard rerank of candidate pairs ``(id_a, id_b, ...)``:
-    rejoin both sides' shingle-hash sets from ``sets`` ``(id, hs)`` and
-    keep ``round(|A∩B| / |A∪B|, 6) >= threshold`` as
-    ``(id_a, id_b, jaccard)``. ``inter`` replaces the full
-    ``array_intersect`` size with a cheaper exact ``|A∩B|`` expression
-    over ``hs_a``/``hs_b`` and the candidate columns (the suffix-only
-    form of :func:`ngram_jaccard_pairs`)."""
+    rejoin the ``hs`` sets of ``a`` (for ``id_a``) and ``b`` (for
+    ``id_b``), both ``(id, hs)`` frames, and keep the pairs with
+    ``q*|A∩B| >= p*|A∪B|`` (p/q = :func:`_ratio` of ``threshold``, so no
+    float rounding moves the boundary) as ``(id_a, id_b, inter, union)``.
+    ``inter`` replaces the full ``array_intersect`` size with a cheaper
+    exact ``|A∩B|`` expression over ``hs_a``/``hs_b`` and the candidate
+    columns (the suffix-only form of :func:`_prefix_jaccard_join`)."""
     paired = cands.join(
-        sets.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a")), "id_a"
-    ).join(sets.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b")), "id_b")
+        a.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a")), "id_a"
+    ).join(b.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b")), "id_b")
     if inter is None:
         inter = F.size(F.array_intersect("hs_a", "hs_b"))
     union = F.size("hs_a") + F.size("hs_b") - inter
-    return (
-        paired.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    p, q = _ratio(threshold)
+    return paired.select(
+        "id_a", "id_b", inter.alias("inter"), union.alias("union")
+    ).filter(F.col("inter") * F.expr(q) >= F.col("union") * F.expr(p))
+
+
+def _rounded_jaccard() -> F.Column:
+    """The documents' output column: ``round(inter / union, 6)``."""
+    return F.round(F.col("inter") / F.col("union"), 6).alias("jaccard")
+
+
+def _jaccard_dist() -> F.Column:
+    """The names' exact Jaccard distance ``(union - inter) / union``."""
+    return (F.col("union") - F.col("inter")) / F.col("union")
 
 
 def char_ngram_lsh_pairs(
@@ -277,28 +300,20 @@ def char_ngram_lsh_pairs(
     id_col: str,
     text_col: str,
     n: int = 3,
-    num_hash_tables: int = 8,
     max_dist: float = 0.5,
 ) -> DataFrame:
-    """Exact char-n-gram Jaccard self-join with MinHash-LSH blocking — the
-    right granularity for short strings (entity names), where word shingles
-    degenerate. KG canonicalization's similarity self-join; returns
-    ``(id_a, id_b, jaccard)`` with ``id_a < id_b`` for every blocked pair
-    whose exact Jaccard distance is <= ``max_dist`` (verified in
-    ``linking._char_gram_lsh_join``)."""
-    from .linking import _char_gram_lsh_join, char_ngrams_expr
+    """EXACT char-n-gram Jaccard self-join — the right granularity for
+    short strings (entity names), where word shingles degenerate. KG
+    canonicalization's similarity self-join; returns ``(id_a, id_b,
+    jaccard)`` with ``id_a < id_b`` for every pair whose Jaccard distance
+    is at most ``max_dist`` (:func:`_prefix_jaccard_join` over
+    ``linking.gram_sets``, the same join ``linking.fuzzy_link`` runs)."""
+    from .linking import gram_sets
 
-    base = df.select(
-        F.col(id_col).alias("id"), F.expr(char_ngrams_expr(text_col, n)).alias("grams")
-    ).filter(F.size("grams") > 0)
-    pairs = _char_gram_lsh_join(base, base, num_hash_tables, max_dist)
-    return (
-        pairs.filter(F.col("datasetA.id") < F.col("datasetB.id"))
-        .select(
-            F.col("datasetA.id").alias("id_a"),
-            F.col("datasetB.id").alias("id_b"),
-            (F.lit(1.0) - F.col("dist")).alias("jaccard"),
-        )
+    base = gram_sets(df, id_col, text_col, n)
+    pairs = _prefix_jaccard_join(base, base, 1 - Fraction(str(max_dist)))
+    return pairs.select(
+        "id_a", "id_b", (F.lit(1.0) - _jaccard_dist()).alias("jaccard")
     )
 
 
@@ -462,11 +477,11 @@ def minhash_pairs_native(
     candidates  = docs sharing any (band_j, hash) bucket (self-join)
     output      = candidates reranked with EXACT shingle-set Jaccard
                   (array_intersect on the per-doc shingle-hash arrays),
-                  filtered to >= threshold.
+                  kept at >= threshold (boundary included).
 
     With r=1 (``bands == num_hashes``) the S-curve 1-(1-j)^bands is that
-    of pyspark.ml's MinHashLSH.approxSimilarityJoin with
-    numHashTables=bands, but the whole plan stays in whole-stage codegen;
+    of pyspark.ml's MinHash LSH ``approxSimilarityJoin`` with ``bands``
+    hash tables, but the whole plan stays in whole-stage codegen;
     candidate pairs are exact-verified so false positives never surface.
     Default banding (r=2, b=16): a pair at Jaccard j is missed with
     probability (1-j^2)^16 — 8e-8 at j=0.8, 1e-2 at j=0.5 — so for corpora
@@ -509,7 +524,8 @@ def minhash_pairs_native(
         .select("id_a", "id_b")
         .dropDuplicates()
     )
-    return _jaccard_rerank(cands, base.select("id", "hs"), threshold)
+    pairs = _jaccard_rerank(cands, base, base, threshold)
+    return pairs.select("id_a", "id_b", _rounded_jaccard())
 
 
 def dedup_keep_representatives(

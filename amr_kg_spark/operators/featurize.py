@@ -5,7 +5,7 @@ verdict item #4).
 
 The construction is a signed random projection of the hashed
 term-frequency vector (the dense cousin of SimHash, and equivalent to
-HashingTF followed by a +/-1 random-projection matrix):
+hashed term frequencies followed by a +/-1 random-projection matrix):
 
     h(tok)  = first 8 hex chars of md5(tok) as an unsigned 32-bit int
               (the exact token hash simhash32 uses — already replicated

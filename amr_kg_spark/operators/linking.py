@@ -13,13 +13,14 @@
   (``triples.resolve_pairs``, :func:`link_compounds`,
   :func:`link_pathogens`) is a map access inside the fact-side projection,
   with no join.
-- **Fuzzy name matching** (J7): :func:`_char_gram_lsh_join` is the one
-  filter-then-verify join over character n-gram sets. MinHash-LSH
-  (``approxSimilarityJoin``) is a loose candidate filter, the scale path
-  the reference lacked (it made per-row PubChem REST calls instead,
-  src/sources.py:105,117,166); an exact Jaccard test in integer
-  arithmetic decides every pair. :func:`fuzzy_link`,
-  ``dedup.char_ngram_lsh_pairs`` and through it ``canonicalize_kg`` call it.
+- **Fuzzy name matching** (J7): :func:`fuzzy_link` turns names into
+  sorted character n-gram sets (:func:`gram_sets`) and runs the engine's
+  one exact prefix-filtered Jaccard join (``dedup._prefix_jaccard_join``,
+  also behind ``dedup.char_ngram_lsh_pairs`` and through it
+  ``canonicalize_kg``): the scale path the reference lacked (it made
+  per-row PubChem REST calls instead, src/sources.py:105,117,166).
+  Candidates come from shared prefix grams, so no pair within the
+  threshold is missed, and an integer Jaccard test decides every pair.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import vocab
+from .dedup import _jaccard_dist, _prefix_jaccard_join
 
 
 def compound_vocab(spark: SparkSession) -> DataFrame:
@@ -107,7 +109,7 @@ def link_pathogens(mentions: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# MinHash-LSH fuzzy linking (scale path for dirty mentions)
+# Fuzzy linking on character n-grams (scale path for dirty mentions)
 # --------------------------------------------------------------------------
 def char_ngrams_expr(col_sql: str, n: int = 3) -> str:
     """SQL for the distinct character-n-gram set of a (lowered, whitespace-
@@ -119,38 +121,14 @@ def char_ngrams_expr(col_sql: str, n: int = 3) -> str:
     )
 
 
-def _char_gram_lsh_join(
-    a: DataFrame, b: DataFrame, num_hash_tables: int, max_dist: float
-) -> DataFrame:
-    """Exact char-n-gram Jaccard join of two frames that carry a ``grams``
-    column (char-n-gram sets, see :func:`char_ngrams_expr`), with MinHash-
-    LSH blocking.
-
-    Filter: both sides hash to binary 2^18-wide sparse vectors (HashingTF)
-    and pyspark.ml's ``approxSimilarityJoin`` pairs rows that share a
-    MinHash value, at distance bound 1.0 — it only drops pairs with no
-    common hashed gram, which cannot pass the verifier. Verify: a pair is
-    kept iff the exact Jaccard of its ``grams`` arrays is
-    >= 1 - ``max_dist`` (boundary included), tested as
-    ``q*|A∩B| >= p*|A∪B|`` with p/q = 1 - ``Fraction(str(max_dist))``.
-    Returns ``(datasetA, datasetB, dist)`` with ``dist`` the exact Jaccard
-    distance. Pass the same frame as ``a`` and ``b`` for a self-join —
-    pyspark.ml recognizes it by identity, so it is hashed once."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    tf = HashingTF(inputCol="grams", outputCol="features", numFeatures=1 << 18, binary=True)
-    fa = tf.transform(a)
-    fb = fa if b is a else tf.transform(b)
-    model = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
-    ).fit(fb)
-    cand = model.approxSimilarityJoin(fa, fb, 1.0, distCol="est_dist")
-    sim = 1 - Fraction(str(max_dist))
-    inter = F.size(F.array_intersect("datasetA.grams", "datasetB.grams")).cast("long")
-    union = F.size("datasetA.grams").cast("long") + F.size("datasetB.grams") - inter
-    return cand.filter(inter * sim.denominator >= union * sim.numerator).select(
-        "datasetA", "datasetB", ((union - inter) / union).alias("dist")
-    )
+def gram_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """``(id, hs)``: each row's char-n-gram set, sorted (the join's global
+    order is plain string order; no hashing, so verification is
+    collision-free), as the exact Jaccard join takes it."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.sort_array(F.expr(char_ngrams_expr(text_col, n))).alias("hs"),
+    ).filter(F.size("hs") > 0)
 
 
 def fuzzy_link(
@@ -159,28 +137,23 @@ def fuzzy_link(
     mention_col: str = "mention",
     vocab_col: str = "pref_name",
     threshold: float = 0.4,
-    num_hash_tables: int = 6,
     n: int = 3,
 ) -> DataFrame:
-    """MinHash-LSH similarity join mention~vocab on char-3-gram Jaccard.
+    """Exact similarity join mention~vocab on char-n-gram Jaccard.
 
-    Both sides are hashed to fixed-width sparse vectors (HashingTF over
-    n-gram sets); ``approxSimilarityJoin`` blocks by LSH band so the
-    candidate pair set is ~linear, not |mentions| x |vocab|. Returns
-    (mention, matched_name, jaccard_dist) for exact char-gram Jaccard
-    distances at or below ``threshold`` (see :func:`_char_gram_lsh_join`).
+    Both sides become sorted char-n-gram sets (:func:`gram_sets`) and meet
+    in the prefix-filtered join (``dedup._prefix_jaccard_join``): only
+    pairs sharing a prefix gram become candidates, never |mentions| x
+    |vocab|, and no pair within the threshold is missed. Returns (mention, matched_name,
+    jaccard_dist) for every exact char-gram Jaccard distance at or below
+    ``threshold`` (tested as Jaccard >= 1 - ``Fraction(str(threshold))``,
+    so a pair exactly at the threshold is kept).
     """
-
-    def grams(df: DataFrame, col: str) -> DataFrame:
-        return df.withColumn("grams", F.expr(char_ngrams_expr(col, n))).filter(
-            F.size("grams") > 0
-        )
-
-    m = grams(mentions.select(mention_col).distinct(), mention_col)
-    v = grams(vocab_df.select(vocab_col).distinct(), vocab_col)
-    joined = _char_gram_lsh_join(m, v, num_hash_tables, threshold)
-    return joined.select(
-        F.col(f"datasetA.{mention_col}").alias("mention"),
-        F.col(f"datasetB.{vocab_col}").alias("matched_name"),
-        F.col("dist").alias("jaccard_dist"),
+    m = gram_sets(mentions.select(mention_col).distinct(), mention_col, mention_col, n)
+    v = gram_sets(vocab_df.select(vocab_col).distinct(), vocab_col, vocab_col, n)
+    pairs = _prefix_jaccard_join(m, v, 1 - Fraction(str(threshold)))
+    return pairs.select(
+        F.col("id_a").alias("mention"),
+        F.col("id_b").alias("matched_name"),
+        _jaccard_dist().alias("jaccard_dist"),
     )

@@ -127,11 +127,7 @@ def detect_mentions(turns: DataFrame, text_col: str = "text") -> DataFrame:
     return turns.withColumn("mentions", _detect_once(F.col(text_col)))
 
 
-def detect_mentions_jvm(
-    turns: DataFrame,
-    vocabularies: dict[str, list[str]] | None = None,
-    text_col: str = "text",
-) -> DataFrame:
+def detect_mentions_jvm(turns: DataFrame) -> DataFrame:
     """The zero-Python workload of ``bench_scaling.py``'s box-price control
     job: the same gazetteer alternations as :func:`detect_mentions`,
     evaluated with ``regexp_extract_all`` inside whole-stage codegen, so its
@@ -140,13 +136,11 @@ def detect_mentions_jvm(
     :func:`detect_mentions` (asserted in tests). The pipelines and queries
     run :func:`detect_mentions`.
     """
-    vocabs = vocabularies or default_vocabularies()
-
     def _tagged(cls: str, rx: str):
         # single-arg lambda via closure: a two-arg lambda would receive the
         # array index as its second argument in Spark's transform()
         return F.transform(
-            F.regexp_extract_all(F.col(text_col), F.lit(rx), F.lit(0)),
+            F.regexp_extract_all(F.col("text"), F.lit(rx), F.lit(0)),
             lambda m: F.struct(
                 F.lit(cls).alias("entity_class"),
                 m.alias("mention"),
@@ -155,19 +149,11 @@ def detect_mentions_jvm(
         )
 
     per_class = []
-    for cls, terms in vocabs.items():
+    for cls, terms in default_vocabularies().items():
         alts = "|".join(re.escape(t) for t in sorted(terms, key=len, reverse=True))
         per_class.append(_tagged(cls, f"{_BOUND_L}(?:{alts}){_BOUND_R}"))
-    act_rx = f"{_BOUND_L}(?:{vocab.ACTIVITY_PATTERN}){_BOUND_R}"
     per_class.append(
-        F.transform(
-            F.regexp_extract_all(F.col(text_col), F.lit(act_rx), F.lit(0)),
-            lambda m: F.struct(
-                F.lit("activity").alias("entity_class"),
-                m.alias("mention"),
-                F.lit(-1).cast("int").alias("start"),
-            ),
-        )
+        _tagged("activity", f"{_BOUND_L}(?:{vocab.ACTIVITY_PATTERN}){_BOUND_R}")
     )
     return turns.withColumn("mentions", F.concat(*per_class))
 

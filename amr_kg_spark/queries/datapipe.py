@@ -63,7 +63,7 @@ def q_ngram_jaccard(spark, sf):
 def q_minhash_pairs(spark, sf):
     """Two banding points of the Catalyst-native MinHash under ONE driver
     row (variant column), each exact-reranked: ``ml`` is 8 bands of 1 row
-    at threshold 0.2 — the 1-(1-j)^8 S-curve of pyspark.ml's MinHashLSH
+    at threshold 0.2 — the 1-(1-j)^8 S-curve of pyspark.ml's MinHash LSH
     with 8 hash tables, which this row ran before that path was removed
     (the label is kept so the rows and the oracle stay the same) — and
     ``native`` is the default 16 bands of 2 rows at threshold 0.5."""

@@ -290,9 +290,10 @@ def q_connected_components(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_fuzzy_link(spark: SparkSession, sf: str) -> DataFrame:
-    """MinHash-LSH fuzzy linking of dirty mention variants (rows-only:
-    LSH is approximate; exact-recall asserted in tests/test_linking.py).
-    Dirty variants are derived deterministically from the vocabulary."""
+    """Exact char-gram fuzzy linking of dirty mention variants (the
+    prefix-filtered join misses no pair; brute-force set equality is
+    asserted in tests/test_linking.py). Dirty variants are derived
+    deterministically from the vocabulary."""
     from ..operators.linking import fuzzy_link
 
     v = compound_vocab(spark)
@@ -310,7 +311,7 @@ def q_fuzzy_link(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_canonicalize(spark: SparkSession, sf: str) -> DataFrame:
     """KG canonicalization over deterministic multi-source name variants
-    (rows-only: iterative CC + LSH)."""
+    (rows-only: iterative CC + exact char-gram self-join)."""
     from ..operators.canonicalize import canonicalize_kg
 
     v = compound_vocab(spark)

@@ -183,13 +183,15 @@ def test_dedup_keep_representatives(spark):
     assert kept_ids == expected
 
 
-@pytest.mark.parametrize("threshold", [0.07, 0.2, 1.0 / 3.0, 0.5, 0.8])
+@pytest.mark.parametrize("threshold", [0.07, 0.2, 1.0 / 3.0, 0.3333331, 0.5, 0.8])
 def test_ngram_jaccard_exactness_vs_bruteforce(spark, threshold):
     """EXACTNESS across awkward thresholds (incl. values where t*sz is an
     exact integer — the fp-ceiling edge): the prefix-filtered join must
     equal the driver-side brute-force Jaccard on (a) a seeded random
     corpus with planted near-dups and (b) a hot-key corpus — 20 docs that
-    share one boilerplate header, docs 0 and 1 near-identical."""
+    share one boilerplate header, docs 0 and 1 near-identical. (c) A pair
+    at exactly Jaccard 1/3 is kept by this join and by the MinHash rerank
+    at t = 1/3 and just below it (a threshold with more than 6 decimals)."""
     import itertools
     import random
 
@@ -235,6 +237,13 @@ def test_ngram_jaccard_exactness_vs_bruteforce(spark, threshold):
             f"t={threshold}: spark-only={got - expected}, missed={expected - got}"
         )
     assert (0, 1) in got
+
+    # "a b c d" / "a b c e": one of two 3-shingles shared, Jaccard 1/3
+    pair = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "doc_id long, text string")
+    want = [(1, 2, round(1 / 3, 6))] if 1 / 3 >= threshold else []
+    exact = D.ngram_jaccard_pairs(pair, n=3, threshold=threshold)
+    banded = D.minhash_pairs_native(pair, n=3, num_hashes=8, bands=8, threshold=threshold)
+    assert [[tuple(r) for r in p.collect()] for p in (exact, banded)] == [want, want]
 
 
 def test_repetition_signals(spark):
