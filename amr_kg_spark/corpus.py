@@ -536,9 +536,9 @@ def prep_corpus(spark, docs, args, stage):
         vocab = TK.build_vocab(merges, sample, specials=specials)
         counts["bpe_merges_trained"] = len(merges)
         counts["bpe_vocab_size"] = len(vocab)
-        toks = TK.with_token_counts(kept, counter="bpe", merges=merges)
+        toks = kept.withColumn("n_tokens", TK.bpe_token_count("text", merges))
     else:
-        toks = kept.withColumn("n_tokens", F.size(D.tokens_col("text")))
+        toks = kept.withColumn("n_tokens", F.size(D.tokens_col()))
     if args.mix:
         toks = stage("after_mix", TP.mix_to_token_budget(toks, args.mix))
 

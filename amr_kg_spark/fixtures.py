@@ -18,7 +18,6 @@ def synth_transcripts(
     n_turns: int = 10_000,
     n_convs: int = 100,
     hot_frac: float = 0.3,
-    seed: int = 7,
 ) -> DataFrame:
     """Turns 0..n-1; the first ``hot_frac`` of ids land in conversation
     'hot', the rest round-robin over n_convs normal conversations. Text
@@ -48,7 +47,7 @@ def synth_transcripts(
             (F.col("id") % 3 + 1).cast("int"),
         ).alias("role"),
         F.concat(
-            F.lit(f"turn-{seed} body "),
+            F.lit("turn-7 body "),
             F.col("id").cast("string"),
             F.lit(" | Assay: "),
             pat,

@@ -2,7 +2,7 @@
 
 Duplicate node variants (case/whitespace/hyphen spellings, multi-source
 ids) are merged by: (1) building similarity pairs with the one exact
-char-gram Jaccard join of operators/linking.py (MinHash-LSH blocking, exact
+char-gram Jaccard join of operators/dedup.py (prefix-filtered, exact
 verify) plus a same-entity-group gate, (2) running connected components
 over the pair graph, (3) electing the highest-priority node of each
 component as canonical, (4) merging properties by source priority —
@@ -31,11 +31,10 @@ from ..session import stable_checkpoint
 
 def connected_components(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_iter: int = 25,
 ) -> DataFrame:
-    """Label propagation CC. Input: undirected edge list (any orientation).
+    """Label propagation CC. Input: undirected ``(src, dst)`` edge list (any
+    orientation).
     Output: (node, component) with component = min node id reachable.
     Raises RuntimeError when labels still change after ``max_iter``
     iterations, instead of returning unconverged components."""
@@ -51,7 +50,7 @@ def connected_components(
     # (callers' pair lists are `id_a < id_b`-oriented, so the two
     # orientations cannot collide anyway).
     e = stable_checkpoint(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     )
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     # label init = the first propagation hop, for free: the node list
@@ -276,7 +275,7 @@ def canonicalize_kg(
     # canonical-node election and the edge-rewrite mapping. localCheckpoint
     # inside connected_components materializes the similarity pairs, so the
     # name self-join above is also evaluated exactly once.
-    cc = connected_components(pairs, "src", "dst")
+    cc = connected_components(pairs)
     canonical = canonicalize_nodes(with_prio, cc)
 
     # node -> canonical_id mapping (MUST use the elected canonical id, not

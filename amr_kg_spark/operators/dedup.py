@@ -49,12 +49,11 @@ def with_word_shingles(
     text_col: str = "text",
     n: int = 3,
     out: str = "shingles",
-    hashed: bool = False,
 ) -> DataFrame:
-    """Append a distinct word-shingle array column, materializing the token
-    array in its own projection first so Catalyst binds a reference inside
-    the shingle lambda instead of re-splitting the text per element.
-    ``hashed=True`` emits xxhash64(shingle) longs (cheaper downstream).
+    """Append a distinct array of word-shingle xxhash64 longs (cheaper
+    downstream than the shingle strings), materializing the token array
+    in its own projection first so Catalyst binds a reference inside the
+    shingle lambda instead of re-splitting the text per element.
 
     The input is fanned out to the session's parallelism first (no-op on
     multi-split inputs): shingling is the compute-dense stage of every
@@ -68,8 +67,7 @@ def with_word_shingles(
     step = fan_out(df).withColumn(tmp, tokens_col(text_col))
 
     def mk(i: F.Column) -> F.Column:
-        s = F.array_join(F.slice(F.col(tmp), i, n), " ")
-        return F.xxhash64(s) if hashed else s
+        return F.xxhash64(F.array_join(F.slice(F.col(tmp), i, n), " "))
 
     sh = F.array_distinct(
         F.transform(
@@ -160,7 +158,7 @@ def ngram_jaccard_pairs(
     # slice instead of a re-sort in BOTH explode branches of the
     # candidate self-join.
     base = (
-        with_word_shingles(docs, text_col, n, out="__sh", hashed=True)
+        with_word_shingles(docs, text_col, n, out="__sh")
         .select(F.col(id_col).alias("id"), F.sort_array("__sh").alias("hs"))
         .transform(stable_checkpoint)
         .filter(F.size("hs") > 0)
@@ -299,7 +297,6 @@ def char_ngram_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     max_dist: float = 0.5,
 ) -> DataFrame:
     """EXACT char-n-gram Jaccard self-join — the right granularity for
@@ -310,14 +307,14 @@ def char_ngram_lsh_pairs(
     ``linking.gram_sets``, the same join ``linking.fuzzy_link`` runs)."""
     from .linking import gram_sets
 
-    base = gram_sets(df, id_col, text_col, n)
+    base = gram_sets(df, id_col, text_col, 3)
     pairs = _prefix_jaccard_join(base, base, 1 - Fraction(str(max_dist)))
     return pairs.select(
         "id_a", "id_b", (F.lit(1.0) - _jaccard_dist()).alias("jaccard")
     )
 
 
-def simhash32(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash32(docs: DataFrame) -> DataFrame:
     """32-bit SimHash from md5 token hashes — Catalyst-only, oracle-checkable.
 
     Token hash = first 8 hex chars of md5(token) as an unsigned 32-bit int;
@@ -329,8 +326,8 @@ def simhash32(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
     docs = fan_out(docs)
     toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(tokens_col(text_col))).alias("tok"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.array_distinct(tokens_col())).alias("tok"),
     ).withColumn("h", F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long"))
     # NOTE (round-9 A/B): a single groupBy(id) with 32 conditional-sum
     # aggregate slots was tried and measured SLOWER (0.65s -> 1.0s
@@ -362,8 +359,6 @@ def simhash32(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
 def embedding_neardup_pairs(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_col: str | None = "label",
     threshold: float = 0.95,
 ) -> DataFrame:
@@ -378,13 +373,13 @@ def embedding_neardup_pairs(
 
     emb = fan_out(emb)
     a = emb.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("v_a"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("v_a"),
         *( [F.col(block_col).alias("blk")] if block_col else [] ),
     )
     b = emb.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("v_b"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("v_b"),
         *( [F.col(block_col).alias("blk")] if block_col else [] ),
     )
     joined = a.join(b, on="blk" if block_col else None) if block_col else a.crossJoin(b)
@@ -463,8 +458,6 @@ def _band_keys(slots: list[F.Column], r: int) -> F.Column:
 
 def minhash_pairs_native(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     num_hashes: int = 32,
     bands: int = 16,
@@ -497,8 +490,8 @@ def minhash_pairs_native(
     r = _banding_rows(num_hashes, bands, "minhash_pairs_native")
     # eagerly materialized: feeds signature computation AND both rerank
     # sides (same rationale as ngram_jaccard_pairs.base)
-    base = with_word_shingles(docs, text_col, n, out="hs", hashed=True).select(
-        F.col(id_col).alias("id"), "hs"
+    base = with_word_shingles(docs, "text", n, out="hs").select(
+        F.col("doc_id").alias("id"), "hs"
     ).transform(stable_checkpoint).filter(F.size("hs") > 0)
     # (barrier before the filter — see ngram_jaccard_pairs note)
 
@@ -530,16 +523,14 @@ def minhash_pairs_native(
 
 def dedup_keep_representatives(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int | None = None,
     threshold: float | None = None,
     method: str | None = None,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Corpus-level near-dup removal: the operator a training-data pipeline
-    actually runs. Near-dup PAIRS (banded MinHash + exact rerank by
-    default; ``method="exact"`` for the prefix-filtered exact join; or
+    actually runs. Near-dup PAIRS (the prefix-filtered exact join,
+    :func:`ngram_jaccard_pairs`; ``method`` accepts only ``"exact"``; or
     pass any precomputed ``pairs`` frame, e.g. semantic pairs from
     ``featurize.semantic_neardup_pairs``) are
     closed into clusters with pointer-jumping connected components, and
@@ -547,12 +538,13 @@ def dedup_keep_representatives(
     A5 first-wins policy. Docs in no pair pass through untouched, so the
     output is the kept corpus (original schema), not a pair list.
 
-    Scale shape: pairs are banded (never all-pairs), CC is O(log diameter)
-    rounds over the pair graph only (near-dup clusters are tiny relative
-    to the corpus), and the final step is one left_anti join against the
-    drop-list (cluster members minus representatives). The drop-list is
-    O(dup_rate × corpus) rows — at training-corpus scale 30%+ near-dup
-    rates are normal, so it is NOT force-broadcast: AQE picks broadcast
+    Scale shape: pairs come from the prefix index (never all-pairs), CC
+    is O(log diameter) rounds over the pair graph only (near-dup clusters
+    are tiny relative to the corpus), and the final step is one
+    left_anti join against the drop-list (cluster members minus
+    representatives). The drop-list is O(dup_rate × corpus) rows — at
+    training-corpus scale 30%+ near-dup rates are normal, so it is NOT
+    force-broadcast: AQE picks broadcast
     when the built list is actually small and falls back to a shuffled
     hash join when it isn't (a forced hint would OOM the driver).
     """
@@ -578,21 +570,18 @@ def dedup_keep_representatives(
                 "dedup_keep_representatives: `pairs` must carry id_a/id_b "
                 f"columns (missing: {sorted(missing)}; got {pairs.columns})"
             )
-    elif (method or "minhash") == "exact":
+    elif method not in (None, "exact"):
+        raise ValueError(
+            f"dedup_keep_representatives: unknown method {method!r}; pairs "
+            "come only from the exact prefix-filtered join (method='exact')"
+        )
+    else:
         # `3 if n is None else n`, NOT `n or 3`: an explicit n=0 must reach
         # the shingler (which rejects it) rather than silently becoming the
         # default — symmetric with the threshold handling (round-7 ADVICE)
         pairs = ngram_jaccard_pairs(
-            docs, id_col, text_col, 3 if n is None else n,
+            docs, "doc_id", "text", 3 if n is None else n,
             0.8 if threshold is None else threshold,
-        )
-    else:
-        pairs = minhash_pairs_native(
-            docs,
-            id_col,
-            text_col,
-            3 if n is None else n,
-            threshold=0.8 if threshold is None else threshold,
         )
     comp = connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -602,18 +591,15 @@ def dedup_keep_representatives(
     # reachable, so the min-over-component window (a shuffle + sort of
     # the CC output spent recomputing an invariant) reduces to a filter.
     drop = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
+        F.col("node").alias("doc_id")
     )
-    return docs.join(drop, id_col, "left_anti")
+    return docs.join(drop, "doc_id", "left_anti")
 
 
 def cross_corpus_overlap(
     train: DataFrame,
     benchmark: DataFrame,
     n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
 ) -> DataFrame:
     """Per-train-document count of distinct n-gram shingles shared with a
     benchmark/eval corpus — the measurement behind train/test
@@ -632,13 +618,13 @@ def cross_corpus_overlap(
     64-bit collision between distinct shingles would miscount overlap
     (or flag a clean doc), probability ~n^2/2^65 for n distinct
     shingles; accepted by design at training-corpus scale."""
-    t = with_word_shingles(train, text_col, n, out="__sh", hashed=True)
-    b = with_word_shingles(benchmark, bench_text_col, n, out="__sh", hashed=True)
+    t = with_word_shingles(train, "text", n, out="__sh")
+    b = with_word_shingles(benchmark, "text", n, out="__sh")
     bench_sh = b.select(F.explode("__sh").alias("__bsh")).distinct()
-    t_ex = t.select(F.col(id_col), F.explode("__sh").alias("__bsh"))
+    t_ex = t.select(F.col("doc_id"), F.explode("__sh").alias("__bsh"))
     return (
         t_ex.join(F.broadcast(bench_sh), "__bsh", "left_semi")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count_distinct("__bsh").alias("n_contaminated_ngrams"))
     )
 
@@ -647,9 +633,6 @@ def decontaminate(
     train: DataFrame,
     benchmark: DataFrame,
     n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
     mode: str = "drop",
 ) -> DataFrame:
     """Remove (``mode="drop"``) or annotate (``mode="flag"``) training
@@ -657,23 +640,18 @@ def decontaminate(
     ``flag`` adds ``n_contaminated_ngrams`` (0 = clean) so a pipeline can
     audit before dropping; ``drop`` is a left_anti against the
     contaminated-id set (small — joins AQE-broadcast at scale)."""
-    hits = cross_corpus_overlap(
-        train, benchmark, n, id_col, text_col, bench_text_col
-    )
+    hits = cross_corpus_overlap(train, benchmark, n)
     if mode == "flag":
-        return train.join(hits, id_col, "left").na.fill(
+        return train.join(hits, "doc_id", "left").na.fill(
             {"n_contaminated_ngrams": 0}
         )
-    return train.join(hits.select(id_col), id_col, "left_anti")
+    return train.join(hits.select("doc_id"), "doc_id", "left_anti")
 
 
 def dedup_lines(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     sep: str = "\n",
     min_chars: int = 0,
-    out_col: str = "text_deduped",
 ) -> DataFrame:
     """Sub-document (line/paragraph) deduplication across the CORPUS —
     the boilerplate-removal stage of crawl pipelines (headers, cookie
@@ -694,7 +672,7 @@ def dedup_lines(
     offered: split-by-pattern is not invertible, so the rebuilt text
     could not round-trip.
 
-    Adds ``out_col`` and ``n_lines_dropped``.
+    Adds ``text_deduped`` and ``n_lines_dropped``.
 
     Scale shape: two exchanges, both necessary for a global claim —
     (1) groupBy xxhash64(segment) picking the first occurrence as
@@ -714,12 +692,12 @@ def dedup_lines(
     # escape metacharacters ('.', '|', ...) — Python's re.escape output
     # is Java-regex-compatible (backslash-escapes every non-alphanumeric)
     sep_pat = re.escape(sep)
-    pos = F.posexplode(F.split(F.col(text_col), sep_pat))
+    pos = F.posexplode(F.split(F.col("text"), sep_pat))
     # materialized once (round-9): the segment explode feeds BOTH the
     # exempt branch and the winners aggregate — left lazy, the corpus
     # splits twice (same multi-consumer pattern as remove_duplicate_spans)
     lines = stable_checkpoint(
-        docs.select(F.col(id_col), pos.alias("__pos", "__line"))
+        docs.select(F.col("doc_id"), pos.alias("__pos", "__line"))
     )
     exempt = lines.filter(F.length("__line") < F.lit(min_chars))
     winners = (
@@ -728,20 +706,20 @@ def dedup_lines(
         .agg(
             F.min(
                 F.struct(
-                    F.col(id_col).alias("id"),
+                    F.col("doc_id").alias("id"),
                     F.col("__pos").alias("pos"),
                     F.col("__line").alias("line"),
                 )
             ).alias("__first")
         )
         .select(
-            F.col("__first.id").alias(id_col),
+            F.col("__first.id").alias("doc_id"),
             F.col("__first.pos").alias("__pos"),
             F.col("__first.line").alias("__line"),
         )
     )
     kept = winners.unionByName(exempt)
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 # native SortArray: collect_list yields no NULL elements, so
@@ -750,13 +728,13 @@ def dedup_lines(
                 lambda x: x["__line"],
             ),
             sep,
-        ).alias(out_col),
+        ).alias("text_deduped"),
         F.count("*").alias("__kept"),
     )
-    n_orig = F.size(F.split(F.col(text_col), sep_pat))
+    n_orig = F.size(F.split(F.col("text"), sep_pat))
     return (
-        docs.join(rebuilt, id_col, "left")
-        .withColumn(out_col, F.coalesce(F.col(out_col), F.lit("")))
+        docs.join(rebuilt, "doc_id", "left")
+        .withColumn("text_deduped", F.coalesce(F.col("text_deduped"), F.lit("")))
         .withColumn(
             "n_lines_dropped",
             (n_orig - F.coalesce(F.col("__kept"), F.lit(0))).cast("int"),
@@ -767,8 +745,6 @@ def dedup_lines(
 
 def corpus_fingerprints(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     method: str = "exact",
     n: int = 3,
     num_hashes: int = 32,
@@ -801,14 +777,14 @@ def corpus_fingerprints(
     beyond-reference surface like the rest of the datapipe family."""
     if method == "exact":
         return docs.select(
-            F.col(id_col).alias("id"),
-            F.xxhash64(F.col(text_col)).alias("fp"),
+            F.col("doc_id").alias("id"),
+            F.xxhash64(F.col("text")).alias("fp"),
         )
     if method != "minhash":
         raise ValueError(f"unknown method: {method!r}")
     base = (
-        with_word_shingles(docs, text_col, n, out="hs", hashed=True)
-        .select(F.col(id_col).alias("id"), "hs")
+        with_word_shingles(docs, "text", n, out="hs")
+        .select(F.col("doc_id").alias("id"), "hs")
         .filter(F.size("hs") > 0)
     )
     sig = _minhash_signature(base, num_hashes)
@@ -870,8 +846,6 @@ def incremental_matches(
     new_docs: DataFrame,
     fingerprints: DataFrame,
     method: str = "exact",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     num_hashes: int = 32,
     bands: int = 16,
@@ -907,8 +881,8 @@ def incremental_matches(
     :func:`write_fingerprint_meta` — and derive the parameters from it."""
     if method == "exact":
         new_fp = new_docs.select(
-            F.col(id_col).alias("new_id"),
-            F.xxhash64(F.col(text_col)).alias("fp"),
+            F.col("doc_id").alias("new_id"),
+            F.xxhash64(F.col("text")).alias("fp"),
         )
         return (
             fingerprints.select(F.col("id").alias("corpus_id"), "fp")
@@ -935,7 +909,7 @@ def incremental_matches(
             "read_fingerprint_meta)"
         )
     new_sig = corpus_fingerprints(
-        new_docs, id_col, text_col, "minhash", n, num_hashes
+        new_docs, "minhash", n, num_hashes
     )
 
     def banded(sig_df, out_id):
@@ -982,12 +956,8 @@ def incremental_dedup(
     new_docs: DataFrame,
     fingerprints: DataFrame,
     method: str = "exact",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """Drop new-batch documents already present (exactly, or as near-dups
     with ``method="minhash"``) in the corpus summarized by
@@ -997,18 +967,14 @@ def incremental_dedup(
     :func:`dedup_exact`) on the batch first, then union the survivors'
     fingerprints into the state table."""
     hits = incremental_matches(
-        new_docs, fingerprints, method, id_col, text_col,
-        n, num_hashes, bands, threshold,
-    ).select(F.col("new_id").alias(id_col)).distinct()
-    return new_docs.join(hits, id_col, "left_anti")
+        new_docs, fingerprints, method, n, num_hashes
+    ).select(F.col("new_id").alias("doc_id")).distinct()
+    return new_docs.join(hits, "doc_id", "left_anti")
 
 
 def remove_duplicate_spans(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 20,
-    out_col: str = "text_deduped",
 ) -> DataFrame:
     """Exact duplicated-SPAN removal — the substring-level member of the
     dedup family (document level: :func:`dedup_keep_representatives`;
@@ -1035,7 +1001,7 @@ def remove_duplicate_spans(
     still only the single first k-gram, so degenerate self-repeats
     collapse slightly harder than a suffix array would.
 
-    Adds ``out_col`` (space-joined surviving tokens — for UNTOUCHED docs
+    Adds ``text_deduped`` (space-joined surviving tokens — for UNTOUCHED docs
     too, so the column is uniformly whitespace-normalized),
     ``n_tokens_kept``, ``n_tokens_removed`` and ``n_spans_removed``.
     Docs shorter than ``k`` tokens have no fingerprints and are never
@@ -1074,9 +1040,9 @@ def remove_duplicate_spans(
     base = stable_checkpoint(
         fan_out(docs)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.filter(
-                F.split(F.col(text_col), ws), lambda t: t != ""
+                F.split(F.col("text"), ws), lambda t: t != ""
             ).alias("__toks"),
         )
         .withColumn("__n", F.size("__toks"))
@@ -1085,7 +1051,7 @@ def remove_duplicate_spans(
     # (id, pos, xxhash64(k-gram)) for every 0-based start position
     grams = stable_checkpoint(
         base.filter(F.col("__n") >= k).select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.posexplode(
                 F.transform(
                     F.sequence(F.lit(0), F.col("__n") - F.lit(k)),
@@ -1104,7 +1070,7 @@ def remove_duplicate_spans(
     # on both sides of the exchange, O(T log T)); min over a fixed-width
     # decimal stays in HashAggregate with map-side partial aggregation.
     pk = (
-        F.col(id_col).cast("decimal(38,0)") * F.lit(1 << 32)
+        F.col("doc_id").cast("decimal(38,0)") * F.lit(1 << 32)
         + F.col("__pos")
     )
     dup = (
@@ -1119,14 +1085,14 @@ def remove_duplicate_spans(
         grams.join(dup, "__h")
         .filter(pk != F.col("__keep"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("__pos").alias("__s"),
             (F.col("__pos") + F.lit(k - 1)).alias("__e"),
         )
     )
 
     # gaps-and-islands: merge overlapping/adjacent removal intervals
-    w = Window.partitionBy(id_col).orderBy("__s")
+    w = Window.partitionBy("doc_id").orderBy("__s")
     prev = w.rowsBetween(Window.unboundedPreceding, -1)
     cuts = (
         removals.withColumn("__pmax", F.max("__e").over(prev))
@@ -1142,9 +1108,9 @@ def remove_duplicate_spans(
             "__isl",
             F.sum("__brk").over(w.rowsBetween(Window.unboundedPreceding, 0)),
         )
-        .groupBy(id_col, "__isl")
+        .groupBy("doc_id", "__isl")
         .agg(F.min("__s").alias("s"), F.max("__e").alias("e"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             # native SortArray (non-null structs): array_sort's default
             # comparator is an interpreted lambda per element pair
@@ -1159,7 +1125,7 @@ def remove_duplicate_spans(
     # rebuild: surviving tokens = the gaps between cuts — O(n + islands)
     # slices, no per-position explode (gap j spans [gs_j, ge_j] 0-based,
     # gs = 0 then e_i + 1, ge = s_i - 1 then n - 1)
-    joined = base.join(cuts, id_col, "left")
+    joined = base.join(cuts, "doc_id", "left")
     gs = F.concat(
         F.array(F.lit(0)),
         F.transform(F.col("__cuts"), lambda c: c["e"] + F.lit(1)),
@@ -1180,8 +1146,8 @@ def remove_duplicate_spans(
         )
     )
     rebuilt = joined.select(
-        F.col(id_col),
-        F.array_join(kept, " ").alias(out_col),
+        F.col("doc_id"),
+        F.array_join(kept, " ").alias("text_deduped"),
         F.size(kept).alias("n_tokens_kept"),
         F.coalesce(F.col("__cut_toks"), F.lit(0))
         .cast("int")
@@ -1190,4 +1156,4 @@ def remove_duplicate_spans(
         .cast("int")
         .alias("n_spans_removed"),
     )
-    return docs.join(rebuilt, id_col, "left")
+    return docs.join(rebuilt, "doc_id", "left")

@@ -56,7 +56,6 @@ def _md5_int32(tok: F.Column) -> F.Column:
 def featurize_text(
     docs: DataFrame,
     dim: int = 32,
-    text_col: str = "text",
     out_col: str = "embedding",
 ) -> DataFrame:
     """Add a deterministic ``array<double>`` embedding of the text (see
@@ -66,7 +65,7 @@ def featurize_text(
     operators filter as norm-0, by contract)."""
     if not 1 <= dim <= 32:
         raise ValueError("dim must be in [1, 32] (signs are 32 md5 bits)")
-    toks = F.array_distinct(tokens_col(text_col))
+    toks = F.array_distinct(tokens_col())
     hashes = F.transform(toks, _md5_int32)
     # bit j of h via exact power-of-2 double division (shiftright needs a
     # literal shift amount; h < 2^32 and 2^j are exact in double, so
@@ -97,12 +96,6 @@ def featurize_text(
 def semantic_neardup_pairs(
     docs: DataFrame,
     threshold: float = 0.95,
-    dim: int = 32,
-    bands: int = 8,
-    band_bits: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seed: int = 42,
 ) -> DataFrame:
     """Semantic near-duplicate pairs from RAW TEXT: featurize, band by
     random-hyperplane signatures (one signature long per band; candidates
@@ -111,25 +104,25 @@ def semantic_neardup_pairs(
     (id_a < id_b, cosine rounded for display, threshold on unrounded).
 
     Scale shape: the self-join keys on (band, signature) longs — never
-    all-pairs; each doc contributes ``bands`` rows, which carry the
-    dim-length embedding so candidates rerank without a second join
-    (dim*8 bytes per row; at larger dim, join ids only and re-join
-    embeddings). Hyperplanes are seeded driver-side literals
-    (bands x band_bits x dim floats, tiny)."""
+    all-pairs; each doc contributes 8 band rows of 8-bit signatures,
+    which carry the 32-dim embedding so candidates rerank without a
+    second join (256 bytes per row; at larger dim, join ids only and
+    re-join embeddings). Hyperplanes are seeded driver-side literals
+    (8 x 8 x 32 floats, tiny)."""
     from .similarity import _cosine, _norm, make_hyperplanes, rhp_signature
 
-    emb = featurize_text(docs, dim=dim, text_col=text_col).select(
-        F.col(id_col).alias("id"), F.col("embedding").alias("v")
+    emb = featurize_text(docs).select(
+        F.col("doc_id").alias("id"), F.col("embedding").alias("v")
     )
     sigs = [
-        rhp_signature("v", make_hyperplanes(dim, band_bits, seed + 1000 * b))
+        rhp_signature("v", make_hyperplanes(32, 8, 42 + 1000 * b))
         .alias(f"__s{b}")
-        for b in range(bands)
+        for b in range(8)
     ]
     banded = emb.select("id", "v", *sigs).select(
         "id",
         "v",
-        F.posexplode(F.array(*[F.col(f"__s{b}") for b in range(bands)])).alias(
+        F.posexplode(F.array(*[F.col(f"__s{b}") for b in range(8)])).alias(
             "band", "sig"
         ),
     )
@@ -156,21 +149,15 @@ def semantic_neardup_pairs(
 def fit_quality_classifier(
     pos: DataFrame,
     neg: DataFrame,
-    dim: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     sample_per_class: int = 2000,
-    iters: int = 300,
-    lr: float = 0.5,
-    l2: float = 1e-3,
 ) -> list[float]:
     """Train the cheap linear quality classifier of CCNet/GPT-3-style
     pipelines: logistic regression separating a POSITIVE corpus (text you
     want more of — curated prose, a reference corpus) from a NEGATIVE one
     (crawl junk), over the deterministic :func:`featurize_text`
     embeddings (length-normalized, so the classifier learns token
-    DISTRIBUTION, not document size). Returns ``dim + 1`` weights (bias
-    last) for :func:`score_quality`.
+    DISTRIBUTION, not document size). Returns one weight per embedding
+    dimension plus the bias (last) for :func:`score_quality`.
 
     Driver-side model fitting on a BOUNDED deterministic sample — the
     ``sample_per_class`` docs with lowest ``xxhash64(id)`` per class
@@ -180,8 +167,8 @@ def fit_quality_classifier(
     model as IVF's KMeans, ``train_bpe`` and ``fit_unigram_lm``: the
     model is tiny (33 floats), the data it reads is capped, and scoring
     (the part that touches 100 TB) is a pure Catalyst projection. The
-    fit itself is full-batch gradient descent from zero init with fixed
-    iterations — deterministic, no seed.
+    fit itself is full-batch gradient descent from zero init, 300 fixed
+    iterations at step 0.5 with L2 1e-3 — deterministic, no seed.
 
     No reference analogue (beyond-reference surface; the public
     technique is Wenzek et al. 2019 / Brown et al. 2020 quality
@@ -190,9 +177,9 @@ def fit_quality_classifier(
 
     def collect(df, label):
         rows = (
-            featurize_text(df, dim=dim, text_col=text_col, out_col="__e")
-            .select(id_col, "__e")
-            .orderBy(F.xxhash64(F.col(id_col)).asc(), F.col(id_col).asc())
+            featurize_text(df, out_col="__e")
+            .select("doc_id", "__e")
+            .orderBy(F.xxhash64(F.col("doc_id")).asc(), F.col("doc_id").asc())
             .limit(sample_per_class)
             .collect()
         )
@@ -207,8 +194,9 @@ def fit_quality_classifier(
     data = collect(pos, 1.0) + collect(neg, 0.0)
     if not data:
         raise ValueError("empty training sample for quality classifier")
+    dim = len(data[0][0])
     w = [0.0] * (dim + 1)
-    for _ in range(iters):
+    for _ in range(300):
         grad = [0.0] * (dim + 1)
         for e, y in data:
             z = sum(wi * xi for wi, xi in zip(w, e)) + w[dim]
@@ -219,16 +207,14 @@ def fit_quality_classifier(
             grad[dim] += d
         inv = 1.0 / len(data)
         for j in range(dim):
-            w[j] -= lr * (grad[j] * inv + l2 * w[j])
-        w[dim] -= lr * grad[dim] * inv
+            w[j] -= 0.5 * (grad[j] * inv + 1e-3 * w[j])
+        w[dim] -= 0.5 * grad[dim] * inv
     return w
 
 
 def score_quality(
     docs: DataFrame,
     weights: list[float],
-    text_col: str = "text",
-    out_col: str = "quality_logit",
 ) -> DataFrame:
     """Score every document with the trained classifier — a pure Catalyst
     projection (featurize → length-normalize → dot product + bias): no
@@ -237,7 +223,7 @@ def score_quality(
     positive corpus. Token-free documents (zero embedding) score exactly
     the bias (no distributional evidence either way)."""
     dim = len(weights) - 1
-    scored = featurize_text(docs, dim=dim, text_col=text_col, out_col="__e")
+    scored = featurize_text(docs, dim=dim, out_col="__e")
     sq = F.aggregate(
         "__e", F.lit(0.0), lambda acc, x: acc + x * x
     )
@@ -250,23 +236,19 @@ def score_quality(
     logit = F.when(
         sq > 0, dot / F.sqrt(sq) + F.lit(float(weights[dim]))
     ).otherwise(F.lit(float(weights[dim])))
-    return scored.withColumn(out_col, logit).drop("__e")
+    return scored.withColumn("quality_logit", logit).drop("__e")
 
 
 def cluster_balanced_sample(
     docs: DataFrame,
     n_clusters: int = 8,
     per_cluster: int = 100,
-    dim: int = 32,
-    seed: int = 42,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Topic-balanced corpus subsetting (the SemDeDup / cluster-then-
     sample recipe): embed every document with the deterministic
     featurizer, cluster the embedding space (KMeans, seeded), then keep
     at most ``per_cluster`` documents from each cluster — picked in
-    ``xxhash64(id, seed)`` order, the engine's deterministic stand-in
+    ``xxhash64(id, 42)`` order, the engine's deterministic stand-in
     for random choice — so no single mode of the corpus dominates the
     sample. Composition of three existing primitives: featurize_text →
     fit_ivf's quantizer → cap_per_stratum over the cluster id.
@@ -274,28 +256,27 @@ def cluster_balanced_sample(
     Returns the kept documents + ``cluster`` + ``stratum_rank``
     (1..per_cluster within cluster).
 
-    Scale shape: featurize is one projection; KMeans fits on a bounded
-    sample (``fit_fraction`` inside fit_ivf at real scale) and
-    assignment is one map; the cap is one hash-partitioned window on
-    the cluster key. Determinism: the featurizer is stateless, KMeans
-    is seeded over a deterministic frame, and the pick order is a pure
-    function of (id, seed) — the sample reproduces across cluster
-    widths and reruns."""
+    Scale shape: featurize is one projection; KMeans fits on the
+    embedded corpus (fit_ivf) and assignment is one map; the cap is one
+    hash-partitioned window on the cluster key. Determinism: the
+    featurizer is stateless, KMeans is seeded over a deterministic
+    frame, and the pick order is a pure function of the id — the sample
+    reproduces across cluster widths and reruns."""
     from pyspark.sql import functions as F
 
     from .similarity import fit_ivf
     from .textprep import cap_per_stratum
 
-    emb = featurize_text(docs, dim=dim, text_col=text_col)
-    _, assigned = fit_ivf(emb, n_clusters=n_clusters, seed=seed)
+    emb = featurize_text(docs)
+    _, assigned = fit_ivf(emb, n_clusters=n_clusters)
     picked = cap_per_stratum(
         assigned.withColumn(
-            "__pick", F.xxhash64(F.col(id_col), F.lit(seed))
+            "__pick", F.xxhash64(F.col("doc_id"), F.lit(42))
         ),
         per_cluster,
         stratum_col="cluster",
         order_col="__pick",
-        id_col=id_col,
+        id_col="doc_id",
     )
     return picked.drop("__pick", "embedding")
 
@@ -308,7 +289,7 @@ def cluster_balanced_sample(
 # target distribution. The public recipe, re-derived for Catalyst:
 #
 #   bucket(g)  = pmod(xxhash64(g), B) over the unigram+bigram stream
-#   w[b]       = ln p_target(b) - ln p_raw(b)   (add-alpha smoothed)
+#   w[b]       = ln p_target(b) - ln p_raw(b)   (add-one smoothed)
 #   w(doc)     = sum over the doc's gram stream of w[bucket]
 #   keep       = Gumbel top-n on w(doc) (sampling proportional to
 #                exp(w), derandomized via xxhash64(id, seed))
@@ -342,7 +323,6 @@ def _dsir_bucket_stream(toks_col: str, num_buckets: int) -> F.Column:
 def dsir_bucket_counts(
     docs: DataFrame,
     num_buckets: int = DSIR_BUCKETS,
-    text_col: str = "text",
 ) -> list[int]:
     """The corpus' hashed-gram bucket histogram, collected driver-side —
     ``num_buckets`` longs, the entire fitted state DSIR needs per corpus.
@@ -350,7 +330,7 @@ def dsir_bucket_counts(
     collect is B rows regardless of corpus size."""
     from ..session import fan_out
 
-    base = fan_out(docs).withColumn("__toks", tokens_col(text_col))
+    base = fan_out(docs).withColumn("__toks", tokens_col())
     rows = (
         base.select(
             F.explode(_dsir_bucket_stream("__toks", num_buckets)).alias("__b")
@@ -369,29 +349,27 @@ def fit_dsir_weights(
     target: DataFrame,
     raw: DataFrame,
     num_buckets: int = DSIR_BUCKETS,
-    alpha: float = 1.0,
-    text_col: str = "text",
 ) -> list[int]:
     """Per-bucket importance log-weights in MICRO-NATS (scaled integers):
-    ``w[b] = round(1e6 * (ln p_target(b) - ln p_raw(b)))`` with add-alpha
+    ``w[b] = round(1e6 * (ln p_target(b) - ln p_raw(b)))`` with add-one
     smoothing. Fitting reads each corpus once (its B-bucket histogram);
     at 100 TB pass a bounded sample of the raw side — the estimator only
     needs the bucket DISTRIBUTION, not the corpus."""
-    ct = dsir_bucket_counts(target, num_buckets, text_col)
-    cr = dsir_bucket_counts(raw, num_buckets, text_col)
+    ct = dsir_bucket_counts(target, num_buckets)
+    cr = dsir_bucket_counts(raw, num_buckets)
     nt, nr = sum(ct), sum(cr)
     if nt == 0 or nr == 0:
         raise ValueError("empty gram stream in DSIR fit corpus")
     import math
 
-    denom_t = nt + alpha * num_buckets
-    denom_r = nr + alpha * num_buckets
+    denom_t = nt + num_buckets
+    denom_r = nr + num_buckets
     return [
         round(
             DSIR_SCALE
             * (
-                math.log((ct[b] + alpha) / denom_t)
-                - math.log((cr[b] + alpha) / denom_r)
+                math.log((ct[b] + 1) / denom_t)
+                - math.log((cr[b] + 1) / denom_r)
             )
         )
         for b in range(num_buckets)
@@ -401,9 +379,6 @@ def fit_dsir_weights(
 def dsir_score(
     docs: DataFrame,
     weights: list[int],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    out_col: str = "dsir_logweight",
 ) -> DataFrame:
     """Per-document importance log-weight (micro-nats): the sum of
     ``weights[bucket]`` over the doc's gram stream — integer-exact, so
@@ -420,19 +395,19 @@ def dsir_score(
     wdf = spark.createDataFrame(
         [(b, int(w)) for b, w in enumerate(weights)], "__b long, __w long"
     )
-    base = fan_out(docs).withColumn("__toks", tokens_col(text_col))
+    base = fan_out(docs).withColumn("__toks", tokens_col())
     sums = (
         base.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(_dsir_bucket_stream("__toks", num_buckets)).alias(
                 "__b"
             ),
         )
         .join(F.broadcast(wdf), "__b")
-        .groupBy(id_col)
-        .agg(F.sum("__w").alias(out_col))
+        .groupBy("doc_id")
+        .agg(F.sum("__w").alias("dsir_logweight"))
     )
-    return docs.join(sums, id_col, "left").na.fill({out_col: 0})
+    return docs.join(sums, "doc_id", "left").na.fill({"dsir_logweight": 0})
 
 
 def dsir_select(
@@ -440,8 +415,6 @@ def dsir_select(
     weights: list[int],
     n: int,
     seed: int = 1234,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Importance RESAMPLING via the Gumbel-max trick: keep the ``n``
     documents maximizing ``w(doc) + g_id`` where ``g_id`` is a standard
@@ -452,9 +425,9 @@ def dsir_select(
     global sort shuffle). Ties (astronomically unlikely on the
     continuous key) break by id for full determinism."""
     m = 1 << 40
-    scored = dsir_score(docs, weights, text_col, id_col)
+    scored = dsir_score(docs, weights)
     u = (
-        F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(m))
+        F.pmod(F.xxhash64(F.col("doc_id"), F.lit(seed)), F.lit(m))
         + F.lit(0.5)
     ) / F.lit(float(m))
     key = F.col("dsir_logweight") / F.lit(float(DSIR_SCALE)) - F.log(
@@ -462,7 +435,7 @@ def dsir_select(
     )
     return (
         scored.withColumn("__key", key)
-        .orderBy(F.col("__key").desc(), F.col(id_col).asc())
+        .orderBy(F.col("__key").desc(), F.col("doc_id").asc())
         .limit(n)
         .drop("__key")
     )

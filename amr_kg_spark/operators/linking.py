@@ -134,10 +134,7 @@ def gram_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
 def fuzzy_link(
     mentions: DataFrame,
     vocab_df: DataFrame,
-    mention_col: str = "mention",
-    vocab_col: str = "pref_name",
     threshold: float = 0.4,
-    n: int = 3,
 ) -> DataFrame:
     """Exact similarity join mention~vocab on char-n-gram Jaccard.
 
@@ -149,8 +146,10 @@ def fuzzy_link(
     ``threshold`` (tested as Jaccard >= 1 - ``Fraction(str(threshold))``,
     so a pair exactly at the threshold is kept).
     """
-    m = gram_sets(mentions.select(mention_col).distinct(), mention_col, mention_col, n)
-    v = gram_sets(vocab_df.select(vocab_col).distinct(), vocab_col, vocab_col, n)
+    m = gram_sets(mentions.select("mention").distinct(), "mention", "mention", 3)
+    v = gram_sets(
+        vocab_df.select("pref_name").distinct(), "pref_name", "pref_name", 3
+    )
     pairs = _prefix_jaccard_join(m, v, 1 - Fraction(str(threshold)))
     return pairs.select(
         F.col("id_a").alias("mention"),

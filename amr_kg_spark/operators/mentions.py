@@ -61,7 +61,7 @@ def compile_detectors(vocabularies: dict[str, list[str]]) -> dict[str, re.Patter
     return dets
 
 
-def detect_mentions(turns: DataFrame, text_col: str = "text") -> DataFrame:
+def detect_mentions(turns: DataFrame) -> DataFrame:
     """Append a ``mentions array<struct<entity_class,mention,start>>`` column.
 
     mapInPandas-free: a scalar pandas UDF keeps the surrounding projection
@@ -124,7 +124,7 @@ def detect_mentions(turns: DataFrame, text_col: str = "text") -> DataFrame:
     # side. The function is semantically deterministic; the flag only
     # forbids the optimizer to clone or reorder it.
     _detect_once = _detect.asNondeterministic()
-    return turns.withColumn("mentions", _detect_once(F.col(text_col)))
+    return turns.withColumn("mentions", _detect_once(F.col("text")))
 
 
 def detect_mentions_jvm(turns: DataFrame) -> DataFrame:
@@ -158,13 +158,12 @@ def detect_mentions_jvm(turns: DataFrame) -> DataFrame:
     return turns.withColumn("mentions", F.concat(*per_class))
 
 
-def explode_mentions(
-    with_mentions: DataFrame, keep_cols: tuple[str, ...] = ("conv_id", "turn_idx")
-) -> DataFrame:
+def explode_mentions(with_mentions: DataFrame) -> DataFrame:
     """UDTF-style flatten: one row per detected mention."""
     m = F.explode("mentions").alias("m")
-    return with_mentions.select(*keep_cols, m).select(
-        *keep_cols,
+    return with_mentions.select("conv_id", "turn_idx", m).select(
+        "conv_id",
+        "turn_idx",
         F.col("m.entity_class").alias("entity_class"),
         F.col("m.mention").alias("mention"),
         F.col("m.start").alias("start"),

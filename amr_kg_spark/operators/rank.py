@@ -59,21 +59,18 @@ def bm25_rank_exact(
     docs: DataFrame,
     query_terms: list[str],
     k: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    scale: int = BM25_SCALE,
 ) -> DataFrame:
     """Top-``k`` documents for ``query_terms`` under exact-rational BM25.
 
-    Returns ``(id_col, score_micro, rank, dl, n_terms_hit)`` — ``rank``
+    Returns ``(doc_id, score_micro, rank, dl, n_terms_hit)`` — ``rank``
     is 1-based by ``(score desc, id asc)`` (the integer tiebreak makes
     the ordering total and engine-independent).
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     # per-doc length table (dl); computed once, reused by tf join
-    lengths = docs.select(F.col(id_col), F.size(toks).alias("dl"))
+    lengths = docs.select(F.col("doc_id"), F.size(toks).alias("dl"))
     # corpus stats: one tiny row, broadcast-cross-joined (stays in-plan —
     # no driver collect, so the operator composes lazily). This compiles
     # to a BroadcastNestedLoopJoin over a ONE-ROW broadcast aggregate:
@@ -88,38 +85,38 @@ def bm25_rank_exact(
     # term frequencies: explode only the matching tokens (filter BEFORE
     # the explode+shuffle — only query-term hits ever move)
     hits = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.filter(toks, lambda t: t.isin(*[F.lit(q) for q in query_terms]))
         ).alias("tok"),
     )
-    tf = hits.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf"))
+    tf = hits.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     # document frequency per term: tiny (≤ |query_terms| rows), broadcast
     df_tbl = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     scored_terms = (
         tf.join(F.broadcast(df_tbl), "tok")
         # tf side holds only docs containing query terms; lengths is
         # corpus-sized — equi-join on the id, strategy left to AQE
-        .join(lengths, id_col)
+        .join(lengths, "doc_id")
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "term_score",
             F.expr(
-                f"(CAST({scale} AS BIGINT) * (2*n_docs - 2*df + 1) * 44"
+                f"(CAST({BM25_SCALE} AS BIGINT) * (2*n_docs - 2*df + 1) * 44"
                 " * tf * avgdl)"
                 " div ((2*df + 1) * (20*tf*avgdl + 6*avgdl + 18*dl))"
             ),
         )
     )
-    doc_scores = scored_terms.groupBy(id_col).agg(
+    doc_scores = scored_terms.groupBy("doc_id").agg(
         F.sum("term_score").alias("score_micro"),
         F.first("dl").alias("dl"),
         F.count(F.lit(1)).alias("n_terms_hit"),
     )
     topk = doc_scores.orderBy(
-        F.col("score_micro").desc(), F.col(id_col).asc()
+        F.col("score_micro").desc(), F.col("doc_id").asc()
     ).limit(k)
-    w = Window.orderBy(F.col("score_micro").desc(), F.col(id_col).asc())
+    w = Window.orderBy(F.col("score_micro").desc(), F.col("doc_id").asc())
     return topk.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "score_micro", "rank", "dl", "n_terms_hit"
+        "doc_id", "score_micro", "rank", "dl", "n_terms_hit"
     )

@@ -37,7 +37,7 @@ def ordered_turns(transcripts: DataFrame) -> DataFrame:
     return transcripts.withColumn("turn_seq", F.row_number().over(w))
 
 
-def conversation_text(transcripts: DataFrame, sep: str = "\n") -> DataFrame:
+def conversation_text(transcripts: DataFrame) -> DataFrame:
     """One row per conversation: turns concatenated in turn_idx order.
 
     sort_array on struct(turn_idx, text) gives a deterministic order
@@ -52,7 +52,7 @@ def conversation_text(transcripts: DataFrame, sep: str = "\n") -> DataFrame:
                     F.sort_array(F.collect_list(F.struct("turn_idx", "text"))),
                     lambda s: s["text"],
                 ),
-                sep,
+                "\n",
             ).alias("conv_text"),
             F.count("*").cast("long").alias("n_turns"),
         )
@@ -77,7 +77,7 @@ def sessionize(
 
 
 def conversation_text_salted(
-    transcripts: DataFrame, bucket_size: int = 1024, sep: str = "\n"
+    transcripts: DataFrame, bucket_size: int = 1024
 ) -> DataFrame:
     """Skew-safe reconstruction for hot conv_ids.
 
@@ -95,7 +95,7 @@ def conversation_text_salted(
                 F.sort_array(F.collect_list(F.struct("turn_idx", "text"))),
                 lambda s: s["text"],
             ),
-            sep,
+            "\n",
         ).alias("seg_text"),
         F.count("*").cast("long").alias("seg_turns"),
     )
@@ -107,7 +107,7 @@ def conversation_text_salted(
                     F.sort_array(F.collect_list(F.struct("turn_bucket", "seg_text"))),
                     lambda s: s["seg_text"],
                 ),
-                sep,
+                "\n",
             ).alias("conv_text"),
             F.sum("seg_turns").cast("long").alias("n_turns"),
         )

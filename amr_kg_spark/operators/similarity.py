@@ -57,9 +57,7 @@ def _l2sq(x: F.Column, c: list[float]) -> F.Column:
     )
 
 
-def _rerank_topk(
-    cands: DataFrame, query_vec: list[float], k: int, id_col: str, vec_col: str
-) -> DataFrame:
+def _rerank_topk(cands: DataFrame, query_vec: list[float], k: int) -> DataFrame:
     """Exact cosine top-k of ``cands`` against one literal query vector.
     Sorts on the UNROUNDED cosine (tie-break vec_id), rounding only for
     display — the oracle SQL orders by the unrounded expression, so rounding
@@ -67,8 +65,8 @@ def _rerank_topk(
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     return (
         cands.select(
-            F.col(id_col).alias("vec_id"),
-            _cosine(F.col(vec_col), q).alias("_cos"),
+            F.col("vec_id"),
+            _cosine(F.col("embedding"), q).alias("_cos"),
         )
         .orderBy(F.col("_cos").desc(), F.col("vec_id").asc())
         .limit(k)
@@ -93,13 +91,11 @@ def cosine_topk(
     emb: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine similarity; deterministic tie-break on id."""
     from ..session import fan_out
 
-    return _rerank_topk(fan_out(emb), query_vec, k, id_col, vec_col)
+    return _rerank_topk(fan_out(emb), query_vec, k)
 
 
 def rhp_signature(vec_col: str, hyperplanes: np.ndarray) -> F.Column:
@@ -120,25 +116,21 @@ def make_hyperplanes(dim: int, bits: int = 12, seed: int = 42) -> np.ndarray:
 def fit_ivf(
     emb: DataFrame,
     n_clusters: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    fit_fraction: float = 1.0,
 ):
     """Fit the IVF coarse quantizer (KMeans) and return (model, assigned)
-    where ``assigned`` is the corpus with a ``cluster`` column. At 100 TB:
-    fit on a sample (``fit_fraction``), assign the full corpus, and write
-    the table partitioned by ``cluster`` so probes prune partitions."""
+    where ``assigned`` is the corpus with a ``cluster`` column. At 100 TB,
+    assign the full corpus and write the table partitioned by ``cluster``
+    so probes prune partitions."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     from ..session import fan_out
 
     emb = fan_out(emb)
-    feats = emb.withColumn("__features", array_to_vector(F.col(vec_col)))
-    fit_df = feats if fit_fraction >= 1.0 else feats.sample(fit_fraction, seed)
+    feats = emb.withColumn("__features", array_to_vector(F.col("embedding")))
     model = KMeans(
-        k=n_clusters, seed=seed, featuresCol="__features", predictionCol="cluster"
-    ).fit(fit_df)
+        k=n_clusters, seed=42, featuresCol="__features", predictionCol="cluster"
+    ).fit(feats)
     assigned = model.transform(feats).drop("__features")
     return model, assigned
 
@@ -146,8 +138,6 @@ def fit_ivf(
 def assign_fixed_centroids(
     emb: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-    out: str = "cluster",
 ) -> DataFrame:
     """Assign every vector to its nearest fixed centroid — pure Catalyst
     (argmin over literal centroid arrays via array_min on (dist, cid)
@@ -159,14 +149,14 @@ def assign_fixed_centroids(
         F.array(
             *[
                 F.struct(
-                    _l2sq(F.col(vec_col), c).alias("d"),
+                    _l2sq(F.col("embedding"), c).alias("d"),
                     F.lit(int(cid)).alias("cid"),
                 )
                 for cid, c in centroids
             ]
         )
     )
-    return emb.withColumn(out, best["cid"])
+    return emb.withColumn("cluster", best["cid"])
 
 
 def ivf_topk_pretrained(
@@ -174,8 +164,6 @@ def ivf_topk_pretrained(
     query_vec: list[float],
     centroids: list[tuple[int, list[float]]],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_probe: int = 4,
 ) -> DataFrame:
     """IVF ANN with a FIXED (pretrained) coarse quantizer: Catalyst
@@ -188,19 +176,16 @@ def ivf_topk_pretrained(
 
     emb = fan_out(emb)
     probes = _nearest_centroids(query_vec, centroids, n_probe)
-    assigned = assign_fixed_centroids(emb, centroids, vec_col)
+    assigned = assign_fixed_centroids(emb, centroids)
     cands = assigned.filter(F.col("cluster").isin(probes))
-    return _rerank_topk(cands, query_vec, k, id_col, vec_col)
+    return _rerank_topk(cands, query_vec, k)
 
 
 def rhp_ann_topk(
     emb: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bits: int = 10,
-    seed: int = 42,
 ) -> DataFrame:
     """ANN top-k: candidates = vectors whose RHP signature is within
     hamming distance 1 of the query's, then exact cosine rerank.
@@ -213,7 +198,7 @@ def rhp_ann_topk(
 
     emb = fan_out(emb)
     dim = len(query_vec)
-    planes = make_hyperplanes(dim, bits, seed)
+    planes = make_hyperplanes(dim, bits)
     qv = np.asarray(query_vec, dtype=float)
     qsig = 0
     for i, h in enumerate(planes):
@@ -221,6 +206,6 @@ def rhp_ann_topk(
             qsig |= 1 << i
     probe_sigs = [qsig] + [qsig ^ (1 << i) for i in range(bits)]
 
-    sigged = emb.withColumn("sig", rhp_signature(vec_col, planes))
+    sigged = emb.withColumn("sig", rhp_signature("embedding", planes))
     cands = sigged.filter(F.col("sig").isin(probe_sigs))
-    return _rerank_topk(cands, query_vec, k, id_col, vec_col)
+    return _rerank_topk(cands, query_vec, k)

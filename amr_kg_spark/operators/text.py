@@ -29,14 +29,14 @@ STOPWORDS = {
 }
 
 
-def token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_count(docs: DataFrame) -> DataFrame:
     """Whitespace/punct token count + a BPE-ish subword estimate
     (chars/4 is the common fast proxy for byte-pair token counts)."""
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     return docs.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
-        F.ceil(F.length(F.col(text_col)) / F.lit(4)).cast("long").alias("est_bpe_tokens"),
+        F.ceil(F.length(F.col("text")) / F.lit(4)).cast("long").alias("est_bpe_tokens"),
     )
 
 
@@ -75,11 +75,11 @@ _TMP_COLS = ("__t", "__g", "__ts")
 
 
 def with_signals(
-    docs: DataFrame, text_col: str = "text", n: int = 3
+    docs: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """ALL text-quality signals as columns in ONE projection over ONE scan.
 
-    The token array and the n-gram array are materialized once
+    The token array and the word-trigram array are materialized once
     (``withColumn`` chains collapse into a single ProjectExec — Spark
     re-evaluates lambda inputs per element otherwise, see
     dedup.with_word_shingles), then every signal is an expression over
@@ -95,8 +95,8 @@ def with_signals(
     """
     t = F.col("__t")
     grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(t) - F.lit(n - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice(t, i, n), " "),
+        F.sequence(F.lit(1), F.greatest(F.size(t) - F.lit(2), F.lit(1))),
+        lambda i: F.array_join(F.slice(t, i, 3), " "),
     )
     step = (
         docs.withColumn("__t", tokens_col(text_col))
@@ -205,24 +205,23 @@ def corpus_filter(
     return sig.withColumn("reject_reason", reason)
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text", n: int = 5) -> DataFrame:
-    """Winnowing-style fingerprint: min md5 over n-word shingles (one stable
+def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Winnowing-style fingerprint: min md5 over 5-word shingles (one stable
     representative hash per document; equal fingerprints => near-identical
     prefix content). Tokens are materialized first so the split isn't
     re-evaluated per shingle (see dedup.with_word_shingles)."""
     step = docs.withColumn("__toks", tokens_col(text_col))
     shingles = F.transform(
         F.sequence(
-            F.lit(1), F.greatest(F.size("__toks") - F.lit(n - 1), F.lit(1))
+            F.lit(1), F.greatest(F.size("__toks") - F.lit(4), F.lit(1))
         ),
-        lambda i: F.md5(F.array_join(F.slice(F.col("__toks"), i, n), " ")),
+        lambda i: F.md5(F.array_join(F.slice(F.col("__toks"), i, 5), " ")),
     )
     return step.select("doc_id", F.array_min(shingles).alias("fingerprint"))
 
 
 def fit_unigram_lm(
     docs: DataFrame,
-    text_col: str = "text",
     vocab_size: int = 50000,
     min_count: int = 1,
 ) -> DataFrame:
@@ -249,7 +248,7 @@ def fit_unigram_lm(
     accumulator-asserted in tests)."""
     import math
 
-    toks = docs.select(F.explode(tokens_col(text_col)).alias("token"))
+    toks = docs.select(F.explode(tokens_col()).alias("token"))
     counts = toks.groupBy("token").agg(F.count("*").alias("n")).persist()
     try:
         total = counts.agg(F.sum("n")).collect()[0][0]
@@ -278,8 +277,6 @@ def fit_unigram_lm(
 def unigram_logprob(
     docs: DataFrame,
     lm: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Score every document under a fitted unigram LM: mean per-token log
     probability (``lm_score``, higher = more corpus-typical) plus the OOV
@@ -297,19 +294,19 @@ def unigram_logprob(
     floor = lm.agg(F.min("logp")).collect()[0][0]
     if floor is None:
         return docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.lit(None).cast("double").alias("lm_score"),
             F.lit(None).cast("double").alias("oov_rate"),
-            F.size(tokens_col(text_col)).cast("long").alias(
+            F.size(tokens_col()).cast("long").alias(
                 "n_tokens_scored"
             ),
         )
     per_tok = docs.select(
-        F.col(id_col), F.explode(tokens_col(text_col)).alias("token")
+        F.col("doc_id"), F.explode(tokens_col()).alias("token")
     )
     joined = per_tok.join(F.broadcast(lm), "token", "left")
     return (
-        joined.groupBy(id_col)
+        joined.groupBy("doc_id")
         .agg(
             F.round(
                 F.avg(F.coalesce(F.col("logp"), F.lit(float(floor)))), 6

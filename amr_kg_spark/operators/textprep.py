@@ -45,12 +45,10 @@ HSPACE_CLASS = "[ \\t\u00A0\u1680\u2000-\u200A\u202F\u205F\u3000]+"
 
 def normalize_text(
     docs: DataFrame,
-    text_col: str = "text",
-    out_col: str = "text_norm",
     nfc: bool = False,
     preserve_newlines: bool = False,
 ) -> DataFrame:
-    """Standard pre-tokenization cleanup, one projection:
+    """Standard pre-tokenization cleanup into ``text_norm``, one projection:
 
     - control characters (C0 except \\t \\n, DEL) stripped;
     - whitespace runs — ASCII ``\\s`` plus the unicode space set in
@@ -75,7 +73,7 @@ def normalize_text(
     same dedup/token keys as their composed equivalents. The default path
     stays JVM-only/whole-stage-codegen; the NFC path is one
     ArrowEvalPython stage, still zero shuffles (plan-asserted in tests)."""
-    src = F.col(text_col)
+    src = F.col("text")
     if nfc:
         import pandas as pd  # noqa: F401 (signature typing)
         from pyspark.sql.functions import pandas_udf
@@ -94,9 +92,9 @@ def normalize_text(
         nl = F.regexp_replace(cleaned, "\r\n|[\r  ]", "\n")
         collapsed = F.regexp_replace(nl, HSPACE_CLASS, " ")
         tidy = F.regexp_replace(collapsed, " ?\n ?", "\n")
-        return docs.withColumn(out_col, F.btrim(tidy, F.lit(" \n")))
+        return docs.withColumn("text_norm", F.btrim(tidy, F.lit(" \n")))
     collapsed = F.regexp_replace(cleaned, WHITESPACE_CLASS, " ")
-    return docs.withColumn(out_col, F.trim(collapsed))
+    return docs.withColumn("text_norm", F.trim(collapsed))
 
 
 # the standard scrub patterns a release pipeline applies before training;
@@ -139,9 +137,7 @@ def scrub_pii(
 def pack_sequences(
     docs: DataFrame,
     budget: int,
-    id_col: str = "doc_id",
     token_col: str = "n_tokens",
-    order_col: str | None = None,
     num_bins: int = 1024,
     shuffle_seed: int | None = None,
 ) -> DataFrame:
@@ -176,20 +172,20 @@ def pack_sequences(
     waste at one partial sequence per bin."""
     bins = num_bins
     binned = docs.withColumn(
-        "pack_bin", F.pmod(F.xxhash64(F.col(id_col)), F.lit(bins))
+        "pack_bin", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(bins))
     )
     if shuffle_seed is not None:
         # deterministic training-order shuffle: the stream concatenates in
-        # xxhash64(id, seed) order instead of order_col — same purity
+        # xxhash64(id, seed) order instead of id order — same purity
         # contract (epoch order is a function of ids + seed, reproducible
         # on resume), no extra pass (the order expression feeds the same
         # window sort)
-        order_expr = F.xxhash64(F.col(id_col), F.lit(shuffle_seed))
+        order_expr = F.xxhash64(F.col("doc_id"), F.lit(shuffle_seed))
     else:
-        order_expr = F.col(order_col or id_col)
+        order_expr = F.col("doc_id")
     w = (
         Window.partitionBy("pack_bin")
-        .orderBy(order_expr, F.col(id_col))
+        .orderBy(order_expr, F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum_before = F.sum(F.col(token_col)).over(w) - F.col(token_col)
@@ -209,11 +205,9 @@ def stratified_sample(
     docs: DataFrame,
     fractions: dict[str, float],
     stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    seed: int = 42,
 ) -> DataFrame:
     """Deterministic per-stratum sampling: keep a row iff the low 30 bits
-    of ``xxhash64(id, seed)`` fall under ``fraction * 2^30`` for its
+    of ``xxhash64(id, 42)`` fall under ``fraction * 2^30`` for its
     stratum. Unlike ``df.sample``, the decision is a pure function of the
     id — stable across retries, resumes and cluster sizes (the property a
     reproducible training mix needs) — and the filter is a scan-side
@@ -224,7 +218,7 @@ def stratified_sample(
         *[x for k, v in fractions.items() for x in (F.lit(k), F.lit(v))]
     )
     frac = F.coalesce(mapping[F.col(stratum_col)], F.lit(0.0))
-    bucket = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(m))
+    bucket = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(42)), F.lit(m))
     return docs.filter(bucket < (frac * m).cast("long"))
 
 
@@ -232,20 +226,17 @@ def mix_to_token_budget(
     docs: DataFrame,
     budgets: dict[str, int],
     stratum_col: str = "lang",
-    token_col: str = "n_tokens",
-    id_col: str = "doc_id",
-    seed: int = 42,
     shards: int = 1,
 ) -> DataFrame:
     """Curriculum mixing to ABSOLUTE token budgets: per stratum, keep
-    documents in deterministic ``xxhash64(id, seed)`` order until the
+    documents in deterministic ``xxhash64(id, 42)`` order until the
     stratum's token budget is reached (the document that crosses the
     boundary is kept, so each stratum delivers >= its budget when enough
     tokens exist). Where :func:`stratified_sample` hits a RATE, this hits
     a target token COUNT per source — the "mix N billion tokens of code
     with M billion of web text" step of assembling a pre-training corpus.
 
-    Deterministic: the hash order is a pure function of (id, seed), so
+    Deterministic: the hash order is a pure function of the id, so
     the selected set is identical across retries, resumes and cluster
     widths — rescaling a budget only extends/truncates the same ordered
     stream (nesting property, like the sampler's fraction nesting).
@@ -257,7 +248,7 @@ def mix_to_token_budget(
     ``shards`` is the hot-stratum knob: ``shards=1`` (default) keeps one
     stream per stratum — simplest, but a single giant stratum serializes
     its window into one task. ``shards=k`` splits every stratum into k
-    deterministic sub-streams (``xxhash64(id, seed+1) % k``) with
+    deterministic sub-streams (``xxhash64(id, 43) % k``) with
     ``ceil(budget / k)`` tokens each — k parallel window tasks per
     stratum, same purity contract per shard. The selected SET differs
     from shards=1 (k independent hash-ordered streams), overshoot is at
@@ -267,9 +258,9 @@ def mix_to_token_budget(
         *[x for k, v in budgets.items() for x in (F.lit(k), F.lit(int(v)))]
     )
     budget = F.coalesce(mapping[F.col(stratum_col)], F.lit(0)).cast("long")
-    h = F.xxhash64(F.col(id_col), F.lit(seed))
+    h = F.xxhash64(F.col("doc_id"), F.lit(42))
     if shards > 1:
-        shard = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed + 1)), F.lit(shards))
+        shard = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(43)), F.lit(shards))
         part_keys = [stratum_col, "__shard"]
         budget = F.ceil(budget / F.lit(shards)).cast("long")
     else:
@@ -277,10 +268,10 @@ def mix_to_token_budget(
         part_keys = [stratum_col]
     w = (
         Window.partitionBy(*part_keys)
-        .orderBy(h, F.col(id_col))
+        .orderBy(h, F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum_before = F.sum(F.col(token_col)).over(w) - F.col(token_col)
+    cum_before = F.sum(F.col("n_tokens")).over(w) - F.col("n_tokens")
     return (
         docs.withColumn("__shard", shard)
         .withColumn("__cb", cum_before)
@@ -293,20 +284,15 @@ def mix_to_token_budget(
 URL_PATTERN = r"""https?://[^\s<>"']+|\bwww\.[^\s<>"']+"""
 
 
-def strip_urls(
-    docs: DataFrame,
-    text_col: str = "text",
-    out_col: str = "text_nourl",
-    token: str = "<URL>",
-) -> DataFrame:
-    """Replace URLs with a placeholder (or strip them with ``token=""``)
-    and count them per document — crawl text is full of bare links that
-    are tokenizer poison and dedup noise. One projection, RE2-safe
-    pattern (DuckDB-replayable like the PII patterns), zero shuffles."""
-    col = F.col(text_col)
+def strip_urls(docs: DataFrame) -> DataFrame:
+    """Replace URLs with ``<URL>`` in ``text_nourl`` and count them per
+    document — crawl text is full of bare links that are tokenizer
+    poison and dedup noise. One projection, RE2-safe pattern
+    (DuckDB-replayable like the PII patterns), zero shuffles."""
+    col = F.col("text")
     return docs.withColumn(
         "n_urls", F.size(F.regexp_extract_all(col, F.lit(URL_PATTERN), F.lit(0)))
-    ).withColumn(out_col, F.regexp_replace(col, URL_PATTERN, token))
+    ).withColumn("text_nourl", F.regexp_replace(col, URL_PATTERN, "<URL>"))
 
 
 def corpus_stats(
@@ -314,7 +300,6 @@ def corpus_stats(
     stratum_col: str = "lang",
     text_col: str = "text",
     exact: bool = True,
-    approx_accuracy: int = 10000,
     token_count_col: str | None = None,
 ) -> DataFrame:
     """Per-stratum corpus report: document count, token totals, token-count
@@ -326,14 +311,14 @@ def corpus_stats(
     cross-check is value-equal; at extreme per-stratum cardinality the
     exact aggregate's per-group value buffer is the bottleneck, so
     ``exact=False`` switches to ``approx_percentile`` (Greenwald-Khanna
-    sketch, bounded memory, rank error <= 1/approx_accuracy) — tested to
+    sketch, bounded memory, rank error <= 1/10000) — tested to
     stay within tolerance of the exact quantiles.
 
     ``token_count_col`` switches the counting basis: by default tokens
     are the Catalyst ``\\W+`` word count; pass the name of a precomputed
-    count column (e.g. from
-    :func:`amr_kg_spark.operators.tokenize.with_token_counts` with the
-    BPE counter) to report in real subword tokens instead."""
+    count column (e.g. one filled by
+    :func:`amr_kg_spark.operators.tokenize.bpe_token_count`) to report
+    in real subword tokens instead."""
     from .dedup import tokens_col
 
     nt = (
@@ -354,7 +339,7 @@ def corpus_stats(
     else:
         pct = [
             F.percentile_approx(
-                "__nt", F.lit(p), F.lit(approx_accuracy)
+                "__nt", F.lit(p), F.lit(10000)
             ).cast("double").alias(f"p{n}_tokens")
             for p, n in ((0.5, 50), (0.9, 90), (0.99, 99))
         ]
@@ -394,9 +379,6 @@ def chunk_documents(
     docs: DataFrame,
     chunk_tokens: int = 512,
     overlap: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "chunk_text",
 ) -> DataFrame:
     """Fixed-token-window document chunking with overlap — the
     context-window splitting step of embedding/retrieval prep (long
@@ -407,7 +389,7 @@ def chunk_documents(
     punctuation.
 
     Output: one row per (doc, chunk) with ``chunk_idx`` (0-based),
-    ``out_col`` and ``n_chunk_tokens``. A document shorter than one
+    ``chunk_text`` and ``n_chunk_tokens``. A document shorter than one
     window yields exactly one chunk (possibly empty for empty text).
 
     Scale shape: one projection + one ``posexplode`` — the token array
@@ -416,7 +398,7 @@ def chunk_documents(
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("need 0 <= overlap < chunk_tokens")
     step = chunk_tokens - overlap
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     starts = F.sequence(
         F.lit(1), F.greatest(F.size(F.col("__ct")) - F.lit(overlap), F.lit(1)),
         F.lit(step),
@@ -435,13 +417,13 @@ def chunk_documents(
         docs.withColumn("__ct", toks)
         .withColumn("__chunks", chunks)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             ex.alias("chunk_idx", "__c"),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_idx",
-            F.col("__c.txt").alias(out_col),
+            F.col("__c.txt").alias("chunk_text"),
             F.greatest(F.col("__c.nt"), F.lit(0)).cast("int").alias(
                 "n_chunk_tokens"
             ),
@@ -452,9 +434,7 @@ def chunk_documents(
 def materialize_sequences(
     docs: DataFrame,
     budget: int,
-    id_col: str = "doc_id",
     token_col: str = "n_tokens",
-    text_col: str = "text",
     num_bins: int = 1024,
     shuffle_seed: int | None = None,
     with_boundaries: bool = False,
@@ -475,9 +455,8 @@ def materialize_sequences(
     needs). Run after :func:`normalize_text` (same
     space-token contract as :func:`chunk_documents`); ``token_col`` must
     equal ``size(split(text, ' '))`` for boundaries to line up — pass
-    the count from :func:`with_token_counts`-style whitespace counting
-    over the SAME split, or simply let this function derive it (set
-    ``token_col=None``).
+    a whitespace count over the SAME split, or simply let this function
+    derive it (set ``token_col=None``).
 
     Scale shape: piece splitting is a projection + ``posexplode`` (a doc
     yields ``ceil((offset + n) / budget)`` pieces, almost always 1); the
@@ -486,16 +465,15 @@ def materialize_sequences(
     construction — no skew possible. Deterministic end-to-end (inherits
     the packing's purity contract)."""
     if token_col is None:
-        docs = docs.withColumn("__nt", F.size(F.split(F.col(text_col), " ")))
+        docs = docs.withColumn("__nt", F.size(F.split(F.col("text"), " ")))
         token_col = "__nt"
     return _assemble_stream(
         docs,
         budget=budget,
-        id_col=id_col,
         token_col=token_col,
         num_bins=num_bins,
         shuffle_seed=shuffle_seed,
-        tok_arr=F.split(F.col(text_col), " "),
+        tok_arr=F.split(F.col("text"), " "),
         with_boundaries=with_boundaries,
     )
 
@@ -505,8 +483,6 @@ def materialize_token_ids(
     budget: int,
     merges: list[tuple[str, str]],
     vocab: dict[str, int] | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_bins: int = 1024,
     shuffle_seed: int | None = None,
     eod_id: int | None = None,
@@ -546,7 +522,7 @@ def materialize_token_ids(
 
     if vocab is None:
         vocab = build_vocab(merges)
-    id_expr = bpe_token_ids(text_col, merges, vocab)
+    id_expr = bpe_token_ids("text", merges, vocab)
     if eod_id is not None:
         # standard end-of-document delimiter: appended to each document's
         # encoding BEFORE packing, so it counts against the budget and
@@ -560,7 +536,6 @@ def materialize_token_ids(
     return _assemble_stream(
         ids,
         budget=budget,
-        id_col=id_col,
         token_col="__nt",
         num_bins=num_bins,
         shuffle_seed=shuffle_seed,
@@ -599,10 +574,7 @@ def _pieces_expr(budget: int, token_col: str):
 def sequence_pieces(
     docs: DataFrame,
     budget: int,
-    id_col: str = "doc_id",
-    token_col: str = "n_tokens",
     num_bins: int = 1024,
-    shuffle_seed: int | None = None,
 ) -> DataFrame:
     """The coordinate-level view of sequence assembly: one row per
     (document, covering sequence) with the exact slice arithmetic the
@@ -613,20 +585,13 @@ def sequence_pieces(
     back to source documents (provenance, loss masking, dedup audits)
     reads this instead of re-deriving the arithmetic. Pure projection +
     posexplode over :func:`pack_sequences` — no extra exchange."""
-    packed = pack_sequences(
-        docs,
-        budget=budget,
-        id_col=id_col,
-        token_col=token_col,
-        num_bins=num_bins,
-        shuffle_seed=shuffle_seed,
-    )
+    packed = pack_sequences(docs, budget=budget, num_bins=num_bins)
     ex = F.posexplode(F.col("__pieces"))
     return (
-        packed.withColumn("__pieces", _pieces_expr(budget, token_col))
-        .select(id_col, "pack_bin", ex.alias("piece_idx", "__p"))
+        packed.withColumn("__pieces", _pieces_expr(budget, "n_tokens"))
+        .select("doc_id", "pack_bin", ex.alias("piece_idx", "__p"))
         .select(
-            id_col,
+            "doc_id",
             "pack_bin",
             "piece_idx",
             F.col("__p.seq").alias("seq_id"),
@@ -643,7 +608,6 @@ def sequence_pieces(
 def _assemble_stream(
     docs: DataFrame,
     budget: int,
-    id_col: str,
     token_col: str,
     num_bins: int,
     shuffle_seed: int | None,
@@ -660,7 +624,6 @@ def _assemble_stream(
     packed = pack_sequences(
         docs,
         budget=budget,
-        id_col=id_col,
         token_col=token_col,
         num_bins=num_bins,
         shuffle_seed=shuffle_seed,
@@ -720,22 +683,20 @@ def _assemble_stream(
 def split_corpus(
     docs: DataFrame,
     val_fraction: float = 0.01,
-    id_col: str = "doc_id",
-    seed: int = 777,
 ) -> tuple[DataFrame, DataFrame]:
     """Deterministic train/validation split: a document is validation iff
-    the low 30 bits of ``xxhash64(id, seed)`` fall under
+    the low 30 bits of ``xxhash64(id, 777)`` fall under
     ``val_fraction * 2^30`` — the same pure-function predicate
     :func:`stratified_sample` uses, so the split is exactly reproducible
     across retries, resumes and cluster widths, the two sides are
     disjoint and exhaustive BY CONSTRUCTION (one predicate, negated), and
     growing ``val_fraction`` only moves documents train->val (nesting).
     Both sides are scan-side filters: zero shuffle, pushdown-eligible.
-    Use a DIFFERENT seed from any sampling upstream, or the validation
-    set would correlate with the sample."""
+    The seed 777 differs from the samplers' 42, so the validation set
+    does not correlate with an upstream sample."""
     m = 1 << 30
     cut = F.lit(int(val_fraction * m)).cast("long")
-    bucket = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(m))
+    bucket = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(777)), F.lit(m))
     return docs.filter(bucket >= cut), docs.filter(bucket < cut)
 
 
@@ -749,8 +710,6 @@ FIM_PREFIX, FIM_SUFFIX, FIM_MIDDLE = (
 def fim_transform(
     docs: DataFrame,
     rate: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     seed: int = 4242,
 ) -> DataFrame:
     """Fill-in-the-middle (FIM) augmentation — the document rewrite used
@@ -782,18 +741,18 @@ def fim_transform(
     One projection — zero shuffles, zero UDFs; scan-side and
     pushdown-friendly like every transform in this module.
     """
-    toks = tokens_col(text_col)
-    sel = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(1000)) < int(
+    toks = tokens_col()
+    sel = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(seed)), F.lit(1000)) < int(
         rate * 1000
     )
     d = docs.withColumn("__t", toks).withColumn("__n", F.size("__t"))
     applied = sel & (F.col("__n") >= 3)
     h1 = F.pmod(
-        F.xxhash64(F.col(id_col), F.lit(seed + 1)), F.col("__n") - 2
+        F.xxhash64(F.col("doc_id"), F.lit(seed + 1)), F.col("__n") - 2
     )
     d = d.withColumn("__p", F.when(applied, F.lit(1) + h1))
     h2 = F.pmod(
-        F.xxhash64(F.col(id_col), F.lit(seed + 2)),
+        F.xxhash64(F.col("doc_id"), F.lit(seed + 2)),
         F.col("__n") - F.col("__p") - 1,
     )
     d = d.withColumn("__m", F.when(applied, F.lit(1) + h2))
@@ -832,7 +791,6 @@ def pmi_collocations(
     docs: DataFrame,
     min_count: int = 5,
     k: int = 100,
-    text_col: str = "text",
 ) -> DataFrame:
     """Top-``k`` adjacent-bigram collocations by pointwise mutual
     information — the corpus-analysis primitive behind stop-phrase
@@ -857,7 +815,7 @@ def pmi_collocations(
     tables, far smaller than the corpus); corpus totals are one tiny
     aggregate broadcast back; final top-k is TakeOrderedAndProject.
     """
-    t = tokens_col(text_col)
+    t = tokens_col()
     d = docs.select(t.alias("__t")).select(
         F.col("__t"), F.size("__t").alias("__n")
     )

@@ -18,9 +18,8 @@ nothing here derives from any non-public code):
 - :func:`bpe_token_count` — a batched Arrow ``pandas_udf`` column
   expression: one ArrowEvalPython stage, zero shuffles, never per-row
   Python (plan-asserted in tests). This is the sanctioned slow path —
-  the same shape as ``mentions.py``'s detector UDF.
-- :func:`with_token_counts` — the threading point: adds ``n_tokens`` via
-  either counter so ``pack_sequences`` / ``mix_to_token_budget`` /
+  the same shape as ``mentions.py``'s detector UDF. Written into
+  ``n_tokens``, it makes ``pack_sequences`` / ``mix_to_token_budget`` /
   ``corpus_stats`` (which all consume a token-count column) budget in
   real subword tokens.
 
@@ -215,8 +214,6 @@ def merge_ranks(merges: list[tuple[str, str]]) -> dict[tuple[str, str], int]:
 def sample_texts(
     docs: DataFrame,
     n: int = 2000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> list[str]:
     """Deterministic driver-side training sample: the ``n`` documents with
     the lowest ``xxhash64(id)`` (a pure function of the corpus, so
@@ -228,8 +225,8 @@ def sample_texts(
     id tiebreak keeps the order total). Plans as TakeOrderedAndProject
     (per-partition top-n, merged); the scan prunes to two columns."""
     rows = (
-        docs.select(id_col, text_col)
-        .orderBy(F.xxhash64(F.col(id_col)).asc(), F.col(id_col).asc())
+        docs.select("doc_id", "text")
+        .orderBy(F.xxhash64(F.col("doc_id")).asc(), F.col("doc_id").asc())
         .limit(n)
         .collect()
     )
@@ -336,25 +333,3 @@ def bpe_token_count(
 
     return _count(F.col(text_col))
 
-
-def with_token_counts(
-    docs: DataFrame,
-    counter: str = "whitespace",
-    merges: list[tuple[str, str]] | None = None,
-    text_col: str = "text",
-    out_col: str = "n_tokens",
-) -> DataFrame:
-    """Add the token-count column every budget-driven operator consumes
-    (``pack_sequences``, ``mix_to_token_budget``, ``corpus_stats`` via
-    ``token_count_col``). ``counter="whitespace"`` keeps the Catalyst-only
-    ``\\W+`` count; ``counter="bpe"`` (requires ``merges``) counts real
-    subword tokens through the Arrow UDF."""
-    if counter == "whitespace":
-        from .dedup import tokens_col
-
-        return docs.withColumn(out_col, F.size(tokens_col(text_col)))
-    if counter == "bpe":
-        if merges is None:
-            raise ValueError("counter='bpe' requires a trained merge table")
-        return docs.withColumn(out_col, bpe_token_count(text_col, merges))
-    raise ValueError(f"unknown counter: {counter!r}")

@@ -634,7 +634,7 @@ _NORM_Q = (
     "i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))))"
 )
 
-def _ann_topk_sql(dim: int = 64, bits: int = 10, seed: int = 42, k: int = 10) -> str:
+def _ann_topk_sql() -> str:
     """Deterministic oracle for the RHP-LSH ANN: replicates the exact same
     seeded hyperplanes as literals, computes every vector's b-bit signature
     in SQL, takes candidates within hamming distance 1 of the query's
@@ -644,13 +644,13 @@ def _ann_topk_sql(dim: int = 64, bits: int = 10, seed: int = 42, k: int = 10) ->
     by design and is measured separately by the recall pytest)."""
     from ..operators.similarity import make_hyperplanes
 
-    planes = make_hyperplanes(dim, bits, seed)
+    planes = make_hyperplanes(64, 10)
     rows = []
     for i, h in enumerate(planes):
         arr = "[" + ", ".join(repr(float(v)) for v in h) + "]"
         rows.append(f"({i}, {arr})")
     planes_sql = "(VALUES " + ", ".join(rows) + ") AS p(i, plane)"
-    rng = f"generate_series(1, {dim})"
+    rng = "generate_series(1, 64)"
     dot_sp = f"list_sum(list_transform({rng}, k -> CAST(s.embedding[k] AS DOUBLE) * p.plane[k]))"
     dot_eq = f"list_sum(list_transform({rng}, k -> CAST(e.embedding[k] AS DOUBLE) * CAST(q.qemb[k] AS DOUBLE)))"
     norm_e = f"sqrt(list_sum(list_transform({rng}, k -> CAST(e.embedding[k] AS DOUBLE) * CAST(e.embedding[k] AS DOUBLE))))"
@@ -667,7 +667,7 @@ q AS (SELECT sig AS qsig, embedding AS qemb FROM sigs WHERE vec_id = 0)
 SELECT e.vec_id, round({dot_eq} / ({norm_e} * {norm_q}), 6) AS cosine
 FROM sigs e CROSS JOIN q
 WHERE bit_count(xor(e.sig, q.qsig)) <= 1
-ORDER BY {dot_eq} / ({norm_e} * {norm_q}) DESC, e.vec_id ASC LIMIT {k}
+ORDER BY {dot_eq} / ({norm_e} * {norm_q}) DESC, e.vec_id ASC LIMIT 10
 """
 
 

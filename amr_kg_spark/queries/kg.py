@@ -387,13 +387,13 @@ def _compound_vocab_cte() -> str:
     return f"cv AS (SELECT * FROM {vocab.compound_sql()})"
 
 
-def _duck_char_grams(expr: str, n: int = 3) -> str:
+def _duck_char_grams(expr: str) -> str:
     """DuckDB char-n-gram set, mirroring operators.linking.char_ngrams_expr
     (lowered, whitespace-collapsed, distinct)."""
     c = f"regexp_replace(lower({expr}),'\\s+',' ','g')"
     return (
-        f"list_distinct(list_transform(generate_series(1, greatest(length({c})-{n-1},1)), "
-        f"i -> ({c})[i:i+{n-1}]))"
+        f"list_distinct(list_transform(generate_series(1, greatest(length({c})-2,1)), "
+        f"i -> ({c})[i:i+2]))"
     )
 
 

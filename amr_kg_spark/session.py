@@ -80,12 +80,13 @@ def get_spark(
     return b.getOrCreate()
 
 
-def _parse_byte_string(raw: str, default: int = 134217728) -> int:
+def _parse_byte_string(raw: str) -> int:
     """Parse Spark size confs like ``128m`` / ``1g`` / ``134217728`` /
     ``64kb`` into bytes (Spark's JavaUtils.byteStringAsBytes semantics:
-    binary multipliers, optional trailing ``b``). Falls back to
-    ``default`` on anything unparseable — never strips the unit suffix
-    (``"128m"`` must mean 128 MiB, not 128 bytes)."""
+    binary multipliers, optional trailing ``b``). Falls back to 128 MiB
+    (Spark's ``maxPartitionBytes`` default) on anything unparseable —
+    never strips the unit suffix (``"128m"`` must mean 128 MiB, not 128
+    bytes)."""
     s = str(raw).strip().lower()
     if s.endswith("b"):
         s = s[:-1]
@@ -97,7 +98,7 @@ def _parse_byte_string(raw: str, default: int = 134217728) -> int:
     try:
         return int(s) * mult
     except ValueError:
-        return default
+        return 134217728
 
 
 def _est_scan_partitions(df) -> int | None:
@@ -180,13 +181,13 @@ def stable_checkpoint(df):
     return df.localCheckpoint()
 
 
-def fan_out(df, min_partitions: int | None = None):
+def fan_out(df):
     """Repartition a DataFrame UP to the session's parallelism when its scan
     has fewer partitions than cores — the sandbox's single small parquet
     file otherwise pins every compute-dense projection (shingling, pandas-
     UDF mention detection, signature hashing) to ONE core.
 
-    Deliberately a no-op when the input already has >= min_partitions
+    Deliberately a no-op when the input already has >= defaultParallelism
     splits: at 100 TB the scan has tens of thousands of file splits and a
     blind repartition would be a full-corpus shuffle. The round-robin
     shuffle this performs on the small-file case moves only the raw input
@@ -197,7 +198,7 @@ def fan_out(df, min_partitions: int | None = None):
     ``df.rdd.getNumPartitions()`` probe forced an extra physical-planning
     pass on the driver per call, measurable across a 50-query run.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     est = _est_scan_partitions(df)
     if est is not None and est < target:
         return df.repartition(target)

@@ -4,7 +4,7 @@ The reference reads ISO-8859-1 CSVs with column projection (S1,
 reference src/amr.py:98-103) and TSVs with all-string dtypes (S2,
 src/sources.py:16-26); sinks are TSV dumps (S6/S7, src/amr.py:337-349).
 Here every reader returns a DataFrame with explicit all-string schemas
-(reference semantics: dtype=str) unless a schema is passed, and projection
+(reference semantics: dtype=str), and projection
 is pushed to the scan via select (Catalyst prunes).
 """
 
@@ -22,7 +22,6 @@ def read_csv(
     usecols: list[str] | None = None,
     encoding: str = REFERENCE_ENCODING,
     sep: str = ",",
-    schema: T.StructType | None = None,
 ) -> DataFrame:
     """CSV/TSV scan with projection pushdown; all-string by default
     (reference reads dtype=str everywhere, src/amr.py:392)."""
@@ -33,24 +32,21 @@ def read_csv(
         .option("multiLine", "true")
         .option("escape", '"')
     )
-    if schema is not None:
-        df = reader.schema(schema).csv(path)
-    else:
-        df = reader.csv(path)  # header-inferred names, string-typed columns
+    df = reader.csv(path)  # header-inferred names, string-typed columns
     if usecols:
         df = df.select(*usecols)
     return df
 
 
 def read_tsv(
-    spark: SparkSession, path: str, usecols: list[str] | None = None
+    spark: SparkSession, path: str
 ) -> DataFrame:
-    return read_csv(spark, path, usecols=usecols, sep="\t", encoding="UTF-8")
+    return read_csv(spark, path, sep="\t", encoding="UTF-8")
 
 
-def write_tsv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_tsv(df: DataFrame, path: str) -> None:
     """Triple-dump sink (S6, reference src/amr.py:345-349): header'd TSV."""
-    df.write.mode(mode).option("header", "true").option("sep", "\t").csv(path)
+    df.write.mode("overwrite").option("header", "true").option("sep", "\t").csv(path)
 
 
 def write_bucketed(
@@ -60,7 +56,6 @@ def write_bucketed(
     bucket_col: str,
     sort_col: str | None = None,
     path: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed parquet table (hash-bucketed by ``bucket_col``, optionally
     sorted within buckets). The co-located-join primitive at 100 TB: two
@@ -69,7 +64,7 @@ def write_bucketed(
     time instead of on every join, the right trade for fact tables joined
     repeatedly on the same key (conv_id for transcripts, doc_id for
     documents/embeddings)."""
-    w = df.write.mode(mode).format("parquet").bucketBy(buckets, bucket_col)
+    w = df.write.mode("overwrite").format("parquet").bucketBy(buckets, bucket_col)
     if sort_col:
         w = w.sortBy(sort_col)
     if path:
@@ -209,20 +204,19 @@ def read_jsonl(
     return spark.read.schema(schema).option("mode", "PERMISSIVE").json(path)
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """JSON-lines sink (one object per line, Spark's native json writer)."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
 def write_training_shards(
     seqs: DataFrame,
     path: str,
     seqs_per_file: int = 1024,
-    order_col: str = "seq_id",
 ) -> None:
     """Export materialized training sequences as ORDERED, BOUNDED shards —
     the file layout a data loader actually consumes: rows are
-    range-partitioned and sorted by (pack_bin, ``order_col``), and
+    range-partitioned and sorted by (pack_bin, seq_id), and
     ``maxRecordsPerFile`` caps every parquet file at ``seqs_per_file``
     rows, so a loader can stride files without scanning and a shard's
     contents are contiguous in stream order.
@@ -234,8 +228,8 @@ def write_training_shards(
     data); file NAMES carry task UUIDs as usual — identity lives in the
     manifest, not the name."""
     (
-        seqs.repartitionByRange("pack_bin", order_col)
-        .sortWithinPartitions("pack_bin", order_col)
+        seqs.repartitionByRange("pack_bin", "seq_id")
+        .sortWithinPartitions("pack_bin", "seq_id")
         .write.option("maxRecordsPerFile", seqs_per_file)
         .mode("overwrite")
         .parquet(path)
@@ -245,8 +239,6 @@ def write_training_shards(
 def shard_manifest(
     spark: SparkSession,
     path: str,
-    token_col: str = "n_tokens",
-    order_col: str = "seq_id",
 ) -> DataFrame:
     """One row per shard file of a :func:`write_training_shards` export:
     ``(file, n_rows, n_tokens, min_ord, max_ord)`` — the index a training
@@ -259,7 +251,7 @@ def shard_manifest(
     df = spark.read.parquet(path)
     return df.groupBy(F.input_file_name().alias("file")).agg(
         F.count("*").alias("n_rows"),
-        F.sum(token_col).alias("n_tokens"),
-        F.min(order_col).alias("min_ord"),
-        F.max(order_col).alias("max_ord"),
+        F.sum("n_tokens").alias("n_tokens"),
+        F.min("seq_id").alias("min_ord"),
+        F.max("seq_id").alias("max_ord"),
     )

@@ -259,7 +259,7 @@ def test_repetition_signals(spark):
         ],
         "doc_id long, text string",
     )
-    sig = with_signals(docs, n=3).select(
+    sig = with_signals(docs).select(
         "doc_id", "dup_ngram_ratio", "dup_token_ratio", "top_token_ratio"
     )
     out = {r.doc_id: r for r in sig.collect()}
@@ -668,6 +668,14 @@ def test_dedup_keep_representatives_pairs_validation(spark):
         D.dedup_keep_representatives(docs, pairs=bad)
     kept = {r.doc_id for r in D.dedup_keep_representatives(docs, pairs=pairs).collect()}
     assert kept == {1, 3}
+
+
+def test_dedup_keep_representatives_rejects_other_methods(spark):
+    """The exact prefix-filtered join is the only pair source: any method
+    other than "exact" (or None) raises instead of being ignored."""
+    docs = spark.createDataFrame([(1, "aaa bbb ccc")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="unknown method 'minhash'"):
+        D.dedup_keep_representatives(docs, method="minhash")
 
 
 def test_remove_duplicate_spans_planted(spark):

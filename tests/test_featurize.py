@@ -369,7 +369,7 @@ def test_dsir_score_matches_duckdb(spark):
     w = fit_dsir_weights(target, raw, num_buckets=buckets)
     got = {
         r.doc_id: r.dsir_logweight
-        for r in dsir_score(raw, w, out_col="dsir_logweight").collect()
+        for r in dsir_score(raw, w).collect()
     }
 
     con = duckdb.connect()

@@ -186,7 +186,7 @@ def test_top_token_ratio_bounded_on_long_doc(spark):
         [(1, " ".join(words))], "doc_id long, text string"
     )
     t0 = time.monotonic()
-    row = with_signals(docs, n=3).select(
+    row = with_signals(docs).select(
         "doc_id", "dup_ngram_ratio", "dup_token_ratio", "top_token_ratio"
     ).collect()[0]
     wall = time.monotonic() - t0

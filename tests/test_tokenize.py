@@ -17,7 +17,6 @@ from amr_kg_spark.operators.tokenize import (
     merge_ranks,
     sample_texts,
     train_bpe,
-    with_token_counts,
 )
 from tests.conftest import SF_SMALL
 
@@ -119,11 +118,12 @@ def test_bpe_token_count_udf_matches_python_oracle(spark):
     assert "Exchange" not in plan
 
 
-def test_with_token_counts_threads_into_budget_operators(spark):
+def test_bpe_token_counts_thread_into_budget_operators(spark):
     """The BPE counts flow through the budget-driven operators: packing
     stays a valid budget-respecting packing, corpus_stats reports the BPE
     totals via token_count_col, and mixing honors its budgets in BPE
     tokens (boundary-document rule)."""
+    from amr_kg_spark.operators.text import token_count
     from amr_kg_spark.operators.textprep import (
         corpus_stats,
         mix_to_token_budget,
@@ -132,9 +132,11 @@ def test_with_token_counts_threads_into_budget_operators(spark):
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     merges = train_bpe(_corpus_texts(spark), num_merges=128)
-    toks = with_token_counts(docs, counter="bpe", merges=merges).persist()
+    toks = docs.withColumn(
+        "n_tokens", bpe_token_count("text", merges)
+    ).persist()
     try:
-        ws = with_token_counts(docs, counter="whitespace").collect()
+        ws = token_count(docs).collect()
         bpe = {r.doc_id: r.n_tokens for r in toks.collect()}
         # the words->subwords gap is real and material on this corpus
         ws_total = sum(r.n_tokens for r in ws)
