@@ -6,7 +6,7 @@ DataFrame/Catalyst pipeline:
 
 - conversation reconstruction over an Iceberg-style ``transcripts`` table
   (conv_id, turn_idx, role, text, tool, ts) with window-ordered turn grouping
-- vectorized (Arrow pandas-UDF) dictionary/pattern mention detection for the
+- Catalyst (``regexp_extract_all``) dictionary/pattern mention detection for the
   reference's entity classes (pathogens+strains, compounds/drugs,
   MIC/pChEMBL activity values, institutions)
 - entity linking via one literal alias map with the reference's priority
@@ -18,7 +18,8 @@ DataFrame/Catalyst pipeline:
 - checkpoint-resumable stage runner with per-partition lineage + metrics
 
 All operators are Spark DataFrame ops; Python appears only as Arrow-batched
-pandas UDFs (no per-row Python in any hot path).
+pandas UDFs where the work needs Python (BPE, NFC, media), never on the KG
+path and never per row.
 """
 
 __version__ = "0.1.0"

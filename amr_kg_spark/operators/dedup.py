@@ -307,7 +307,7 @@ def char_ngram_lsh_pairs(
     ``linking.gram_sets``, the same join ``linking.fuzzy_link`` runs)."""
     from .linking import gram_sets
 
-    base = gram_sets(df, id_col, text_col, 3)
+    base = gram_sets(df, id_col, text_col)
     pairs = _prefix_jaccard_join(base, base, 1 - Fraction(str(max_dist)))
     return pairs.select(
         "id_a", "id_b", (F.lit(1.0) - _jaccard_dist()).alias("jaccard")

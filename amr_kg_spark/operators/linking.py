@@ -111,23 +111,27 @@ def link_pathogens(mentions: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 # Fuzzy linking on character n-grams (scale path for dirty mentions)
 # --------------------------------------------------------------------------
-def char_ngrams_expr(col_sql: str, n: int = 3) -> str:
-    """SQL for the distinct character-n-gram set of a (lowered, whitespace-
-    collapsed) string column — a pure Catalyst sliding window, no UDF."""
+GRAM_N = 3  # character n-gram width of every name join
+
+
+def char_ngrams_expr(col_sql: str) -> str:
+    """SQL for the distinct character-``GRAM_N``-gram set of a (lowered,
+    whitespace-collapsed) string column — a pure Catalyst sliding window,
+    no UDF."""
     c = f"regexp_replace(lower({col_sql}), '\\\\s+', ' ')"
     return (
-        f"array_distinct(transform(sequence(1, greatest(length({c}) - {n - 1}, 1)), "
-        f"i -> substring({c}, i, {n})))"
+        f"array_distinct(transform(sequence(1, greatest(length({c}) - {GRAM_N - 1}, 1)), "
+        f"i -> substring({c}, i, {GRAM_N})))"
     )
 
 
-def gram_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+def gram_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """``(id, hs)``: each row's char-n-gram set, sorted (the join's global
     order is plain string order; no hashing, so verification is
     collision-free), as the exact Jaccard join takes it."""
     return df.select(
         F.col(id_col).alias("id"),
-        F.sort_array(F.expr(char_ngrams_expr(text_col, n))).alias("hs"),
+        F.sort_array(F.expr(char_ngrams_expr(text_col))).alias("hs"),
     ).filter(F.size("hs") > 0)
 
 
@@ -146,10 +150,8 @@ def fuzzy_link(
     ``threshold`` (tested as Jaccard >= 1 - ``Fraction(str(threshold))``,
     so a pair exactly at the threshold is kept).
     """
-    m = gram_sets(mentions.select("mention").distinct(), "mention", "mention", 3)
-    v = gram_sets(
-        vocab_df.select("pref_name").distinct(), "pref_name", "pref_name", 3
-    )
+    m = gram_sets(mentions.select("mention").distinct(), "mention", "mention")
+    v = gram_sets(vocab_df.select("pref_name").distinct(), "pref_name", "pref_name")
     pairs = _prefix_jaccard_join(m, v, 1 - Fraction(str(threshold)))
     return pairs.select(
         F.col("id_a").alias("mention"),

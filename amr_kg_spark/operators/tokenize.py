@@ -17,8 +17,8 @@ nothing here derives from any non-public code):
   ``bpe()`` loop), pure Python, used inside the UDF batch-wise.
 - :func:`bpe_token_count` — a batched Arrow ``pandas_udf`` column
   expression: one ArrowEvalPython stage, zero shuffles, never per-row
-  Python (plan-asserted in tests). This is the sanctioned slow path —
-  the same shape as ``mentions.py``'s detector UDF. Written into
+  Python (plan-asserted in tests). This is the sanctioned slow path for
+  work that needs Python. Written into
   ``n_tokens``, it makes ``pack_sequences`` / ``mix_to_token_budget`` /
   ``corpus_stats`` (which all consume a token-count column) budget in
   real subword tokens.

@@ -125,7 +125,7 @@ def build_nodes(resolved: DataFrame) -> DataFrame:
 
     Both endpoints come out of ONE pass (explode of a two-struct array):
     the former subj/obj union evaluated the entire upstream pipeline —
-    transcripts derivation + the Arrow mention UDF — once per branch
+    transcripts derivation + mention detection — once per branch
     (round-9; same multiset of rows, so the distinct output is
     identical: curie is functionally dependent on (label, name))."""
     both = resolved.select(

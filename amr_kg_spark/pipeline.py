@@ -4,7 +4,7 @@ tables, checkpoint-resumable with per-partition lineage (north_rule).
 Stage graph (each stage a StageRunner checkpoint):
 
   transcripts            (input; in production an Iceberg table)
-    -> mentions          detect + explode (Arrow pandas UDF, zero shuffle)
+    -> mentions          detect + explode (regexp_extract_all, zero shuffle)
     -> pairs             per-turn co-occurrence (higher-order fns, zero shuffle)
     -> resolved          map-literal linking (strain aliases map to species)
     -> nodes / edges / triples   (dedup shuffles, deterministic ids)

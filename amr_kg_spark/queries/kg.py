@@ -1,6 +1,6 @@
 """KG-construction queries + independent DuckDB oracles.
 
-The Spark side runs the real engine (pandas-UDF mention detection,
+The Spark side runs the real engine (regexp_extract_all mention detection,
 map-literal linking, higher-order-function pair building). The oracle side
 recomputes the expected answer in pure SQL from the *planting arithmetic*
 of :mod:`amr_kg_spark.transcripts` — a genuinely independent derivation, so

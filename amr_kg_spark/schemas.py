@@ -23,16 +23,6 @@ TRANSCRIPTS = T.StructType(
     ]
 )
 
-# --- extraction output ----------------------------------------------------
-MENTION = T.StructType(
-    [
-        T.StructField("entity_class", T.StringType(), False),
-        T.StructField("mention", T.StringType(), False),
-        T.StructField("start", T.IntegerType(), True),
-    ]
-)
-MENTIONS_ARRAY = T.ArrayType(MENTION)
-
 # --- graph tables ---------------------------------------------------------
 NODES = T.StructType(
     [

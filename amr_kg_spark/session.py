@@ -184,8 +184,8 @@ def stable_checkpoint(df):
 def fan_out(df):
     """Repartition a DataFrame UP to the session's parallelism when its scan
     has fewer partitions than cores — the sandbox's single small parquet
-    file otherwise pins every compute-dense projection (shingling, pandas-
-    UDF mention detection, signature hashing) to ONE core.
+    file otherwise pins every compute-dense projection (shingling, regex
+    mention detection, signature hashing) to ONE core.
 
     Deliberately a no-op when the input already has >= defaultParallelism
     splits: at 100 TB the scan has tens of thousands of file splits and a

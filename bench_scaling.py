@@ -5,8 +5,8 @@
   least-squares slope of min wall over four input sizes, which cancels the
   per-job fixed costs (driver scheduling, Python worker start-up, codegen)
   that dominate a sandbox-size wall; the fit's r2 flags a noisy window.
-- The control: a fixed-reference job (the flagship triple chain on
-  ``detect_mentions_jvm``, zero Python workers) at a pinned size and core
+- The control: a fixed-reference job (the flagship triple chain,
+  zero Python workers) at a pinned size and core
   count, each run in a fresh pinned JVM. Median control wall over the
   calm baseline is the window's box price.
 
@@ -50,7 +50,7 @@ def _fit(sizes: list[int], mins: list[float]) -> tuple[float, float]:
 
 def _plan(spark, n_turns: int):
     from amr_kg_spark.fixtures import synth_transcripts
-    from amr_kg_spark.operators.mentions import detect_mentions_jvm
+    from amr_kg_spark.operators.mentions import detect_mentions
     from amr_kg_spark.operators.triples import (
         build_triples,
         cooccurrence_pairs,
@@ -58,7 +58,7 @@ def _plan(spark, n_turns: int):
     )
 
     t = synth_transcripts(spark, n_turns=n_turns, n_convs=1000, hot_frac=0.1)
-    return build_triples(resolve_pairs(cooccurrence_pairs(detect_mentions_jvm(t))))
+    return build_triples(resolve_pairs(cooccurrence_pairs(detect_mentions(t))))
 
 
 def child_one(cores: int, n_turns: int) -> None:

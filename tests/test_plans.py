@@ -87,27 +87,31 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
 
 
 def test_kg_pipeline_has_no_python_row_udfs(spark):
-    """The KG path may use Arrow pandas UDFs (ArrowEvalPython) but never a
-    row-at-a-time BatchEvalPython."""
+    """The KG path runs no Python at all: no row-at-a-time
+    BatchEvalPython, no Arrow pandas UDF, no mapInPandas."""
     from amr_kg_spark.operators.triples import extract_triples
     from amr_kg_spark.transcripts import derive_transcripts
 
     plan = _plan(extract_triples(derive_transcripts(spark, SF_SMALL)))
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" in plan
+    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        assert node not in plan, plan
 
 
-@pytest.mark.parametrize("query", ["kg_mentions", "kg_triples"])
+@pytest.mark.parametrize(
+    "query", ["kg_mentions", "kg_triples", "kg_link_compounds", "kg_link_pathogens"]
+)
 def test_mention_udf_runs_once_above_fan_out(spark, query):
-    """The mention UDF must appear exactly once in the physical plan, above
-    the round-robin fan-out exchange: a filter pushed below it would make
-    the optimizer clone the UDF onto the un-fanned (serial) scan side."""
+    """Every ``regexp_extract_all`` of the mention detector sits in ONE
+    node of the physical plan, above the round-robin fan-out exchange: a
+    filter pushed below it would make the optimizer clone the regex scan
+    onto the un-fanned (serial) scan side."""
     from amr_kg_spark.queries.kg import QUERIES
 
     plan = _plan(QUERIES[query](spark, SF_SMALL))
     tree = plan.split("\n\n", 1)[0].splitlines()
-    udfs = [i for i, line in enumerate(tree) if "ArrowEvalPython" in line]
-    assert len(udfs) == 1, plan
+    ids = set(re.findall(r"^\((\d+)\) .*\n(?:.+\n)*?.*regexp_extract_all", plan, re.M))
+    assert len(ids) == 1, plan
+    (node,) = ids
     fan_out = re.search(
         r"^\((\d+)\) Exchange\n.*\n.*RoundRobinPartitioning", plan, re.M
     )
@@ -117,7 +121,7 @@ def test_mention_udf_runs_once_above_fan_out(spark, query):
         m = re.search(r"[+:]- ", line)
         return m.start() if m else -1
 
-    top = udfs[0]
+    (top,) = [i for i, line in enumerate(tree) if line.endswith(f" ({node})")]
     subtree = []
     for line in tree[top + 1:]:
         if depth(line) <= depth(tree[top]):

@@ -1,10 +1,9 @@
 """Property-based tests (hypothesis) for the detector semantics and the
-reconstruction invariant. Spark-touching properties keep max_examples low;
-pure-Python detector properties run broadly."""
+reconstruction invariant. Spark-job properties keep max_examples low; the
+detector properties run broadly on the session JVM's regex engine (no
+Spark job per example)."""
 
 from __future__ import annotations
-
-import re
 
 from hypothesis import given, settings, strategies as st
 
@@ -19,20 +18,19 @@ TERMS = st.lists(
 
 @settings(max_examples=200, deadline=None)
 @given(terms=TERMS, filler=st.lists(WORD, min_size=0, max_size=10))
-def test_planted_terms_are_always_found(terms, filler):
+def test_planted_terms_are_always_found(java_findall, terms, filler):
     """Any vocabulary term planted with space boundaries is detected."""
     dets = compile_detectors({"x": terms})
     text = " ".join(filler[: len(filler) // 2] + [terms[0]] + filler[len(filler) // 2:])
-    found = [m.group(0) for m in dets["x"].finditer(text)]
-    assert terms[0] in found
+    assert terms[0] in java_findall(dets["x"], text)
 
 
 @settings(max_examples=200, deadline=None)
 @given(terms=TERMS, text=st.text(alphabet="abcdefghij ", max_size=60))
-def test_no_false_positives_on_disjoint_alphabet(terms, text):
+def test_no_false_positives_on_disjoint_alphabet(java_findall, terms, text):
     """Lowercase-only text can never match uppercase-only vocabulary."""
     dets = compile_detectors({"x": terms})
-    assert list(dets["x"].finditer(text)) == []
+    assert java_findall(dets["x"], text) == []
 
 
 @settings(max_examples=100, deadline=None)
@@ -40,20 +38,19 @@ def test_no_false_positives_on_disjoint_alphabet(terms, text):
     prefix=st.text(alphabet="ABC", min_size=2, max_size=4),
     suffix=st.text(alphabet="DEF", min_size=1, max_size=3),
 )
-def test_longest_match_wins_property(prefix, suffix):
+def test_longest_match_wins_property(java_findall, prefix, suffix):
     """When one term extends another, the longer term is the match."""
     short, long_ = prefix, f"{prefix} {suffix}"
     dets = compile_detectors({"x": [short, long_]})
-    found = [m.group(0) for m in dets["x"].finditer(f"zz {long_} zz")]
-    assert found == [long_]
+    assert java_findall(dets["x"], f"zz {long_} zz") == [long_]
 
 
 @settings(max_examples=200, deadline=None)
 @given(vals=st.lists(st.floats(min_value=0.1, max_value=999.9), min_size=1, max_size=4))
-def test_activity_values_roundtrip(vals):
+def test_activity_values_roundtrip(java_findall, vals):
     dets = compile_detectors({})
     text = " and ".join(f"{round(v, 1)} nM" for v in vals)
-    found = [m.group(0) for m in dets["activity"].finditer(text)]
+    found = java_findall(dets["activity"], text)
     assert found == [f"{round(v, 1)} nM" for v in vals]
 
 
