@@ -27,8 +27,9 @@ Stage order (each a library operator, composed, nothing bespoke):
       decontamination of the training docs: the train/val-leakage guard)
   6.7 fim_transform         — optional, training side only
   7. pack_sequences         — budget-token streams (optionally shuffled);
-      --materialize assembles actual sequences (BPE token ids with
-      --tokenizer bpe: materialize_token_ids, encode-then-slice)
+      --materialize assembles actual sequences (materialize_sequences:
+      word tokens, or with --tokenizer bpe the BPE token ids that
+      bpe_token_ids computed once at stage 6, encode-then-slice)
 
 Scale notes: stages 1-3 fuse into ONE scan-side projection (no exchange
 until dedup); dedup/decontam shuffle only hashes; sampling is a
@@ -181,7 +182,8 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     )
     ap.add_argument("--bpe-merges", type=int, default=256)
     ap.add_argument("--bpe-sample", type=int, default=2000,
-                    help="lowest-id docs the BPE trainer reads (driver-side)")
+                    help="docs the BPE trainer reads (driver-side): the "
+                    "ones with the lowest xxhash64(doc_id)")
     ap.add_argument(
         "--max-per-source", type=int, default=None, metavar="Q",
         help="cap each source/domain at Q documents (largest cleaned "
@@ -527,8 +529,11 @@ def prep_corpus(spark, docs, args, stage):
         kept = stage("after_sample", TP.stratified_sample(kept, args.sample))
     # token-count basis for mixing + packing: whitespace (Catalyst) or a
     # BPE merge table trained driver-side on a deterministic sample of the
-    # SURVIVING corpus (kept is materialized, so the sample reads it)
-    merges = vocab = None
+    # SURVIVING corpus (kept is materialized, so the sample reads it).
+    # Each document is BPE-encoded once: n_tokens is the size of its ids,
+    # and with --materialize the ids ride through the stage boundaries to
+    # the packer. Without it the ids are dropped at once, so Catalyst
+    # collapses the count to size(udf(text)) and no stage stores arrays.
     if args.tokenizer == "bpe":
         sample = TK.sample_texts(kept, n=args.bpe_sample)
         merges = TK.train_bpe(sample, num_merges=args.bpe_merges)
@@ -536,7 +541,11 @@ def prep_corpus(spark, docs, args, stage):
         vocab = TK.build_vocab(merges, sample, specials=specials)
         counts["bpe_merges_trained"] = len(merges)
         counts["bpe_vocab_size"] = len(vocab)
-        toks = kept.withColumn("n_tokens", TK.bpe_token_count("text", merges))
+        toks = kept.withColumn(
+            "token_ids", TK.bpe_token_ids("text", merges, vocab)
+        ).withColumn("n_tokens", F.size("token_ids"))
+        if not args.materialize:
+            toks = toks.drop("token_ids")
     else:
         toks = kept.withColumn("n_tokens", F.size(D.tokens_col()))
     if args.mix:
@@ -589,28 +598,24 @@ def prep_corpus(spark, docs, args, stage):
 
     # 7: pack into training sequences — coordinates by default, or the
     # assembled budget-token sequences themselves with --materialize
-    # (word-token strings, or real BPE token ids when --tokenizer bpe)
+    # (word-token strings, or the stage-6 BPE token ids when --tokenizer
+    # bpe, encode-then-slice)
     def pack(side):
-        if args.materialize and args.tokenizer == "bpe":
-            return TP.materialize_token_ids(
-                side.drop("n_tokens"),
-                budget=args.budget,
-                merges=merges,
-                vocab=vocab,
-                shuffle_seed=args.shuffle_seed,
-                eod_id=vocab["<eod>"] if args.eod else None,
-                with_boundaries=args.boundaries,
+        if not args.materialize:
+            return TP.pack_sequences(
+                side, budget=args.budget, shuffle_seed=args.shuffle_seed
             )
-        if args.materialize:
-            return TP.materialize_sequences(
-                side.drop("n_tokens"),
-                budget=args.budget,
-                token_col=None,
-                shuffle_seed=args.shuffle_seed,
-                with_boundaries=args.boundaries,
+        tokens = None
+        if args.tokenizer == "bpe":
+            tokens = TK.with_eod(
+                F.col("token_ids"), vocab["<eod>"] if args.eod else None
             )
-        return TP.pack_sequences(
-            side, budget=args.budget, shuffle_seed=args.shuffle_seed
+        return TP.materialize_sequences(
+            side,
+            budget=args.budget,
+            tokens=tokens,
+            shuffle_seed=args.shuffle_seed,
+            with_boundaries=args.boundaries,
         )
 
     return {name: pack(side) for name, side in sides.items()}, counts

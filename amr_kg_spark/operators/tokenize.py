@@ -1,4 +1,4 @@
-"""Real-subword (BPE) token counting for the budget-driven operators.
+"""Real-subword (BPE) tokenization for the budget-driven operators.
 
 Every packing/mixing/stats operator in this engine budgets in tokens; the
 default counter is ``\\W+`` word splitting (``dedup.tokens_col``), which
@@ -15,13 +15,15 @@ nothing here derives from any non-public code):
   broadcast closure).
 - :func:`bpe_encode` — greedy lowest-rank merge encoding (the GPT-2
   ``bpe()`` loop), pure Python, used inside the UDF batch-wise.
-- :func:`bpe_token_count` — a batched Arrow ``pandas_udf`` column
-  expression: one ArrowEvalPython stage, zero shuffles, never per-row
+- :func:`bpe_token_ids` — the one encoder: a batched Arrow
+  ``pandas_udf`` column expression giving each text its ``array<int>``
+  token ids: one ArrowEvalPython stage, zero shuffles, never per-row
   Python (plan-asserted in tests). This is the sanctioned slow path for
-  work that needs Python. Written into
-  ``n_tokens``, it makes ``pack_sequences`` / ``mix_to_token_budget`` /
-  ``corpus_stats`` (which all consume a token-count column) budget in
-  real subword tokens.
+  work that needs Python. Its ``size`` written into ``n_tokens`` makes
+  ``pack_sequences`` / ``mix_to_token_budget`` / ``corpus_stats`` (which
+  all consume a token-count column) budget in real subword tokens, and
+  the same ids are what ``materialize_sequences`` packs, so a document
+  is encoded once for both.
 
 Correctness: greedy-by-rank encoding is equivalent to applying the merge
 list sequentially in rank order; the tests exploit that as an
@@ -30,10 +32,11 @@ text), plus a driver-side value check of the UDF against direct Python
 encoding.
 
 Scale shape: training is a driver-side pass over a bounded sample
-(deterministic: lowest ids), like fitting any other small model (IVF's
-KMeans fits on a sample the same way). Counting is embarrassingly
-parallel: the merge table ships in the UDF closure, batches arrive
-via Arrow, and the count is a projection — no exchange, no state. At
+(deterministic: lowest ``xxhash64(doc_id)``), like fitting any other
+small model (IVF's KMeans fits on a sample the same way). Encoding is
+embarrassingly parallel: the merge table ships in the UDF closure,
+batches arrive via Arrow, and the encode is a projection — no exchange,
+no state. At
 100 TB you'd train the merge table once and pass it to every job.
 
 No reference analogue (the reference pipeline has no tokenizer;
@@ -288,13 +291,13 @@ def bpe_token_ids(
     vocab: dict[str, int],
 ) -> Column:
     """Column expression encoding each text to its ``array<int>`` BPE
-    token-id sequence via ONE batched Arrow ``pandas_udf`` stage (same
-    shipping model as :func:`bpe_token_count`: merge table + vocab ride
-    the closure — ``num_merges`` pairs and ``|vocab|`` strings, both
-    tiny). NULL text encodes to NULL. A chunk memo rides the closure too:
-    unpickled with it once per task, it reuses encodings across the
-    task's whole partition stream, not just one Arrow batch (see
-    ``_CHUNK_CACHE_CAP``)."""
+    token-id sequence via ONE batched Arrow ``pandas_udf`` stage — the
+    engine's only BPE encoder; token counts are its ``size``. The merge
+    table + vocab ride the closure (``num_merges`` pairs and ``|vocab|``
+    strings, both tiny). NULL text encodes to NULL. A chunk memo rides
+    the closure too: unpickled with it once per task, it reuses encodings
+    across the task's whole partition stream, not just one Arrow batch
+    (see ``_CHUNK_CACHE_CAP``)."""
     from pyspark.sql.functions import pandas_udf
 
     ranks = merge_ranks(merges)
@@ -311,25 +314,12 @@ def bpe_token_ids(
     return _encode(F.col(text_col))
 
 
-def bpe_token_count(
-    text_col: str, merges: list[tuple[str, str]]
-) -> Column:
-    """Column expression counting real BPE tokens per text via a batched
-    Arrow ``pandas_udf``. The merge table rides the UDF closure (tiny:
-    ``num_merges`` string pairs — same shipping model as the broadcast
-    vocab in the mention detector); NULL text counts NULL."""
-    from pyspark.sql.functions import pandas_udf
-
-    ranks = merge_ranks(merges)
-    cache: dict[str, tuple[str, ...]] = {}
-
-    @pandas_udf("int")
-    def _count(s):
-        return s.map(
-            lambda x: len(bpe_encode(x, ranks, cache))
-            if x is not None
-            else None
-        )
-
-    return _count(F.col(text_col))
-
+def with_eod(ids: Column, eod_id: int | None) -> Column:
+    """``ids`` with the end-of-document delimiter ``eod_id`` appended
+    (unchanged when it is None). Appended before packing, so it counts
+    against the budget and sequence boundaries stay consistent. Reserve
+    the id via ``build_vocab(specials=(..., "<eod>"))`` so no real token
+    collides with it."""
+    if eod_id is None:
+        return ids
+    return F.concat(ids, F.array(F.lit(eod_id).cast("int")))

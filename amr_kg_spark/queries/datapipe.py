@@ -1222,10 +1222,10 @@ SELECT 'split' AS variant, doc_id,
        CAST(NULL AS BIGINT) AS v3
 FROM ({splhashed})
 """
-    # pieces: the materializers' slice arithmetic (per-document covering
+    # pieces: the assembler's slice arithmetic (per-document covering
     # sequences: seq_id, 1-based doc slice start, in-sequence offset,
     # piece length) replayed from the same binned+cumsum CTE as pack —
-    # value-checks _assemble_stream's decomposition end-to-end
+    # value-checks materialize_sequences' decomposition end-to-end
     B = TP_PACK_BUDGET
     pieces = f"""
 SELECT 'pieces' AS variant, doc_id,

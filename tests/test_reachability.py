@@ -95,7 +95,6 @@ KEEP_PARAMS = {
     "normalize_text.nfc": "the NFC Arrow path (test_textprep)",
     "mix_to_token_budget.shards": "the hot-stratum sharded mix (test_textprep)",
     "corpus_stats.token_count_col": "stats over BPE token counts (test_tokenize)",
-    "materialize_sequences.num_bins": "packing bins at fixture size (test_sources, test_textprep)",
     "train_bpe.min_pair_count": "the merge-count floor against the rescan oracle (test_tokenize)",
 }
 

@@ -202,7 +202,7 @@ def test_write_training_shards_and_manifest(spark, tmp_path):
     docs = normalize_text(
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     ).select("doc_id", F.col("text_norm").alias("text"))
-    seqs = materialize_sequences(docs, budget=64, token_col=None, num_bins=4)
+    seqs = materialize_sequences(docs, budget=64, num_bins=4)
     out = str(tmp_path / "shards")
     write_training_shards(seqs, out, seqs_per_file=8)
 

@@ -953,15 +953,16 @@ def test_materialize_sequences_reconstructs_streams(spark):
     B, BINS = 64, 4
     docs = normalize_text(
         spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    ).select("doc_id", F.col("text_norm").alias("text")).withColumn(
-        "n_tokens", F.size(F.split("text", " "))
-    )
+    ).select("doc_id", F.col("text_norm").alias("text"))
     out = materialize_sequences(docs, budget=B, num_bins=BINS)
     rows = out.collect()
     assert rows
 
     # python oracle: rebuild each bin's stream from the packing order
-    packed = pack_sequences(docs, budget=B, num_bins=BINS).collect()
+    packed = pack_sequences(
+        docs.withColumn("n_tokens", F.size(F.split("text", " "))),
+        budget=B, num_bins=BINS,
+    ).collect()
     streams: dict = {}
     for r in sorted(packed, key=lambda r: (r.pack_bin, r.doc_id)):
         streams.setdefault(r.pack_bin, []).extend(r.text.split(" "))
@@ -1052,15 +1053,14 @@ def test_materialize_sequences_shuffled_epoch_order(spark):
     B, BINS, SEED = 64, 4, 9
     docs = normalize_text(
         spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    ).select("doc_id", F.col("text_norm").alias("text")).withColumn(
-        "n_tokens", F.size(F.split("text", " "))
-    )
+    ).select("doc_id", F.col("text_norm").alias("text"))
     out = materialize_sequences(
         docs, budget=B, num_bins=BINS, shuffle_seed=SEED
     )
     rows = out.collect()
     packed = pack_sequences(
-        docs, budget=B, num_bins=BINS, shuffle_seed=SEED
+        docs.withColumn("n_tokens", F.size(F.split("text", " "))),
+        budget=B, num_bins=BINS, shuffle_seed=SEED,
     ).collect()
     streams: dict = {}
     for r in sorted(

@@ -1,7 +1,7 @@
-"""BPE token counting (round-5 verdict item #2): from-scratch merge-table
+"""BPE tokenization (round-5 verdict item #2): from-scratch merge-table
 training, greedy encoding vs an INDEPENDENT sequential-merge oracle,
 Arrow-UDF value parity against driver-side Python, plan shape, and the
-threading into pack/mix/stats."""
+threading of its token counts into pack/mix/stats."""
 
 from __future__ import annotations
 
@@ -13,7 +13,9 @@ from amr_kg_spark.operators.tokenize import (
     _chunk_symbols,
     _pretokenize,
     bpe_encode,
-    bpe_token_count,
+    bpe_encode_ids,
+    bpe_token_ids,
+    build_vocab,
     merge_ranks,
     sample_texts,
     train_bpe,
@@ -96,19 +98,24 @@ def test_bpe_encode_lossless(spark):
         assert rebuilt == t
 
 
-def test_bpe_token_count_udf_matches_python_oracle(spark):
-    """The Arrow pandas_udf count equals direct driver-side encoding for
-    EVERY document, and the plan is one ArrowEvalPython stage — no
-    per-row Python, no exchange (the mention-detector contract)."""
+def test_bpe_token_ids_udf_matches_python_oracle(spark):
+    """The one Arrow pandas_udf encoder equals direct driver-side encoding
+    for EVERY document — its ids are ``bpe_encode_ids`` and its ``size``
+    (the token count the budget operators read) is ``len(bpe_encode)`` —
+    and the plan is one ArrowEvalPython stage: no per-row Python, no
+    exchange."""
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    merges = train_bpe(_corpus_texts(spark), num_merges=128)
+    texts = _corpus_texts(spark)
+    merges = train_bpe(texts, num_merges=128)
+    vocab = build_vocab(merges, texts)
     ranks = merge_ranks(merges)
     out = docs.select(
-        "doc_id", "text", bpe_token_count("text", merges).alias("n_bpe")
-    )
+        "doc_id", "text", bpe_token_ids("text", merges, vocab).alias("ids")
+    ).withColumn("n_bpe", F.size("ids"))
     rows = out.collect()
     assert len(rows) > 0
     for r in rows:
+        assert r.ids == bpe_encode_ids(r.text, ranks, vocab), r.doc_id
         assert r.n_bpe == len(bpe_encode(r.text, ranks)), r.doc_id
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
@@ -131,9 +138,11 @@ def test_bpe_token_counts_thread_into_budget_operators(spark):
     )
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    merges = train_bpe(_corpus_texts(spark), num_merges=128)
+    texts = _corpus_texts(spark)
+    merges = train_bpe(texts, num_merges=128)
     toks = docs.withColumn(
-        "n_tokens", bpe_token_count("text", merges)
+        "n_tokens",
+        F.size(bpe_token_ids("text", merges, build_vocab(merges, texts))),
     ).persist()
     try:
         ws = token_count(docs).collect()
@@ -259,16 +268,15 @@ def test_materialize_token_ids_eod_and_boundaries(spark):
     document's encoding BEFORE packing (it counts against the budget),
     and with_boundaries emits seq_doc_starts — the sorted in-sequence
     start offset of every document segment (the block-diagonal
-    attention-mask boundaries). Oracle: a driver-side walk of each bin's
+    attention-mask boundaries) — for the delimited ids the corpus chain
+    passes the assembler. Oracle: a driver-side walk of each bin's
     delimited id stream."""
     from amr_kg_spark.operators.textprep import (
+        materialize_sequences,
         materialize_token_ids,
         normalize_text,
     )
-    from amr_kg_spark.operators.tokenize import (
-        bpe_encode_ids,
-        build_vocab,
-    )
+    from amr_kg_spark.operators.tokenize import with_eod
 
     B, BINS = 48, 4
     texts = _corpus_texts(spark, n=200)
@@ -281,9 +289,10 @@ def test_materialize_token_ids_eod_and_boundaries(spark):
     docs = normalize_text(
         spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     ).select("doc_id", F.col("text_norm").alias("text"))
-    out = materialize_token_ids(
-        docs, budget=B, merges=merges, vocab=vocab, num_bins=BINS,
-        eod_id=eod, with_boundaries=True,
+    out = materialize_sequences(
+        docs, budget=B,
+        tokens=with_eod(bpe_token_ids("text", merges, vocab), eod),
+        num_bins=BINS, with_boundaries=True,
     )
     rows = out.collect()
     assert rows and "seq_doc_starts" in out.columns
@@ -325,11 +334,17 @@ def test_materialize_token_ids_eod_and_boundaries(spark):
         for s in r.seq_doc_starts[1:]:
             assert r.seq_tokens[s - 1] == eod, (r.seq_id, s)
     assert got_chunks == exp_chunks
-    # default output schema is unchanged (no boundary column)
+    # materialize_token_ids packs the same delimited stream; its output
+    # has no boundary column
     plain = materialize_token_ids(
-        docs, budget=B, merges=merges, vocab=vocab, num_bins=BINS
+        docs, budget=B, merges=merges, vocab=vocab, num_bins=BINS,
+        eod_id=eod,
     )
     assert "seq_doc_starts" not in plain.columns
+    plain_chunks: dict = {}
+    for r in sorted(plain.collect(), key=lambda r: (r.pack_bin, r.seq_id)):
+        plain_chunks.setdefault(r.pack_bin, []).append(list(r.seq_tokens))
+    assert plain_chunks == exp_chunks
 
 
 def test_build_vocab_specials_reserved():
